@@ -45,22 +45,19 @@ def replay_changelog(
 
     hot_keys = None
     if salted == "auto":
-        # one sampled pass; the (≤1000-entry) hot list compiles into the
-        # collapse plan as a literal IN-set — no per-batch join. Salting is
-        # only ENGAGED when the hottest key's estimated per-batch volume
-        # would dominate a reducer task (skew.should_salt): the two-phase
-        # plan costs a second full exchange per batch, which a mildly-hot
-        # log never earns back (measured r6: +0.3-0.4s per 567k-row batch
-        # for a 0.5%-share hottest key).
-        from pentaho_kettle_spark.cdc.skew import hot_key_counts, should_salt
+        # one sampled pass over the whole log. Salting is only ENGAGED when
+        # the hottest key's estimated per-batch volume would dominate a
+        # reducer task (skew.should_salt): the two-phase plan costs a second
+        # full exchange per batch, which a mildly-hot log never earns back
+        # (measured r6: +0.3-0.4s per 567k-row batch for a 0.5%-share
+        # hottest key).
+        from pentaho_kettle_spark.cdc.skew import skewed_keys
 
-        rows, sampled_total = hot_key_counts(changelog, key_cols=table.key_cols)
-        salted = should_salt(
-            rows, sampled_total, n_batches=n_batches,
+        hot_keys = skewed_keys(
+            changelog, table.key_cols, n_batches=n_batches,
             n_partitions=spark.sparkContext.defaultParallelism,
         )
-        if salted:
-            hot_keys = [tuple(r[k] for k in table.key_cols) for r in rows]
+        salted = hot_keys is not None
 
     if n_batches <= 1:
         bounds = None
@@ -226,53 +223,38 @@ def apply_batch(
     """The per-micro-batch stage chain (shared by batch replay + streaming):
     schema-evolve table → conform batch → LWW collapse → salted MERGE.
 
-    MoR tables and steady-state CoW tables take the FUSED plan
-    (`lww_collapse_bucketed`): the collapse aggregate runs directly on the
-    table's bucket partitioning, so a MoR batch is one exchange (two when
-    salting is active) with `_write_buckets` appending without re-staging,
-    and a CoW merge joins co-partitioned on `_bucket` with its output
-    already write-aligned. Only the CoW BOOTSTRAP (empty table, join-free
-    fast path) keeps the key-partitioned collapse, whose map-side partial
-    aggregation wins when there is nothing to join against.
+    MoR tables and steady-state CoW tables take the bucket-fused collapse:
+    the collapse aggregate runs directly on the table's bucket partitioning,
+    so a MoR batch is one exchange (two when salting is active) with
+    `_write_buckets` appending without re-staging, and a CoW merge joins
+    co-partitioned on `_bucket` with its output already write-aligned. Only
+    the CoW BOOTSTRAP (empty table, join-free fast path) keeps the
+    key-partitioned collapse, whose map-side partial aggregation wins when
+    there is nothing to join against.
     """
     if batch_id in table.committed_batches():
         return {"skipped_duplicate_batch": batch_id}
     batch = evolve_and_conform(table, batch, rename_hints)
     m = table.current_manifest()
     table_empty = not any((m or {}).get("files", {}).values())
-    if table.write_mode == "mor" or not table_empty:
-        # fused bucket-aligned collapse (r6 extends it to steady-state CoW;
-        # MoR-only before): the collapse aggregate runs on the table's
-        # bucket partitioning, so MoR appends with zero extra exchange and
-        # the CoW merge join co-partitions on `_bucket` instead of
-        # re-shuffling the batch by key AND re-staging the merged output
-        # (parquet_snapshot._merge_apply_cow joins bucket-aligned when
-        # `_bucket` is present; interleaved A/B r6: 10.7-11.9s → 5.4-7.1s
-        # for a 1M-row batch merged into a 1.3M-row table at 32 cores).
-        from pentaho_kettle_spark.cdc.lww import lww_collapse_bucketed
+    # bucket-fused (r6 extends it to steady-state CoW; MoR-only before): MoR
+    # appends with zero extra exchange and the CoW merge join co-partitions
+    # on `_bucket` instead of re-shuffling the batch by key AND re-staging
+    # the merged output (interleaved A/B r6: 10.7-11.9s → 5.4-7.1s for a
+    # 1M-row batch merged into a 1.3M-row table at 32 cores). The CoW
+    # bootstrap's key-partitioned collapse measured ~1s faster per 2M-event
+    # load than the one-exchange complete aggregate (interleaved A/B r6:
+    # 2.5-3.0s vs 3.6-4.0s). Resolved at call time, so a wrapped
+    # `lww_collapse` sees every batch.
+    from pentaho_kettle_spark.cdc.lww import lww_collapse
 
-        collapsed = lww_collapse_bucketed(
-            batch, key_cols=table.key_cols, lww_col=table.lww_col,
-            n_buckets=table.n_buckets, bucket_key=table.key_cols[0],
-            n_salts=n_salts if salted else 0, hot_keys=hot_keys,
-        )
-    else:
-        # CoW BOOTSTRAP (empty table): the merge takes the join-free fast
-        # path, so bucket alignment buys nothing — and the key-partitioned
-        # collapse keeps map-side partial aggregation, which measured
-        # ~1s faster per 2M-event load than the one-exchange complete
-        # aggregate (interleaved A/B r6: 2.5-3.0s vs 3.6-4.0s).
-        from pentaho_kettle_spark.cdc.lww import lww_collapse, lww_collapse_salted
-
-        if salted:
-            collapsed = lww_collapse_salted(
-                batch, key_cols=table.key_cols, lww_col=table.lww_col,
-                n_salts=n_salts, hot_keys=hot_keys,
-            )
-        else:
-            collapsed = lww_collapse(
-                batch, key_cols=table.key_cols, lww_col=table.lww_col
-            )
+    fused = table.write_mode == "mor" or not table_empty
+    collapsed = lww_collapse(
+        batch, key_cols=table.key_cols, lww_col=table.lww_col,
+        n_buckets=table.n_buckets if fused else None,
+        bucket_key=table.key_cols[0],
+        n_salts=n_salts if salted else 0, hot_keys=hot_keys,
+    )
     # the collapse above already resolved per-key winners — skip
     # merge_apply's safety collapse so the batch keeps one exchange
     return table.merge_apply(collapsed, batch_id=batch_id, assume_collapsed=True)

@@ -172,6 +172,23 @@ def should_salt(
     return top_rows > max(min_key_rows, skew_factor * avg_task_rows)
 
 
+def skewed_keys(
+    events: DataFrame,
+    key_cols: list[str],
+    n_batches: int = 1,
+    n_partitions: int = 32,
+) -> list[tuple] | None:
+    """THE salt decision (replay's and streaming ingest's `salted="auto"`):
+    the sampled hot keys as key tuples when salting pays for its second
+    exchange (`should_salt`), else None. The ≤1000-entry list compiles into
+    the collapse plan as a literal IN-set — no per-batch join."""
+    rows, sampled_total = hot_key_counts(events, key_cols=key_cols)
+    if not should_salt(rows, sampled_total, n_batches=n_batches,
+                       n_partitions=n_partitions):
+        return None
+    return [tuple(r[k] for k in key_cols) for r in rows]
+
+
 def detect_hot_keys(
     events: DataFrame,
     key_cols: list[str] | None = None,

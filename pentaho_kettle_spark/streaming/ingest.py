@@ -52,15 +52,13 @@ def start_cdc_ingest(
         if salted == "auto":
             # same cost model as replay's auto mode: only pay the salted
             # plan's second exchange when a hot key would dominate a task
-            from pentaho_kettle_spark.cdc.skew import hot_key_counts, should_salt
+            from pentaho_kettle_spark.cdc.skew import skewed_keys
 
-            rows, sampled_total = hot_key_counts(batch_df, key_cols=table.key_cols)
-            use_salted = should_salt(
-                rows, sampled_total,
+            hot_keys = skewed_keys(
+                batch_df, table.key_cols,
                 n_partitions=spark.sparkContext.defaultParallelism,
             )
-            if use_salted:
-                hot_keys = [tuple(r[k] for k in table.key_cols) for r in rows]
+            use_salted = hot_keys is not None
         apply_batch(
             table,
             batch_df.drop("ingest_ts"),

@@ -59,9 +59,22 @@ SYS_COLS = (SYS_SEQ, SYS_DELETED)
 # normal grace-aged orphan path.
 INFLIGHT_TTL = 6 * 3600.0
 
+# An arrow fold (driver thread or executor task) holds a bucket's pinned
+# files in memory; buckets above this size keep the Spark fold.
+ARROW_FOLD_MAX_BYTES = 256 * 1024 * 1024
+
 import re as _re
 
 _BRANCH_NAME_RE = _re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,63}$")
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Replace `path` with `text` through a temp file and an atomic rename
+    (POSIX): readers see the old content or the new, never a torn file."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.rename(tmp, path)
 
 
 def _del_rows(pf) -> int:
@@ -129,6 +142,38 @@ def _lww_minmax(pf, idx):
     return mn, mx
 
 
+def _file_entry(root: str, full: str, schema_version: int, kind: str,
+                lww_col: str) -> dict:
+    """Manifest entry of a just-written data file, from its parquet footer —
+    the one place both fold engines and every Spark write record file stats,
+    so readers cannot tell which engine wrote a file.
+
+    Per-file tombstone counts are recorded for DELTA files only — they are
+    what the MoR lineage metrics sum (Iceberg manifests record the same
+    per-file delete stats). Deterministic — unlike Observation metrics,
+    which mis-count under task retry. Base/fold/CoW writes skip the
+    read-back entirely (nothing consumes their del counts), and row-group
+    boolean statistics short-circuit the common all-live / all-deleted
+    files, so the bit-column read happens only for mixed row groups of
+    (small) delta files. Iceberg-style per-file lww bounds (footer stats, no
+    data pages) let read(lww_after=...) skip files whose entire ts range
+    precedes the predicate."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(full)
+    names = pf.schema_arrow.names
+    entry = {"path": os.path.relpath(full, root), "schema_version": schema_version,
+             "rows": pf.metadata.num_rows, "kind": kind}
+    if kind == "delta" and SYS_DELETED in names:
+        entry["del_rows"] = _del_rows(pf)
+    if lww_col in names:
+        mn, mx = _lww_minmax(pf, names.index(lww_col))
+        mn, mx = _stat_us(mn), _stat_us(mx)
+        if mn is not None and mx is not None:
+            entry["lww_min"], entry["lww_max"] = mn, mx
+    return entry
+
+
 class _DuplicateBatch(Exception):
     """Raised inside a commit mutation when the batch id is already
     committed — turns into a skip, making re-delivered epochs no-ops."""
@@ -142,9 +187,12 @@ class _CommitConflict(Exception):
     in-process form of Iceberg's optimistic-concurrency commit loop)."""
 
 
-def bucket_expr(key_col: str, n_buckets: int):
-    """Deterministic bucket id — identical everywhere (write, merge, prune)."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+def bucket_expr(key, n_buckets: int):
+    """THE bucket id of a key column (name or Column) — the one hash every
+    bucket-aware path uses: the fused collapse, the write staging, the CoW
+    merge, patch_apply's prune and read_key's lookup."""
+    key = F.col(key) if isinstance(key, str) else key
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
 
 
 def _conform_cols(batch_cols, schema_fields, key_cols, lww_col) -> list:
@@ -156,9 +204,11 @@ def _conform_cols(batch_cols, schema_fields, key_cols, lww_col) -> list:
     producer bug and raises by name instead of surfacing as an analyzer
     error deep in the merge plan. (Caught by the r6 schema-evolution-vs-
     writer fuzz axis: an evolution committed inside another writer's
-    pre-commit window made every later old-producer batch crash.)"""
+    pre-commit window made every later old-producer batch crash.)
+    An upstream `_bucket` column (the bucket-fused collapse) leads the
+    output unchanged."""
     have = set(batch_cols)
-    cols = []
+    cols = [F.col("_bucket")] if "_bucket" in have else []
     for f in schema_fields:
         n, t = f["name"], f["type"]
         if n in have:
@@ -187,8 +237,8 @@ def _arrow_fold_bucket(
     out_dir: str,
     kind: str = "delta",
 ) -> dict:
-    """Fold one bucket's delta files into ONE delta file with pyarrow only —
-    zero Spark jobs, zero JVM memory traffic.
+    """Fold one bucket's pinned files into ONE file of `kind` with pyarrow
+    only — zero Spark jobs, zero JVM memory traffic.
 
     Why it exists: at 32 ingest streams the fold path is memory-bandwidth
     bound (BENCH/BASELINE.md 8:32 analysis) — every minor fold through Spark
@@ -237,21 +287,7 @@ def _arrow_fold_bucket(
     os.makedirs(bdir, exist_ok=True)
     full = os.path.join(bdir, f"part-0-{uuid.uuid4().hex[:12]}.parquet")
     pq.write_table(out, full)
-    pf = pq.ParquetFile(full)
-    entry = {
-        "path": os.path.relpath(full, root),
-        "schema_version": entries[0]["schema_version"],
-        "rows": pf.metadata.num_rows,
-        "kind": kind,
-    }
-    if kind == "delta":
-        entry["del_rows"] = _del_rows(pf)
-    if lww_col in pf.schema_arrow.names:
-        mn, mx = _lww_minmax(pf, pf.schema_arrow.get_field_index(lww_col))
-        mn, mx = _stat_us(mn), _stat_us(mx)
-        if mn is not None and mx is not None:
-            entry["lww_min"], entry["lww_max"] = mn, mx
-    return entry
+    return _file_entry(root, full, entries[0]["schema_version"], kind, lww_col)
 
 
 @dataclass
@@ -307,8 +343,8 @@ class ParquetSnapshotTableIO:
         compact_delta_files: int = 16,  # mor: compact a bucket past this many deltas
         sort_on_write: bool = False,  # cluster rows by key within bucket files
         minor_compaction_engine: str = "spark",  # fold engine, "spark" |
-        # "arrow" — applies to minor folds (compact_minor) and, since r6,
-        # to size-bounded major folds too (see compact)
+        # "arrow" | "arrow-distributed" — applies to minor folds
+        # (compact_minor) and major folds (compact) alike (see _fold)
     ):
         self.spark = spark
         self.root = root
@@ -453,10 +489,7 @@ class ParquetSnapshotTableIO:
         fn = f"{prefix}-{digest}.json"
         full = os.path.join(self.root, "manifests", fn)
         if not os.path.exists(full):
-            tmp = full + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(content)
-            os.rename(tmp, full)  # readers never see a torn manifest
+            _atomic_write(full, content)  # readers never see a torn manifest
         return fn
 
     def _commit(self, manifest: dict) -> None:
@@ -499,10 +532,7 @@ class ParquetSnapshotTableIO:
         name = f"snap-{manifest['snapshot_id']:06d}.json"
         with open(os.path.join(self.root, "snapshots", name), "w") as f:
             json.dump(manifest, f, indent=1)
-        tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(name)
-        os.rename(tmp, self._current_path())  # atomic pointer swap == commit
+        _atomic_write(self._current_path(), name)  # atomic pointer swap == commit
         # the write dirs THIS THREAD's operation staged are now referenced
         # by a committed snapshot (or superseded) — release their GC
         # protection; another thread's pre-commit markers are untouched
@@ -620,19 +650,18 @@ class ParquetSnapshotTableIO:
                 SYS_DELETED, F.lit(False)
             )
         if has_delta:
-            df = self._collapse_rows(df, schema.names())
+            df = self._collapse_rows(df)
         return df
 
-    def _collapse_rows(self, df: DataFrame, names: list[str]) -> DataFrame:
-        """One row per key: winner by lexicographic max (lww_col, _seq)."""
-        payload = [c for c in [*names, SYS_SEQ, SYS_DELETED] if c not in self.key_cols]
-        ordk = F.struct(F.col(self.lww_col), F.col(SYS_SEQ))
-        agg = df.groupBy(*self.key_cols).agg(
-            F.max_by(F.struct(*[F.col(c) for c in payload]), ordk).alias("w")
-        )
-        cols = [F.col(k) for k in self.key_cols]
-        cols += [F.col(f"w.{c}").alias(c) for c in payload]
-        return agg.select(*cols)
+    def _collapse_rows(self, df: DataFrame) -> DataFrame:
+        """One row per key: winner by lexicographic max (lww_col, _seq).
+        Output columns: key cols, then the rest in input order (data cols,
+        `_seq`, `_deleted` for a file read) — the arrow fold concatenates
+        files by schema, so this order is part of the on-disk contract."""
+        # lazy: cdc/__init__ imports replay, which imports this module
+        from pentaho_kettle_spark.cdc.lww import lww_winners
+
+        return lww_winners(df, self.key_cols, self.lww_col, SYS_SEQ)
 
     def read(self, lww_after=None) -> DataFrame | None:
         """The visible table: non-tombstone rows, data columns only.
@@ -675,8 +704,7 @@ class ParquetSnapshotTableIO:
                             [f["type"] for f in schema.fields]))[self.key_cols[0]]
         key_lit = F.lit(key_value).cast(key_type)
         b = self.spark.range(1).select(
-            F.pmod(F.xxhash64(key_lit), F.lit(self.n_buckets))
-            .cast("int").alias("b")
+            bucket_expr(key_lit, self.n_buckets).alias("b")
         ).first()["b"]
         df = self.read_full(buckets=[b])
         return (
@@ -729,8 +757,8 @@ class ParquetSnapshotTableIO:
         commit order is decided, so predicting the snapshot id races."""
         outdir = self._new_write_dir()
         if "_bucket" in df.columns:
-            # upstream already bucket-partitioned (lww_collapse_bucketed's
-            # fused single-exchange plan) — re-staging would add a shuffle
+            # upstream already bucket-partitioned (lww_collapse's
+            # bucket-fused single-exchange plan) — re-staging would add a shuffle
             staged = df
         else:
             # pin the exchange to n_buckets partitions (not shuffle.partitions
@@ -749,60 +777,37 @@ class ParquetSnapshotTableIO:
             staged = staged.sortWithinPartitions("_bucket", *self.key_cols)
         staged.write.mode("overwrite").partitionBy("_bucket").parquet(outdir)
         self._refresh_markers()  # long write done — restart the TTL clock
-        import pyarrow.parquet as pq
-
-        # per-file tombstone counts are recorded for DELTA files only — they
-        # are what the MoR lineage metrics sum (Iceberg manifests record the
-        # same per-file delete stats). Deterministic — unlike Observation
-        # metrics, which mis-count under task retry. Base/fold/CoW writes
-        # skip the read-back entirely (nothing consumes their del counts),
-        # and row-group boolean statistics short-circuit the common all-live
-        # / all-deleted files, so the bit-column read happens only for mixed
-        # row groups of (small) delta files.
-        count_del = kind == "delta" and SYS_DELETED in df.columns
         files: dict[str, list[dict]] = {}
         for dirpath, _dirnames, filenames in os.walk(outdir):
             for fn in filenames:
                 if not fn.endswith(".parquet"):
                     continue
-                full = os.path.join(dirpath, fn)
-                bucket = dirpath.split("_bucket=")[-1]
-                pf = pq.ParquetFile(full)
-                rows = pf.metadata.num_rows
-                if rows == 0:
-                    continue
-                entry = {"path": os.path.relpath(full, self.root),
-                         "schema_version": schema_version, "rows": rows,
-                         "kind": kind}
-                if count_del:
-                    entry["del_rows"] = _del_rows(pf)
-                # Iceberg-style per-file lww bounds (footer stats, no data
-                # pages): lets read(lww_after=...) skip files whose entire
-                # ts range precedes the predicate
-                if self.lww_col in pf.schema_arrow.names:
-                    mn, mx = _lww_minmax(
-                        pf, pf.schema_arrow.get_field_index(self.lww_col)
-                    )
-                    mn, mx = _stat_us(mn), _stat_us(mx)
-                    if mn is not None and mx is not None:
-                        entry["lww_min"], entry["lww_max"] = mn, mx
-                files.setdefault(bucket, []).append(entry)
+                entry = _file_entry(self.root, os.path.join(dirpath, fn),
+                                    schema_version, kind, self.lww_col)
+                if entry["rows"]:
+                    files.setdefault(dirpath.split("_bucket=")[-1], []).append(entry)
         return files
 
-    def init_empty(self, schema: T.StructType) -> None:
+    def _commit_fresh(self, schema: T.StructType, snapshot_id: int,
+                      parent: int | None, files: dict, batches: list) -> None:
+        """Commit a new table state under a version-0 `schema` with an empty
+        lineage (init_empty / overwrite)."""
         ts = TableSchema.from_struct(schema)
         self._commit(
             {
-                "snapshot_id": 0,
-                "parent": None,
+                "snapshot_id": snapshot_id,
+                "parent": parent,
                 "schema": {"fields": ts.fields, "version": 0, "history": ts.history},
                 "n_buckets": self.n_buckets,
-                "files": {},
-                "committed_batches": [],
+                "files": files,
+                "committed_batches": batches,
                 "seq_high_watermark": -1,
                 "lineage": [],
             }
         )
+
+    def init_empty(self, schema: T.StructType) -> None:
+        self._commit_fresh(schema, 0, None, {}, [])
 
     def overwrite(self, df: DataFrame, batch_id: str | None = None) -> None:
         """Full-table replace (bootstrap / snapshot load)."""
@@ -813,25 +818,14 @@ class ParquetSnapshotTableIO:
         data_schema = T.StructType(
             [f for f in df.schema.fields if f.name not in SYS_COLS]
         )
-        ts = TableSchema.from_struct(data_schema)
         sid = self.snapshot_id() + 1
         files = self._write_buckets(df, 0)
         prev = self.current_manifest()
         batches = (prev["committed_batches"] if prev else [])
         if batch_id is not None:
             batches = [*batches, batch_id]
-        self._commit(
-            {
-                "snapshot_id": sid,
-                "parent": self.snapshot_id() if prev else None,
-                "schema": {"fields": ts.fields, "version": 0, "history": ts.history},
-                "n_buckets": self.n_buckets,
-                "files": files,
-                "committed_batches": batches,
-                "seq_high_watermark": -1,
-                "lineage": [],
-            }
-        )
+        self._commit_fresh(data_schema, sid, self.snapshot_id() if prev else None,
+                           files, batches)
 
     # ---------- schema evolution ----------
 
@@ -965,19 +959,12 @@ class ParquetSnapshotTableIO:
         lww = self.lww_col
         payload = [c for c in names if c not in key and c != lww]
 
-        w = (
-            Window.partitionBy(*key)
-            .orderBy(F.col(lww).desc(), F.col(SYS_SEQ).desc())
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        latest = Window.partitionBy(*key).orderBy(
+            F.col(lww).desc(), F.col(SYS_SEQ).desc()
         )
+        w = latest.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         fold = (
-            patches.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy(*key)
-                    .orderBy(F.col(lww).desc(), F.col(SYS_SEQ).desc())
-                ),
-            )
+            patches.withColumn("_rn", F.row_number().over(latest))
             .select(
                 *key,
                 F.col(lww).alias("_p_lww"),
@@ -992,14 +979,9 @@ class ParquetSnapshotTableIO:
             .drop("_rn")
         )
 
-        # stored state of the touched buckets only (bounded collect: ≤
-        # n_buckets ints — the same prune the CoW merge performs)
-        touched = [
-            r["b"]
-            for r in patches.select(
-                bucket_expr(key[0], self.n_buckets).alias("b")
-            ).distinct().collect()
-        ]
+        # stored state of the touched buckets only (the same prune the CoW
+        # merge performs)
+        touched = self._touched_buckets(patches)
         stored = self.read_full(buckets=touched)
         stored_sel = stored.select(
             *key,
@@ -1083,27 +1065,18 @@ class ParquetSnapshotTableIO:
         # An upstream `_bucket` column (the fused bucket-aligned collapse)
         # is carried through: the merge join below then co-partitions on it
         # and the bucket write needs no re-staging exchange.
-        keep_bucket = [F.col("_bucket")] if "_bucket" in changes.columns else []
         chg = changes.select(
-            *keep_bucket,
             *_conform_cols(changes.columns, schema.fields, self.key_cols, self.lww_col),
             F.col("op"),
             F.col(SYS_SEQ).cast("long").alias(SYS_SEQ),
         )
         if not assume_collapsed:
-            # within-batch LWW: same resolution as cdc.lww.lww_collapse,
-            # inlined over the conformed columns (op rides in the payload).
-            # `_bucket` is dropped first: this collapse re-partitions by key,
-            # so the bucket alignment is gone anyway and keeping the column
-            # would falsely signal _write_buckets to skip its staging.
-            chg = chg.drop("_bucket")
-            payload = [c for c in chg.columns if c not in self.key_cols]
-            ordk = F.struct(F.col(self.lww_col), F.col(SYS_SEQ))
-            chg = (
-                chg.groupBy(*self.key_cols)
-                .agg(F.max_by(F.struct(*[F.col(c) for c in payload]), ordk).alias("w"))
-                .select(*self.key_cols, *[F.col(f"w.{c}").alias(c) for c in payload])
-            )
+            # within-batch LWW over the conformed columns (op rides in the
+            # payload). `_bucket` is dropped first: this collapse
+            # re-partitions by key, so the bucket alignment is gone anyway
+            # and keeping the column would falsely signal _write_buckets to
+            # skip its staging.
+            chg = self._collapse_rows(chg.drop("_bucket"))
 
         # persist: chg is consumed twice (bucket-pruning collect + the merge
         # join) and survives commit-conflict retries; without this the
@@ -1114,13 +1087,7 @@ class ParquetSnapshotTableIO:
         try:
             # bucket pruning: which buckets does this batch touch?
             # (independent of the manifest — computed once across retries)
-            bcol = (
-                F.col("_bucket") if "_bucket" in chg.columns
-                else bucket_expr(self.key_cols[0], self.n_buckets)
-            )
-            touched = [
-                r["b"] for r in chg.select(bcol.alias("b")).distinct().collect()
-            ]
+            touched = self._touched_buckets(chg)
             # optimistic concurrency (Iceberg's commit retry loop): the
             # rewrite is planned against manifest `m`; if another writer
             # commits into a touched bucket before our pointer swap, the
@@ -1145,6 +1112,15 @@ class ParquetSnapshotTableIO:
             )
         finally:
             chg.unpersist()
+
+    def _touched_buckets(self, df: DataFrame) -> list[int]:
+        """Distinct bucket ids of `df`'s keys — a bounded collect of ≤
+        n_buckets ints; a bucket-fused batch already carries `_bucket`."""
+        bcol = (
+            F.col("_bucket") if "_bucket" in df.columns
+            else bucket_expr(self.key_cols[0], self.n_buckets)
+        )
+        return [r["b"] for r in df.select(bcol.alias("b")).distinct().collect()]
 
     def _merge_apply_cow(
         self,
@@ -1270,21 +1246,34 @@ class ParquetSnapshotTableIO:
             "seq_high_watermark": seq_high_watermark,
         }
 
-        def _mutate(cur: dict) -> dict:
-            if batch_id is not None and batch_id in set(cur["committed_batches"]):
-                raise _DuplicateBatch(batch_id)
+        def _files(cur: dict) -> dict:
             for b in touched:
                 bs = str(b)
                 if {e["path"] for e in cur["files"].get(bs, [])} != planned[bs]:
                     raise _CommitConflict(bs)  # replan against cur (retry)
             files = {b: es for b, es in cur["files"].items() if int(b) not in touched}
-            for b, es in new_files.items():
-                files[b] = es
+            files.update(new_files)
+            return files
+
+        if self._commit_batch(_files, batch_id, seq_high_watermark, lineage_rec) is None:
+            return {"skipped_duplicate_batch": batch_id}
+        return lineage_rec
+
+    def _commit_batch(self, files_of, batch_id: str | None,
+                      seq_high_watermark: int | None, lineage_rec: dict) -> dict | None:
+        """Commit one merge apply: `files_of(cur)` maps the current manifest
+        to the new file map (it may raise _CommitConflict); the batch id,
+        seq watermark and lineage record ride along. Stamps the record's
+        snapshot id and returns the committed manifest, or None when the
+        batch id was already committed (a re-delivered epoch is a no-op)."""
+        def _mutate(cur: dict) -> dict:
+            if batch_id is not None and batch_id in set(cur["committed_batches"]):
+                raise _DuplicateBatch(batch_id)
             hw = cur.get("seq_high_watermark", -1)
             return {
                 "schema": cur["schema"],
                 "n_buckets": self.n_buckets,
-                "files": files,
+                "files": files_of(cur),
                 "committed_batches": [*cur["committed_batches"],
                                       *([batch_id] if batch_id is not None else [])],
                 "seq_high_watermark": max(
@@ -1296,9 +1285,9 @@ class ParquetSnapshotTableIO:
         try:
             committed = self._commit_mutation(_mutate)
         except _DuplicateBatch:
-            return {"skipped_duplicate_batch": batch_id}
+            return None
         lineage_rec["snapshot_id"] = committed["snapshot_id"]
-        return lineage_rec
+        return committed
 
     def _merge_apply_mor(
         self,
@@ -1318,11 +1307,7 @@ class ParquetSnapshotTableIO:
         hot bucket every batch; MoR amortizes that into scheduled compaction.
         """
         schema = TableSchema(**m["schema"])
-        keep_bucket = (
-            [F.col("_bucket")] if "_bucket" in changes.columns else []
-        )
         delta = changes.select(
-            *keep_bucket,
             *_conform_cols(changes.columns, schema.fields, self.key_cols, self.lww_col),
             F.col(SYS_SEQ).cast("long").alias(SYS_SEQ),
             (F.col("op") == F.lit("D")).alias(SYS_DELETED),
@@ -1349,30 +1334,15 @@ class ParquetSnapshotTableIO:
             "seq_high_watermark": seq_high_watermark,
         }
 
-        def _mutate(cur: dict) -> dict:
-            if batch_id is not None and batch_id in set(cur["committed_batches"]):
-                raise _DuplicateBatch(batch_id)
+        def _files(cur: dict) -> dict:
             files = {b: list(es) for b, es in cur["files"].items()}
             for b, es in new_files.items():
                 files[b] = files.get(b, []) + es
-            hw = cur.get("seq_high_watermark", -1)
-            return {
-                "schema": cur["schema"],
-                "n_buckets": self.n_buckets,
-                "files": files,
-                "committed_batches": [*cur["committed_batches"],
-                                      *([batch_id] if batch_id is not None else [])],
-                "seq_high_watermark": max(
-                    hw, seq_high_watermark if seq_high_watermark is not None else -1
-                ),
-                "lineage": [*cur["lineage"], lineage_rec],
-            }
+            return files
 
-        try:
-            committed = self._commit_mutation(_mutate)
-        except _DuplicateBatch:
+        committed = self._commit_batch(_files, batch_id, seq_high_watermark, lineage_rec)
+        if committed is None:
             return {"skipped_duplicate_batch": batch_id}
-        lineage_rec["snapshot_id"] = committed["snapshot_id"]
 
         # inline auto-compaction: fold buckets whose delta count crossed the
         # threshold (an async CompactionScheduler replaces this when attached)
@@ -1391,137 +1361,12 @@ class ParquetSnapshotTableIO:
     def compact(
         self, buckets: list[int] | None = None, engine: str | None = None
     ) -> list[int]:
-        """Fold delta files into base for the given buckets (all if None):
-        read the collapsed state (tombstones kept — expire_tombstones drops
-        them under a watermark policy) and rewrite those buckets as base.
-
-        `engine` (default = the table's `minor_compaction_engine`): with
-        "arrow", buckets whose pinned file bytes fit under
-        $PKS_ARROW_FOLD_MAX_BYTES (default 256 MB) fold in a pyarrow kernel
-        on a driver thread — no Spark job, no exchange, no JVM memory
-        traffic, exactly like compact_minor's arrow path but rewriting
-        base∪deltas to a new base. During sustained ingest this takes the
-        major-fold wave off the executors the ingest exchange is using
-        (guide §2: the fold's scan+exchange+write was pure memory-bandwidth
-        contention). Oversized buckets and buckets the Arrow kernel can't
-        fold (mixed schema versions) run through the Spark path unchanged —
-        on a real cluster the size guard keeps driver memory bounded.
-
-        Concurrency-safe against a live ingest writer: the fold reads a
-        pinned set of file entries, and the commit removes exactly those
-        paths from the *current* manifest — delta files appended while the
-        rewrite ran survive untouched (Iceberg RewriteFiles semantics).
+        """MAJOR compaction: fold every file of the given buckets (all with
+        deltas if None) — base ∪ deltas — into ONE new base file per bucket.
+        Tombstones are kept (expire_tombstones drops them under a watermark
+        policy). See `_fold` for `engine` and the concurrency contract.
         Returns the buckets actually compacted."""
-        engine = engine or self.minor_compaction_engine
-        m = self.current_manifest()
-        schema = TableSchema(**m["schema"])
-        target = buckets if buckets is not None else [
-            int(b) for b, es in m["files"].items()
-            if any(e.get("kind") == "delta" for e in es)
-        ]
-        if not target:
-            return []
-        # pin the exact entries being folded (not "whatever is current later")
-        pinned_by_bucket = {
-            str(b): {e["path"] for e in m["files"].get(str(b), [])} for b in target
-        }
-        folded = [
-            e for b, es in m["files"].items() if int(b) in target for e in es
-        ]
-        folded_paths = {e["path"] for e in folded}
-
-        new_files: dict[str, list[dict]] = {}
-        spark_buckets = list(target)
-        if engine == "arrow":
-            from concurrent.futures import ThreadPoolExecutor
-
-            max_bytes = int(
-                os.environ.get("PKS_ARROW_FOLD_MAX_BYTES", str(256 * 1024 * 1024))
-            )
-            by_bucket = {
-                b: list(m["files"].get(str(b), [])) for b in target
-            }
-
-            def _bucket_bytes(es: list[dict]) -> int:
-                try:
-                    return sum(
-                        os.path.getsize(os.path.join(self.root, e["path"]))
-                        for e in es
-                    )
-                except OSError:
-                    return max_bytes + 1  # unreadable → Spark path
-            arrow_buckets = [
-                b for b in target
-                if by_bucket[b] and _bucket_bytes(by_bucket[b]) <= max_bytes
-            ]
-            if arrow_buckets:
-                outdir = self._new_write_dir()
-                spark_buckets = [b for b in target if b not in arrow_buckets]
-                with ThreadPoolExecutor(
-                    max_workers=min(8, len(arrow_buckets))
-                ) as ex:
-                    futs = {
-                        b: ex.submit(
-                            _arrow_fold_bucket, self.root, str(b), by_bucket[b],
-                            self.key_cols, self.lww_col, outdir, "base",
-                        )
-                        for b in arrow_buckets
-                    }
-                    for b, fut in futs.items():
-                        try:
-                            new_files[str(b)] = [fut.result()]
-                        except _ArrowFoldUnsupported:
-                            spark_buckets.append(b)
-        if spark_buckets:
-            spark_folded = [
-                e for b, es in m["files"].items() if int(b) in spark_buckets
-                for e in es
-            ]
-            df = self._read_files(spark_folded, schema)
-            if df is not None:
-                collapsed = self._collapse_rows(df, schema.names())
-                for b, es in self._write_buckets(
-                    collapsed, schema.version, kind="base"
-                ).items():
-                    new_files.setdefault(b, []).extend(es)
-        if not new_files and not folded_paths:
-            return []
-
-        done: list[int] = []
-
-        def _mutate(cur: dict) -> dict:
-            done.clear()
-            files = {}
-            for b, es in cur["files"].items():
-                cur_paths = {e["path"] for e in es}
-                # STALE-PIN guard (Iceberg RewriteFiles conflict rule): if
-                # another fold already consumed any of the entries this
-                # rewrite pinned, OUR rewrite of that bucket is based on a
-                # superseded file set — committing it would re-add rows the
-                # winning fold already rewrote (two base files per bucket =
-                # duplicated data; caught by the r6 pipelined-replay race).
-                # The bucket is left exactly as the winner committed it and
-                # our output file becomes a grace-aged orphan.
-                if int(b) in target and pinned_by_bucket.get(b, set()) <= cur_paths:
-                    kept = [e for e in es if e["path"] not in folded_paths]
-                    files[b] = new_files.get(b, []) + kept
-                    done.append(int(b))
-                else:
-                    files[b] = list(es)
-            for b, es in new_files.items():
-                if b not in files:
-                    files[b] = list(es)
-                    done.append(int(b))
-            out = dict(cur)
-            out["files"] = files
-            out["lineage"] = [*cur["lineage"], {
-                "mode": "compact", "compacted_buckets": sorted(done),
-                "folded_files": len(folded_paths),
-            }]
-            return out
-
-        self._commit_mutation(_mutate)
-        return sorted(done)
+        return self._fold(buckets, engine, "base", "compact")
 
     def rebucket(self, n_buckets: int) -> dict:
         """Bucket-layout evolution (Iceberg partition-spec-evolution-with-
@@ -1546,17 +1391,9 @@ class ParquetSnapshotTableIO:
         schema = TableSchema(**m["schema"])
         entries = [e for es in m["files"].values() for e in es]
         old_n = self.n_buckets
-        df = self._read_files(entries, schema)
-        collapsed = (
-            None if df is None else self._collapse_rows(df, schema.names())
-        )
         self.n_buckets = n_new
         try:
-            new_files = (
-                {}
-                if collapsed is None
-                else self._write_buckets(collapsed, schema.version, kind="base")
-            )
+            new_files = self._rewrite(entries, schema, "base")
 
             def _mutate(cur: dict) -> dict:
                 if cur["snapshot_id"] != m["snapshot_id"]:
@@ -1588,7 +1425,8 @@ class ParquetSnapshotTableIO:
         """MINOR compaction: merge each bucket's delta files into ONE delta
         file — WITHOUT reading the base. Reads O(delta rows), not O(bucket
         rows), so it is the cheap fold for big buckets with small deltas
-        (Hudi's log-file compaction / RocksDB L0→L0 merge analog).
+        (Hudi's log-file compaction / RocksDB L0→L0 merge analog). Only
+        buckets with ≥2 deltas are folded; folding one file is a no-op.
 
         Correct because the LWW collapse is associative and commutative
         (max_by over (lww, _seq)): collapsing the deltas among themselves
@@ -1596,111 +1434,100 @@ class ParquetSnapshotTableIO:
         base ∪ deltas. Tombstones are kept (they must keep suppressing base
         rows). Read amplification drops from k delta files per bucket to 1;
         the base rewrite is deferred until a MAJOR fold is actually worth
-        its full-bucket read (CompactionPolicy decides which is due).
+        its full-bucket read (CompactionPolicy decides which is due)."""
+        return self._fold(buckets, engine, "delta", "compact_minor")
+
+    def _fold(
+        self, buckets: list[int] | None, engine: str | None, kind: str, mode: str
+    ) -> list[int]:
+        """The one fold behind compact() (kind "base": all entries of a
+        bucket, written as base) and compact_minor() (kind "delta": delta
+        entries only, written as delta): pin → engine dispatch → per-bucket
+        Spark fallback → stale-pin-guarded commit, recorded in the lineage
+        under `mode`.
 
         `engine` (default = the table's `minor_compaction_engine`):
           * "spark" — one Spark job folds all due buckets (scan → collapse
-            exchange → write). Right when delta sets are large.
-          * "arrow" — each bucket folds in a pyarrow kernel on a driver
-            thread (_arrow_fold_bucket): no Spark job, no exchange, no JVM
-            memory traffic. Right for the sustained-ingest shape, where the
-            fold otherwise competes with the ingest exchange for memory
-            bandwidth (the measured 32-stream bottleneck). Buckets the
-            Arrow path can't fold (mixed schema versions, exotic key types)
-            fall back to one Spark job transparently.
-          * "arrow-distributed" — the same pure per-bucket fold shipped to
-            executors via `sc.parallelize(items).map(_arrow_fold_bucket)`,
-            one task per bucket; shared storage is the only requirement.
-            Right for a multi-executor cluster where the driver's cores
-            can't cover the fold fan-out; equivalence with the driver-thread
-            path is test-pinned (test_arrow_compaction).
+            exchange → write). Right when the pinned sets are large.
+          * "arrow" — a pyarrow kernel per bucket on driver threads
+            (_arrow_fold_bucket): no Spark job, no exchange, no JVM memory
+            traffic, so the fold stops competing with the ingest exchange
+            for memory bandwidth (the measured 32-stream bottleneck).
+          * "arrow-distributed" — the same pure per-bucket fold as one
+            Spark task per bucket over shared storage, for clusters whose
+            driver cores can't cover the fold fan-out (local deployments
+            keep "arrow": threads skip task scheduling and pickling).
+        On both arrow engines, buckets whose pinned files exceed
+        ARROW_FOLD_MAX_BYTES (driver/task memory stays bounded) and buckets
+        the kernel can't fold (mixed schema versions, exotic key types) take
+        the Spark path transparently.
 
-        Same RewriteFiles pinning as compact(): delta files appended by a
-        concurrent ingest batch while this ran survive untouched."""
+        Concurrency-safe against a live ingest writer: the fold reads a
+        pinned set of file entries, and the commit removes exactly those
+        paths from the *current* manifest — delta files appended while the
+        rewrite ran survive untouched (Iceberg RewriteFiles semantics)."""
         engine = engine or self.minor_compaction_engine
         m = self.current_manifest()
         schema = TableSchema(**m["schema"])
-        target = buckets if buckets is not None else [
-            int(b) for b, es in m["files"].items()
-            if sum(1 for e in es if e.get("kind") == "delta") > 1
-        ]
-        # only buckets with ≥2 deltas benefit; folding one file is a no-op
-        target = [
-            b for b in target
-            if sum(
-                1 for e in m["files"].get(str(b), []) if e.get("kind") == "delta"
-            ) > 1
-        ]
-        if not target:
+        minor = kind == "delta"
+
+        def pick(b) -> list[dict]:
+            es = m["files"].get(str(b), [])
+            return [e for e in es if not minor or e.get("kind") == "delta"]
+
+        def due(b) -> bool:
+            n = sum(1 for e in m["files"].get(str(b), []) if e.get("kind") == "delta")
+            return n > 1 if minor else n > 0
+
+        if buckets is None:
+            buckets = [int(b) for b in m["files"] if due(b)]
+        elif minor:
+            buckets = [b for b in buckets if due(b)]
+        # pin the exact entries being folded (not "whatever is current later")
+        pinned = {b: pick(b) for b in buckets}
+        folded_paths = {e["path"] for es in pinned.values() for e in es}
+        if not folded_paths:
             return []
-        by_bucket = {
-            b: [e for e in m["files"].get(str(b), []) if e.get("kind") == "delta"]
-            for b in target
-        }
-        folded = [e for es in by_bucket.values() for e in es]
-        folded_paths = {e["path"] for e in folded}
 
         new_files: dict[str, list[dict]] = {}
-        spark_buckets = list(target)
-        if engine == "arrow-distributed":
-            # cluster-scale variant of the arrow path: the same pure
-            # per-bucket fold shipped to executors as ONE task per bucket
-            # (no scan→exchange→write query plan — each task is a pyarrow
-            # kernel over shared storage). Right when the driver's cores
-            # can't cover the fold fan-out; local deployments keep "arrow"
-            # (driver threads skip task scheduling and pickling entirely).
-            outdir = self._new_write_dir()
-            spark_buckets = []
-            root, key_cols, lww_col = self.root, self.key_cols, self.lww_col
-            items = [(b, by_bucket[b]) for b in target]
+        spark_buckets = list(pinned)
+        if engine in ("arrow", "arrow-distributed"):
+            arrow = [b for b in pinned if pinned[b] and self._fits_arrow(pinned[b])]
+            spark_buckets = [b for b in pinned if b not in arrow]
+            if arrow:
+                outdir = self._new_write_dir()
+                # a pure closure over plain values: shipped to executors as
+                # is by the distributed engine
+                root, key_cols, lww_col = self.root, self.key_cols, self.lww_col
 
-            def _fold(item):
-                b, entries = item
-                try:
-                    return b, _arrow_fold_bucket(
-                        root, str(b), entries, key_cols, lww_col, outdir
-                    ), None
-                except _ArrowFoldUnsupported as exc:
-                    return b, None, str(exc)
-
-            results = (
-                self.spark.sparkContext.parallelize(items, len(items))
-                .map(_fold)
-                .collect()
-            )
-            for b, entry, _err in results:
-                if entry is None:
-                    spark_buckets.append(b)
-                else:
-                    new_files[str(b)] = [entry]
-        elif engine == "arrow":
-            from concurrent.futures import ThreadPoolExecutor
-
-            outdir = self._new_write_dir()
-            spark_buckets = []
-            with ThreadPoolExecutor(max_workers=min(8, len(target))) as ex:
-                futs = {
-                    b: ex.submit(
-                        _arrow_fold_bucket, self.root, str(b), by_bucket[b],
-                        self.key_cols, self.lww_col, outdir,
-                    )
-                    for b in target
-                }
-                for b, fut in futs.items():
+                def fold_one(item):
+                    b, entries = item
                     try:
-                        new_files[str(b)] = [fut.result()]
+                        return b, _arrow_fold_bucket(
+                            root, str(b), entries, key_cols, lww_col, outdir, kind
+                        )
                     except _ArrowFoldUnsupported:
+                        return b, None
+
+                items = [(b, pinned[b]) for b in arrow]
+                if engine == "arrow-distributed":
+                    results = (
+                        self.spark.sparkContext.parallelize(items, len(items))
+                        .map(fold_one).collect()
+                    )
+                else:
+                    from concurrent.futures import ThreadPoolExecutor
+
+                    with ThreadPoolExecutor(max_workers=min(8, len(items))) as ex:
+                        results = list(ex.map(fold_one, items))
+                for b, entry in results:
+                    if entry is None:
                         spark_buckets.append(b)
-        if spark_buckets:
-            spark_folded = [e for b in spark_buckets for e in by_bucket[b]]
-            df = self._read_files(spark_folded, schema)
-            if df is None:
-                return []
-            collapsed = self._collapse_rows(df, schema.names())
-            for b, es in self._write_buckets(
-                collapsed, schema.version, kind="delta"
-            ).items():
-                new_files.setdefault(b, []).extend(es)
+                    else:
+                        new_files[str(b)] = [entry]
+        spark_entries = [e for b in spark_buckets for e in pinned[b]]
+        for b, es in self._rewrite(spark_entries, schema, kind).items():
+            new_files.setdefault(b, []).extend(es)
 
         done: list[int] = []
 
@@ -1709,12 +1536,16 @@ class ParquetSnapshotTableIO:
             files = {}
             for b, es in cur["files"].items():
                 cur_paths = {e["path"] for e in es}
-                pinned = {e["path"] for e in by_bucket.get(int(b), [])}
-                # stale-pin guard — same conflict rule as compact(): if a
-                # concurrent fold already consumed any pinned delta, our
-                # merged delta would re-add its rows; leave the bucket as
-                # the winner committed it
-                if int(b) in target and pinned <= cur_paths:
+                pin = {e["path"] for e in pinned.get(int(b), [])}
+                # STALE-PIN guard (Iceberg RewriteFiles conflict rule): if
+                # another fold already consumed any of the entries this
+                # rewrite pinned, OUR rewrite of that bucket is based on a
+                # superseded file set — committing it would re-add rows the
+                # winning fold already rewrote (two base files per bucket =
+                # duplicated data; caught by the r6 pipelined-replay race).
+                # The bucket is left exactly as the winner committed it and
+                # our output file becomes a grace-aged orphan.
+                if int(b) in pinned and pin <= cur_paths:
                     kept = [e for e in es if e["path"] not in folded_paths]
                     # entry order in the manifest is irrelevant to readers —
                     # read_full collapses base ∪ deltas by LWW either way
@@ -1729,13 +1560,31 @@ class ParquetSnapshotTableIO:
             out = dict(cur)
             out["files"] = files
             out["lineage"] = [*cur["lineage"], {
-                "mode": "compact_minor", "compacted_buckets": sorted(done),
+                "mode": mode,
+                "compacted_buckets": sorted(done),
                 "folded_files": len(folded_paths),
             }]
             return out
 
         self._commit_mutation(_mutate)
         return sorted(done)
+
+    def _rewrite(self, entries: list[dict], schema: TableSchema, kind: str) -> dict:
+        """The Spark fold: read `entries`, collapse to one row per key, write
+        them as `kind` files in the current bucket layout ({} if none)."""
+        df = self._read_files(entries, schema)
+        if df is None:
+            return {}
+        return self._write_buckets(self._collapse_rows(df), schema.version, kind=kind)
+
+    def _fits_arrow(self, entries: list[dict]) -> bool:
+        """Whether an arrow fold may hold these files (an unreadable one
+        routes the bucket to the Spark fold)."""
+        try:
+            size = sum(os.path.getsize(os.path.join(self.root, e["path"])) for e in entries)
+        except OSError:
+            return False
+        return size <= ARROW_FOLD_MAX_BYTES
 
     def expire_tombstones(self, watermark=None) -> None:
         """Housekeeping rewrite dropping tombstones.
@@ -1758,9 +1607,7 @@ class ParquetSnapshotTableIO:
         if not entries:
             return
         pinned = {e["path"] for e in entries}
-        df = self._read_files(entries, schema)
-        if any(e.get("kind") == "delta" for e in entries):
-            df = self._collapse_rows(df, schema.names())
+        df = self.read_full(manifest=m)
         keep = ~F.col(SYS_DELETED)
         if watermark is not None:
             keep = keep | (F.col(self.lww_col) >= F.lit(watermark))
@@ -1839,20 +1686,14 @@ class ParquetSnapshotTableIO:
             self.manifest_at(sid)  # raises if expired / never existed
             refs = self.refs()
             refs[name] = sid
-            tmp = self._refs_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(refs, f)
-            os.rename(tmp, self._refs_path())
+            _atomic_write(self._refs_path(), json.dumps(refs))
             return sid
 
     def untag(self, name: str) -> None:
         with self._commit_lock, self._process_lock():
             refs = self.refs()
             refs.pop(name, None)
-            tmp = self._refs_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(refs, f)
-            os.rename(tmp, self._refs_path())
+            _atomic_write(self._refs_path(), json.dumps(refs))
 
     def _resolve_ref(self, ref: int | str) -> int:
         if isinstance(ref, str):
@@ -1913,10 +1754,7 @@ class ParquetSnapshotTableIO:
                     raise ValueError(f"unknown branch {name!r}")
                 with open(self._current_path()) as f:
                     head = f.read().strip()
-                tmp = ptr + f".tmp-{uuid.uuid4().hex}"
-                with open(tmp, "w") as f:
-                    f.write(head)
-                os.rename(tmp, ptr)
+                _atomic_write(ptr, head)
         b = copy.copy(self)  # shares locks, spark, manifest cache
         b._pointer_name = f"_branch-{name}"
         m = b.current_manifest()
@@ -1961,10 +1799,7 @@ class ParquetSnapshotTableIO:
                     f"branch {name!r} head {target}; re-apply local commits "
                     "onto the branch"
                 )
-            tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(f"snap-{target:06d}.json")
-            os.rename(tmp, self._current_path())
+            _atomic_write(self._current_path(), f"snap-{target:06d}.json")
         return {"fast_forwarded_to": target, "from": mine}
 
     def drop_branch(self, name: str) -> None:
@@ -2064,14 +1899,8 @@ class ParquetSnapshotTableIO:
         """Time-travel read: the visible table as of a retained snapshot
         (by id or tag name)."""
         m = self.manifest_at(self._resolve_ref(snapshot_id))
-        schema = TableSchema(**m["schema"])
-        entries = [e for es in m["files"].values() for e in es]
-        df = self._read_files(entries, schema)
-        if df is None:
-            return self.spark.createDataFrame([], schema.to_struct())
-        if any(e.get("kind") == "delta" for e in entries):
-            df = self._collapse_rows(df, schema.names())
-        return df.filter(~F.col(SYS_DELETED)).select(*schema.names())
+        names = TableSchema(**m["schema"]).names()
+        return self.read_full(manifest=m).filter(~F.col(SYS_DELETED)).select(*names)
 
     @staticmethod
     def _changed_buckets(m_from: dict, m_to: dict) -> list[int]:
@@ -2152,7 +1981,7 @@ class ParquetSnapshotTableIO:
             df = self._read_files(entries, schema)
             if df is None:
                 return None
-            return self._collapse_rows(df, names)
+            return self._collapse_rows(df)
 
         old, new = _state(m_from), _state(m_to)
         empty = self.spark.createDataFrame(

@@ -1,6 +1,6 @@
-"""Arrow-native minor compaction (_arrow_fold_bucket) must be
-indistinguishable from the Spark fold: same table state, same manifest
-stats, same downstream major-fold result."""
+"""Arrow-native folds (_arrow_fold_bucket) must be indistinguishable from
+the Spark fold: same table state, same manifest stats, same downstream
+major-fold result."""
 
 from __future__ import annotations
 
@@ -8,10 +8,12 @@ import os
 
 import pandas as pd
 import pyspark.sql.types as T
+import pytest
 
 from pentaho_kettle_spark.cdc.changelog import CHANGELOG_SCHEMA
 from pentaho_kettle_spark.cdc.replay import replay_changelog
 from pentaho_kettle_spark.fixtures import gen_changelog, pandas_oracle_apply
+from pentaho_kettle_spark.tableio import parquet_snapshot
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
 DATA_SCHEMA = T.StructType(
@@ -134,13 +136,19 @@ def test_arrow_major_fold_matches_spark(spark, tmp_path):
         assert ma[b][0]["rows"] == ms[b][0]["rows"]
 
 
-def test_arrow_major_fold_size_guard_routes_to_spark(spark, tmp_path, monkeypatch):
-    """Buckets above $PKS_ARROW_FOLD_MAX_BYTES must take the Spark path
-    (driver memory stays bounded) — and still fold correctly."""
-    monkeypatch.setenv("PKS_ARROW_FOLD_MAX_BYTES", "1")  # force everything big
+@pytest.mark.parametrize("fold", ["compact", "compact_minor"])
+def test_arrow_major_fold_size_guard_routes_to_spark(spark, tmp_path, monkeypatch, fold):
+    """Buckets above ARROW_FOLD_MAX_BYTES must take the Spark path on both
+    folds (driver memory stays bounded) — and still fold correctly."""
+    monkeypatch.setattr(parquet_snapshot, "ARROW_FOLD_MAX_BYTES", 1)  # force everything big
+
+    def _no_arrow(*a, **k):
+        raise AssertionError("an oversized bucket reached the arrow kernel")
+
+    monkeypatch.setattr(parquet_snapshot, "_arrow_fold_bucket", _no_arrow)
     pdf = gen_changelog(4000, 200, seed=23)
     t = _ingest(spark, str(tmp_path / "big"), pdf)
-    done = t.compact(engine="arrow")
+    done = getattr(t, fold)(engine="arrow")
     assert done
     oracle = (
         pandas_oracle_apply(pdf)
@@ -149,16 +157,18 @@ def test_arrow_major_fold_size_guard_routes_to_spark(spark, tmp_path, monkeypatc
     pd.testing.assert_frame_equal(_sorted_pdf(t.read())[oracle.columns], oracle)
 
 
-def test_arrow_distributed_minor_fold_matches_thread_path(spark, tmp_path):
+@pytest.mark.parametrize("fold", ["compact_minor", "compact"])
+def test_arrow_distributed_minor_fold_matches_thread_path(spark, tmp_path, fold):
     """engine="arrow-distributed" (per-bucket folds as Spark tasks) must be
-    indistinguishable from the driver-thread arrow path: same due buckets,
-    same table state, same per-bucket manifest stats."""
+    indistinguishable from the driver-thread arrow path on the minor and the
+    major fold: same due buckets, same table state, same per-bucket
+    manifest stats."""
     pdf = gen_changelog(8000, 400, seed=11)
     td = _ingest(spark, str(tmp_path / "dist"), pdf)
     ta = _ingest(spark, str(tmp_path / "arrow"), pdf)
 
-    done_d = td.compact_minor(engine="arrow-distributed")
-    done_a = ta.compact_minor(engine="arrow")
+    done_d = getattr(td, fold)(engine="arrow-distributed")
+    done_a = getattr(ta, fold)(engine="arrow")
     assert done_d == done_a and done_d
 
     got_d, got_a = _sorted_pdf(td.read()), _sorted_pdf(ta.read())
@@ -170,9 +180,10 @@ def test_arrow_distributed_minor_fold_matches_thread_path(spark, tmp_path):
     pd.testing.assert_frame_equal(got_d[oracle.columns], oracle)
 
     md, ma = td.current_manifest()["files"], ta.current_manifest()["files"]
+    kind = "delta" if fold == "compact_minor" else "base"
     for b in map(str, done_d):
-        ed = [e for e in md[b] if e["kind"] == "delta"]
-        ea = [e for e in ma[b] if e["kind"] == "delta"]
-        assert len(ed) == len(ea) == 1  # k deltas folded to ONE
+        ed = [e for e in md[b] if e["kind"] == kind]
+        ea = [e for e in ma[b] if e["kind"] == kind]
+        assert len(ed) == len(ea) == 1  # k files folded to ONE
         for stat in ("rows", "del_rows", "lww_min", "lww_max", "schema_version"):
             assert ed[0].get(stat) == ea[0].get(stat), (b, stat, ed, ea)

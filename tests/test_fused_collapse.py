@@ -52,6 +52,15 @@ def test_fused_plan_single_exchange(spark):
     assert (
         _n_exchanges(lww_collapse_bucketed(log, n_buckets=8, n_salts=4)) == 2
     )
+    # every other collapse shape, pinned: key-partitioned one exchange;
+    # salted two-phase two, with or without the bucket fusion ...
+    hot = [tuple(r) for r in pdf[["conv_id", "turn_idx"]].drop_duplicates().head(3).itertuples(index=False)]
+    assert _n_exchanges(lww_collapse(log)) == 1
+    assert _n_exchanges(lww_collapse(log, n_salts=4, hot_keys=hot)) == 2
+    assert _n_exchanges(lww_collapse_bucketed(log, n_buckets=8, n_salts=4, hot_keys=hot)) == 2
+    # ... and an empty hot list means no salt: single-phase on every shape
+    assert _n_exchanges(lww_collapse(log, n_salts=4, hot_keys=[])) == 1
+    assert _n_exchanges(lww_collapse_bucketed(log, n_buckets=8, n_salts=4, hot_keys=[])) == 1
     # the unfused pipeline this replaces: collapse exchange + write restage
     unfused = lww_collapse(log).withColumn(
         "_bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(8)).cast("int")

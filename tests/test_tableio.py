@@ -7,6 +7,7 @@ import datetime as dt
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+import pytest
 
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
@@ -268,6 +269,38 @@ def test_read_key_point_lookup_scans_one_bucket(spark, tmp_path):
     assert any("conv_id" in f for f in pushed_filters(df))
     # the tombstoned turn is suppressed; the conversation's other turns live
     assert {r.turn_idx for r in t.read_key("c9").collect()} == {1, 2}
+
+
+@pytest.mark.parametrize("key_type", ["int", "bigint"])
+def test_read_key_numeric_key_hits_one_bucket(spark, tmp_path, key_type):
+    """read_key on a table whose first key column is numeric: xxhash64 is
+    type-sensitive, so the lookup literal must be hashed under the column's
+    own type to land in the bucket the writer chose."""
+    t = ParquetSnapshotTableIO(
+        spark, str(tmp_path / key_type), key_cols=("cid", "turn_idx"),
+        n_buckets=8, write_mode="mor", compact_delta_files=None,
+    )
+    t.init_empty(T.StructType([
+        T.StructField("cid", T.IntegerType() if key_type == "int" else T.LongType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ]))
+    schema = f"cid {key_type}, turn_idx int, text string, ts timestamp, op string, _seq long"
+    rows = [(c, i, f"t{c}.{i}", _ts("2026-01-01T00:00:01"), "U", c * 10 + i)
+            for c in range(40) for i in range(2)]
+    t.merge_apply(spark.createDataFrame(rows, schema), "b1")
+    t.merge_apply(spark.createDataFrame(
+        [(7, 1, "t7.1-new", _ts("2026-01-01T00:00:09"), "U", 900)], schema), "b2")
+
+    got = sorted((r.cid, r.turn_idx, r.text) for r in t.read_key(7).collect())
+    assert got == [(7, 0, "t7.0"), (7, 1, "t7.1-new")]
+    # exactly the files of the key's own bucket were scanned
+    m = t.current_manifest()
+    b = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(7).cast(key_type)), F.lit(8)).alias("b")
+    ).first()["b"]
+    assert t.last_scan["files_total"] == len(m["files"][str(b)])
 
 
 def test_branch_write_audit_publish(spark, tmp_path):
