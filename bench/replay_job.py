@@ -31,9 +31,6 @@ def main() -> None:
     # argv[7]: CompactionPolicy.stagger — phase-shift per-bucket fold
     # thresholds so the first major-fold wave spreads over several batches
     stagger = int(sys.argv[7]) if len(sys.argv) > 7 else 0
-    # argv[8]: minor-compaction engine — "spark" (one job folds due
-    # buckets) or "arrow" (driver-thread pyarrow kernels, zero JVM traffic)
-    minor_engine = sys.argv[8] if len(sys.argv) > 8 else "spark"
     spark = SparkSession.builder.getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # smaller scan splits: the default 128MB leaves the changelog scan with
@@ -86,7 +83,7 @@ def main() -> None:
 
     table = ParquetSnapshotTableIO(
         spark, root + "/t", n_buckets=32, write_mode=mode,
-        compact_delta_files=None, minor_compaction_engine=minor_engine,
+        compact_delta_files=None,
     )
     table.init_empty(data_schema)
     sched = CompactionScheduler(
@@ -119,7 +116,6 @@ def main() -> None:
                 "parallelism": parallelism,
                 "shuffle_partitions": shuffle_parts,
                 "mode": mode,
-                "minor_engine": minor_engine,
                 "batch_secs": batch_secs,
             },
             f,

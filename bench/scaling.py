@@ -108,10 +108,7 @@ def run_once(cores: int, log_dir: str, batches: int, zip_path: str, tag: str) ->
         # stagger=3 phase-shifts per-bucket fold thresholds so the first
         # major-fold wave spreads over ~4 batches (A/B: tail max/median
         # 1.17 vs 2.4-4.2, +15% median at 32c — BENCH/BASELINE.md r4)
-        # arrow = minor folds run as pyarrow kernels on driver threads (no
-        # Spark job, no JVM memory traffic): +16% median at 32c, 8c tie
-        # (BENCH/arrow_minor_ab_{32,8}c.json, round 5)
-        log_dir, str(batches), "auto", out_json, "mor", "0.25", "3", "arrow",
+        log_dir, str(batches), "auto", out_json, "mor", "0.25", "3",
     ]
     subprocess.run(cmd, check=True, capture_output=True, text=True)
     with open(out_json) as f:

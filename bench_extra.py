@@ -144,7 +144,7 @@ def run_cdc(which):
             root = tempfile.mkdtemp(prefix="pks_x_mor_", dir=TMP_BASE)
             table = ParquetSnapshotTableIO(
                 spark, root + "/t", n_buckets=32, write_mode="mor",
-                compact_delta_files=None, minor_compaction_engine="arrow",
+                compact_delta_files=None,
             )
             table.init_empty(sch)
             sched = CompactionScheduler(

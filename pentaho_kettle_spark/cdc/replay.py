@@ -18,6 +18,9 @@ from pentaho_kettle_spark.cdc.changelog import read_changelog
 from pentaho_kettle_spark.cdc.schema_evolution import evolve_and_conform
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
+# MoR batches in flight at once during a replay (see replay_changelog)
+REPLAY_PIPELINE = 4
+
 
 def replay_changelog(
     spark: SparkSession,
@@ -119,26 +122,16 @@ def replay_changelog(
     # compute concurrently and back-fill each other's stage tails and
     # driver-side commit gaps; LWW makes the result identical under any
     # completion order, and the committed-batch manifest keeps resume
-    # exactly-once either way. Depth 4 by default ($PKS_REPLAY_PIPELINE;
-    # interleaved A/B r6: depth 4 = 2.4-2.7s vs depth 2 = 2.9-3.7s on the
-    # 2M-event replay — the batch jobs don't saturate the cores, so deeper
-    # overlap fills the gaps; a latency-sensitive deployment can set 1-2 to
-    # bound in-flight memory and commit-lag variance). CoW batches stay
-    # sequential — two concurrent CoW merges over the same buckets would
-    # just livelock the conflict-retry loop — as do crash-simulation runs
-    # (stop_after_batch).
-    import os as _os
-
-    depth = int(_os.environ.get("PKS_REPLAY_PIPELINE", "4"))
-    if (
-        table.write_mode == "mor"
-        and stop_after_batch is None
-        and n_batches > 1
-        and depth > 1
-    ):
+    # exactly-once either way. Depth REPLAY_PIPELINE = 4 (interleaved A/B
+    # r6: depth 4 = 2.4-2.7s vs depth 2 = 2.9-3.7s on the 2M-event replay —
+    # the batch jobs don't saturate the cores, so deeper overlap fills the
+    # gaps). CoW batches stay sequential — two concurrent CoW merges over
+    # the same buckets would just livelock the conflict-retry loop — as do
+    # crash-simulation runs (stop_after_batch).
+    if table.write_mode == "mor" and stop_after_batch is None and n_batches > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=depth) as pool:
+        with ThreadPoolExecutor(max_workers=REPLAY_PIPELINE) as pool:
             futs = [pool.submit(_apply, i) for i in range(n_batches)]
             return [f.result() for f in futs]
 

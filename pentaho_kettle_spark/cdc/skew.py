@@ -8,10 +8,13 @@ and salt only those, leaving the cold majority on the single-shuffle path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# should_salt's bounds: a hot key must exceed SALT_SKEW_FACTOR × the average
+# task's rows AND this many rows per batch before salting pays
+SALT_MIN_KEY_ROWS = 100_000
+SALT_SKEW_FACTOR = 4.0
 
 
 def hot_key_counts(
@@ -20,14 +23,15 @@ def hot_key_counts(
     sample_fraction: float = 0.01,
     hot_threshold_share: float = 0.001,
     max_hot_keys: int = 1000,
-) -> tuple[list, int]:
+) -> tuple[list, int, float]:
     """Sampled hot-key candidates WITH their sampled counts.
 
-    Returns (rows, sampled_total) where rows is a ≤ max_hot_keys list of
-    Rows(key_cols..., count) ordered hottest-first and sampled_total is the
-    sample's event count — enough for a caller to estimate each key's true
-    volume (count / sampled_total × total events) and decide whether salting
-    is worth its extra exchange (see `should_salt`).
+    Returns (rows, sampled_total, fraction) where rows is a ≤ max_hot_keys
+    list of Rows(key_cols..., count) ordered hottest-first, sampled_total is
+    the sample's event count and fraction the share of the log actually
+    sampled — enough for a caller to estimate each key's true volume
+    (count / fraction) and decide whether salting is worth its extra
+    exchange (see `should_salt`).
     """
     key_cols = key_cols or ["conv_id", "turn_idx"]
     # Fast path: when the log is a plain parquet scan, sample a bounded set
@@ -57,7 +61,7 @@ def hot_key_counts(
         .limit(max_hot_keys)
         .collect()
     )
-    return rows, sampled_total
+    return rows, sampled_total, sample_fraction
 
 
 def _arrow_key_sample(
@@ -66,11 +70,12 @@ def _arrow_key_sample(
     hot_threshold_share: float,
     max_hot_keys: int,
     target_rows: int = 250_000,
-) -> tuple[list, int] | None:
+) -> tuple[list, int, float] | None:
     """Driver-side hot-key sample from evenly-spaced parquet row groups.
-    Returns (rows, sampled_total) shaped like the Spark path (each row
-    supports r[key] and r["count"]), or None when the plan is not a plain
-    parquet scan / pyarrow can't serve it."""
+    Returns (rows, sampled_total, fraction) shaped like the Spark path (each
+    row supports r[key] and r["count"]; fraction = sampled rows / the
+    footers' row total), or None when the plan is not a plain parquet scan /
+    pyarrow can't serve it."""
     try:
         files = events.inputFiles()
         # only safe when the DataFrame IS the bare scan: any Project/Filter
@@ -101,8 +106,9 @@ def _arrow_key_sample(
     if not groups:
         return None
     # evenly-spaced subset until the row target is met
+    total_rows = sum(r for _, _, r in groups)
     want = max(1, min(len(groups), round(
-        target_rows / max(sum(r for _, _, r in groups) / len(groups), 1)
+        target_rows / max(total_rows / len(groups), 1)
     )))
     step = max(1, len(groups) // want)
     picked = groups[::step][:want]
@@ -119,7 +125,7 @@ def _arrow_key_sample(
     pdf = pd.concat(parts, ignore_index=True)
     sampled_total = len(pdf)
     if sampled_total == 0:
-        return [], 0
+        return [], 0, 1.0
     counts = pdf.groupby(key_cols, dropna=False).size().sort_values(ascending=False)
     thresh = max(int(hot_threshold_share * sampled_total), 2)
     def _native(x):
@@ -135,7 +141,7 @@ def _arrow_key_sample(
         }
         for k, v_cnt in counts[counts >= thresh].head(max_hot_keys).items()
     ]
-    return rows, sampled_total
+    return rows, sampled_total, sampled_total / total_rows
 
 
 def should_salt(
@@ -144,8 +150,6 @@ def should_salt(
     sample_fraction: float = 0.01,
     n_batches: int = 1,
     n_partitions: int = 32,
-    min_key_rows: int | None = None,
-    skew_factor: float = 4.0,
 ) -> bool:
     """Decide whether the salted two-phase collapse pays for itself.
 
@@ -155,21 +159,21 @@ def should_salt(
     prevents is cheaper than the exchange it adds (measured r6: the always-
     salt plan was +0.3-0.4s per 567k-row batch when the hottest key held
     0.5% of events). Rule: salt iff the hottest key's estimated rows per
-    batch exceed BOTH `skew_factor` × the average task's rows AND an
-    absolute floor ($PKS_SALT_MIN_KEY_ROWS, default 100k — below it even a
-    10× relative skew clears one task in well under a second). A genuinely
-    hot key at cluster scale (≥0.1% of a 10^8-row batch) trips both bounds
-    and keeps the guaranteed two-phase plan the north_rule asks for.
+    batch exceed BOTH SALT_SKEW_FACTOR × the average task's rows AND an
+    absolute floor (SALT_MIN_KEY_ROWS — below it even a 10× relative skew
+    clears one task in well under a second). A genuinely hot key at cluster
+    scale (≥0.1% of a 10^8-row batch) trips both bounds and keeps the
+    guaranteed two-phase plan the north_rule asks for. `sample_fraction`
+    is the share of the log the sample covers (hot_key_counts' third
+    value), so the log size estimate is sampled_total / sample_fraction.
     """
     if not rows or not sampled_total:
         return False
-    if min_key_rows is None:
-        min_key_rows = int(os.environ.get("PKS_SALT_MIN_KEY_ROWS", "100000"))
     est_total = sampled_total / max(sample_fraction, 1e-9)
     est_batch = est_total / max(n_batches, 1)
     top_rows = rows[0]["count"] / sampled_total * est_batch
     avg_task_rows = est_batch / max(n_partitions, 1)
-    return top_rows > max(min_key_rows, skew_factor * avg_task_rows)
+    return top_rows > max(SALT_MIN_KEY_ROWS, SALT_SKEW_FACTOR * avg_task_rows)
 
 
 def skewed_keys(
@@ -182,8 +186,8 @@ def skewed_keys(
     the sampled hot keys as key tuples when salting pays for its second
     exchange (`should_salt`), else None. The ≤1000-entry list compiles into
     the collapse plan as a literal IN-set — no per-batch join."""
-    rows, sampled_total = hot_key_counts(events, key_cols=key_cols)
-    if not should_salt(rows, sampled_total, n_batches=n_batches,
+    rows, sampled_total, fraction = hot_key_counts(events, key_cols=key_cols)
+    if not should_salt(rows, sampled_total, fraction, n_batches=n_batches,
                        n_partitions=n_partitions):
         return None
     return [tuple(r[k] for k in key_cols) for r in rows]
@@ -201,7 +205,7 @@ def detect_hot_keys(
     Returns a SMALL DataFrame (≤ max_hot_keys rows) suitable for broadcast.
     """
     key_cols = key_cols or ["conv_id", "turn_idx"]
-    rows, _total = hot_key_counts(
+    rows, _total, _fraction = hot_key_counts(
         events, key_cols, sample_fraction, hot_threshold_share, max_hot_keys
     )
     spark = events.sparkSession

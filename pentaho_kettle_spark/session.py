@@ -44,12 +44,11 @@ def get_spark(
         # the isolated bucket WRITE (1.0-1.15s vs 1.2-1.5s, 17MB vs 25MB)
         # but the full MoR replay — which also reads every delta back into
         # the compaction folds — is consistently ~12% slower under zstd
-        # (6.6-6.8s vs 5.9-6.0s interleaved full-bench), so snappy stays
-        # the default. On real clusters where storage bytes dominate, set
-        # PKS_PARQUET_CODEC=zstd (guide §6's recommendation for that
-        # regime).
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("PKS_PARQUET_CODEC", "snappy"))
+        # (6.6-6.8s vs 5.9-6.0s interleaved full-bench), so snappy it is.
+        # On real clusters where storage bytes dominate, pass
+        # extra_conf={"spark.sql.parquet.compression.codec": "zstd"}
+        # (applied last, so it wins).
+        .config("spark.sql.parquet.compression.codec", "snappy")
         # INT64 micros, not legacy INT96: INT96 carries no footer min/max
         # statistics, which the table IO's lww_after file pruning reads;
         # micros is also Iceberg's on-disk timestamp representation

@@ -9,8 +9,8 @@ rewrite_data_files maintenance job / Hudi's async compactor). This module is
 that job:
 
   * `CompactionPolicy` — pure function over a manifest: which buckets are
-    due. Triggers on delta-file count and/or delta-row share, so a hot
-    bucket compacts often and a cold one never does.
+    due. Triggers on delta-file count, so a hot bucket compacts often and a
+    cold one never does.
   * `run_compaction_cycle` — one policy evaluation + compact() call; use
     from a cron/Airflow-style external scheduler at cluster scale.
   * `CompactionScheduler` — in-process background thread driving cycles on
@@ -34,26 +34,17 @@ from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
 @dataclass
 class CompactionPolicy:
-    """A bucket is due when EITHER bound is exceeded (None disables one).
+    """A bucket is due when it carries more than `max_delta_files` delta
+    files."""
 
-    `max_buckets_per_cycle` caps how many buckets one cycle folds, most-
-    urgent first (by delta-file count, then delta rows). Without a cap,
-    uniformly-loaded tables make ALL buckets come due in the same cycle —
-    one giant fold job that lands on top of an ingest batch and doubles its
-    latency (the p99 spike a 100-TB ingest can't afford). With a cap, fold
-    work spreads across cycles at the same total throughput; the overdue
-    tail is bounded because each cycle retires the worst offenders first."""
-
-    max_delta_files: int | None = 8
-    max_delta_row_share: float | None = None  # delta rows / total rows in bucket
-    max_buckets_per_cycle: int | None = None
+    max_delta_files: int = 8
     # Phase-shift each bucket's delta-count threshold by (bucket mod
     # (stagger+1)): with uniform ingest every bucket gains one delta per
     # batch, so all n_buckets cross the SAME threshold in the same cycle and
     # the first major-fold wave lands on one batch — the measured 32-stream
     # batch-tail spike. stagger=k splits that wave into k+1 sub-waves one
     # batch apart, at the cost of ≤k extra delta files on the later buckets.
-    # Unlike max_buckets_per_cycle (measured and rejected: deferred buckets
+    # Unlike a per-cycle bucket cap (measured and rejected: deferred buckets
     # re-fold as deltas keep arriving), staggering never folds a bucket
     # twice for one wave — it only moves each bucket's fold earlier/later.
     stagger: int = 0
@@ -67,28 +58,14 @@ class CompactionPolicy:
     major_min_delta_share: float | None = None
 
     def plan(self, manifest: dict) -> dict[str, list[int]]:
-        """{'major': [...], 'minor': [...]} buckets due, urgency-ranked."""
-        major: list[tuple[int, int, int]] = []  # (n_deltas, delta_rows, bucket)
+        """{'major': [...], 'minor': [...]} buckets due, in bucket order."""
+        major: list[int] = []
         minor: list[int] = []
         for b, entries in manifest.get("files", {}).items():
             deltas = [e for e in entries if e.get("kind") == "delta"]
-            if not deltas:
+            if len(deltas) <= self.max_delta_files + int(b) % (self.stagger + 1):
                 continue
-            total = sum(e["rows"] for e in entries) or 1
-            drows = sum(e["rows"] for e in deltas)
-            share = drows / total
-            due_files = self.max_delta_files
-            if due_files is not None and self.stagger:
-                due_files = due_files + int(b) % (self.stagger + 1)
-            urgent = (
-                due_files is not None
-                and len(deltas) > due_files
-            ) or (
-                self.max_delta_row_share is not None
-                and share > self.max_delta_row_share
-            )
-            if not urgent:
-                continue
+            share = sum(e["rows"] for e in deltas) / (sum(e["rows"] for e in entries) or 1)
             if (
                 self.major_min_delta_share is not None
                 and share < self.major_min_delta_share
@@ -96,12 +73,8 @@ class CompactionPolicy:
                 if len(deltas) > 1:  # merging one file is a no-op
                     minor.append(int(b))
             else:
-                major.append((len(deltas), drows, int(b)))
-        major.sort(reverse=True)  # most deltas / most delta rows first
-        picked = [b for _, _, b in major]
-        if self.max_buckets_per_cycle is not None:
-            picked = picked[: self.max_buckets_per_cycle]
-        return {"major": sorted(picked), "minor": sorted(minor)}
+                major.append(int(b))
+        return {"major": sorted(major), "minor": sorted(minor)}
 
     def buckets_due(self, manifest: dict) -> list[int]:
         p = self.plan(manifest)

@@ -59,8 +59,8 @@ SYS_COLS = (SYS_SEQ, SYS_DELETED)
 # normal grace-aged orphan path.
 INFLIGHT_TTL = 6 * 3600.0
 
-# An arrow fold (driver thread or executor task) holds a bucket's pinned
-# files in memory; buckets above this size keep the Spark fold.
+# The arrow fold holds a bucket's pinned files in driver memory; buckets
+# above this size take the Spark fold.
 ARROW_FOLD_MAX_BYTES = 256 * 1024 * 1024
 
 import re as _re
@@ -254,11 +254,6 @@ def _arrow_fold_bucket(
     `w-<uuid>/_bucket=<b>/` layout as a Spark write and its manifest entry
     carries the same footer-derived stats, so readers cannot tell which
     engine folded.
-
-    Pure function of (root, entries) — safe to ship to executors via
-    `sc.parallelize(buckets).map(...)` for the cluster-scale distributed
-    variant (engine="arrow" runs driver-side threads, which is the right
-    shape for a single-driver deployment and this sandbox).
     """
     import numpy as np
     import pyarrow as pa
@@ -341,11 +336,16 @@ class ParquetSnapshotTableIO:
         n_buckets: int = 16,
         write_mode: str = "cow",  # "cow" rewrite-on-merge | "mor" append deltas
         compact_delta_files: int = 16,  # mor: compact a bucket past this many deltas
-        sort_on_write: bool = False,  # cluster rows by key within bucket files
-        minor_compaction_engine: str = "spark",  # fold engine, "spark" |
-        # "arrow" | "arrow-distributed" — applies to minor folds
-        # (compact_minor) and major folds (compact) alike (see _fold)
+        # accepted only because bench.py and perfbench/workloads.py pass
+        # "arrow"; remove it together with their argument when the benchmark
+        # is next revised
+        minor_compaction_engine: str = "arrow",
     ):
+        if minor_compaction_engine != "arrow":
+            raise ValueError(
+                f"minor_compaction_engine={minor_compaction_engine!r}: the fold "
+                "engine is now chosen per bucket (see _fold); omit the argument"
+            )
         self.spark = spark
         self.root = root
         self.key_cols = list(key_cols)
@@ -353,15 +353,6 @@ class ParquetSnapshotTableIO:
         self.n_buckets = n_buckets
         self.write_mode = write_mode
         self.compact_delta_files = compact_delta_files
-        # Iceberg sort-order analog: sortWithinPartitions(key) before the
-        # parquet write — an in-memory per-partition sort (no extra
-        # exchange) that clusters each bucket file's row groups into tight
-        # key ranges, so point lookups (read_key) and key-range predicates
-        # skip row groups via min/max stats. Off by default: the sort buys
-        # nothing for full-bucket collapse reads, which is the ingest hot
-        # path; turn it on for serving-heavy tables.
-        self.sort_on_write = sort_on_write
-        self.minor_compaction_engine = minor_compaction_engine
         # serializes manifest commits so an async compactor and the ingest
         # writer can't lose each other's updates (the in-process reduction of
         # Iceberg's optimistic-concurrency commit loop — all writers share
@@ -768,13 +759,6 @@ class ParquetSnapshotTableIO:
             staged = df.withColumn(
                 "_bucket", bucket_expr(self.key_cols[0], self.n_buckets)
             ).repartition(self.n_buckets, "_bucket")
-        if self.sort_on_write:
-            # per-partition sort only — preserves the bucket partitioning,
-            # adds no exchange. "_bucket" leads the order: partitionBy
-            # requires rows sorted by the partition column per task, and if
-            # that requirement isn't already satisfied the writer inserts
-            # its OWN sort by (_bucket) alone, clobbering the key order.
-            staged = staged.sortWithinPartitions("_bucket", *self.key_cols)
         staged.write.mode("overwrite").partitionBy("_bucket").parquet(outdir)
         self._refresh_markers()  # long write done — restart the TTL clock
         files: dict[str, list[dict]] = {}
@@ -1024,7 +1008,6 @@ class ParquetSnapshotTableIO:
         changes: DataFrame,
         batch_id: str | None = None,
         seq_high_watermark: int | None = None,
-        mode: str | None = None,
         assume_collapsed: bool = False,
     ) -> dict:
         """Apply changes (cols = data cols + `op` in {U, D} + SYS_SEQ) with
@@ -1054,7 +1037,7 @@ class ParquetSnapshotTableIO:
             raise RuntimeError("table not initialized; call init_empty/overwrite first")
         if batch_id is not None and batch_id in set(m["committed_batches"]):
             return {"skipped_duplicate_batch": batch_id}
-        if (mode or self.write_mode) == "mor":
+        if self.write_mode == "mor":
             return self._merge_apply_mor(changes, m, batch_id, seq_high_watermark)
 
         schema = TableSchema(**m["schema"])
@@ -1358,15 +1341,13 @@ class ParquetSnapshotTableIO:
                 lineage_rec["compacted_buckets"] = over
         return lineage_rec
 
-    def compact(
-        self, buckets: list[int] | None = None, engine: str | None = None
-    ) -> list[int]:
+    def compact(self, buckets: list[int] | None = None) -> list[int]:
         """MAJOR compaction: fold every file of the given buckets (all with
         deltas if None) — base ∪ deltas — into ONE new base file per bucket.
         Tombstones are kept (expire_tombstones drops them under a watermark
-        policy). See `_fold` for `engine` and the concurrency contract.
-        Returns the buckets actually compacted."""
-        return self._fold(buckets, engine, "base", "compact")
+        policy). See `_fold` for the engine choice and the concurrency
+        contract. Returns the buckets actually compacted."""
+        return self._fold(buckets, "base", "compact")
 
     def rebucket(self, n_buckets: int) -> dict:
         """Bucket-layout evolution (Iceberg partition-spec-evolution-with-
@@ -1419,9 +1400,7 @@ class ParquetSnapshotTableIO:
         return {"snapshot_id": committed["snapshot_id"],
                 "from_buckets": old_n, "to_buckets": n_new}
 
-    def compact_minor(
-        self, buckets: list[int] | None = None, engine: str | None = None
-    ) -> list[int]:
+    def compact_minor(self, buckets: list[int] | None = None) -> list[int]:
         """MINOR compaction: merge each bucket's delta files into ONE delta
         file — WITHOUT reading the base. Reads O(delta rows), not O(bucket
         rows), so it is the cheap fold for big buckets with small deltas
@@ -1435,38 +1414,23 @@ class ParquetSnapshotTableIO:
         rows). Read amplification drops from k delta files per bucket to 1;
         the base rewrite is deferred until a MAJOR fold is actually worth
         its full-bucket read (CompactionPolicy decides which is due)."""
-        return self._fold(buckets, engine, "delta", "compact_minor")
+        return self._fold(buckets, "delta", "compact_minor")
 
-    def _fold(
-        self, buckets: list[int] | None, engine: str | None, kind: str, mode: str
-    ) -> list[int]:
+    def _fold(self, buckets: list[int] | None, kind: str, mode: str) -> list[int]:
         """The one fold behind compact() (kind "base": all entries of a
         bucket, written as base) and compact_minor() (kind "delta": delta
-        entries only, written as delta): pin → engine dispatch → per-bucket
-        Spark fallback → stale-pin-guarded commit, recorded in the lineage
-        under `mode`.
+        entries only, written as delta): pin → per-bucket engine → commit
+        through the stale-pin rule (_commit_rewrite), recorded in the
+        lineage under `mode`.
 
-        `engine` (default = the table's `minor_compaction_engine`):
-          * "spark" — one Spark job folds all due buckets (scan → collapse
-            exchange → write). Right when the pinned sets are large.
-          * "arrow" — a pyarrow kernel per bucket on driver threads
-            (_arrow_fold_bucket): no Spark job, no exchange, no JVM memory
-            traffic, so the fold stops competing with the ingest exchange
-            for memory bandwidth (the measured 32-stream bottleneck).
-          * "arrow-distributed" — the same pure per-bucket fold as one
-            Spark task per bucket over shared storage, for clusters whose
-            driver cores can't cover the fold fan-out (local deployments
-            keep "arrow": threads skip task scheduling and pickling).
-        On both arrow engines, buckets whose pinned files exceed
-        ARROW_FOLD_MAX_BYTES (driver/task memory stays bounded) and buckets
-        the kernel can't fold (mixed schema versions, exotic key types) take
-        the Spark path transparently.
-
-        Concurrency-safe against a live ingest writer: the fold reads a
-        pinned set of file entries, and the commit removes exactly those
-        paths from the *current* manifest — delta files appended while the
-        rewrite ran survive untouched (Iceberg RewriteFiles semantics)."""
-        engine = engine or self.minor_compaction_engine
+        The engine is decided per bucket from what the fold can see. A
+        bucket whose pinned files fit ARROW_FOLD_MAX_BYTES folds with the
+        pyarrow kernel on a driver thread pool (_arrow_fold_bucket): no
+        Spark job, no exchange, no JVM memory traffic, so the fold stops
+        competing with the ingest exchange for memory bandwidth (the
+        measured 32-stream bottleneck). Larger buckets, and buckets the
+        kernel rejects (mixed schema versions, key types pyarrow can't
+        group on), go to the one Spark fold (_rewrite)."""
         m = self.current_manifest()
         schema = TableSchema(**m["schema"])
         minor = kind == "delta"
@@ -1484,86 +1448,74 @@ class ParquetSnapshotTableIO:
         elif minor:
             buckets = [b for b in buckets if due(b)]
         # pin the exact entries being folded (not "whatever is current later")
-        pinned = {b: pick(b) for b in buckets}
-        folded_paths = {e["path"] for es in pinned.values() for e in es}
-        if not folded_paths:
+        pinned = {str(b): es for b in buckets if (es := pick(b))}
+        if not pinned:
             return []
 
         new_files: dict[str, list[dict]] = {}
-        spark_buckets = list(pinned)
-        if engine in ("arrow", "arrow-distributed"):
-            arrow = [b for b in pinned if pinned[b] and self._fits_arrow(pinned[b])]
-            spark_buckets = [b for b in pinned if b not in arrow]
-            if arrow:
-                outdir = self._new_write_dir()
-                # a pure closure over plain values: shipped to executors as
-                # is by the distributed engine
-                root, key_cols, lww_col = self.root, self.key_cols, self.lww_col
+        spark_buckets = [b for b in pinned if not self._fits_arrow(pinned[b])]
+        arrow = [b for b in pinned if b not in spark_buckets]
+        if arrow:
+            from concurrent.futures import ThreadPoolExecutor
 
-                def fold_one(item):
-                    b, entries = item
-                    try:
-                        return b, _arrow_fold_bucket(
-                            root, str(b), entries, key_cols, lww_col, outdir, kind
-                        )
-                    except _ArrowFoldUnsupported:
-                        return b, None
+            outdir = self._new_write_dir()
 
-                items = [(b, pinned[b]) for b in arrow]
-                if engine == "arrow-distributed":
-                    results = (
-                        self.spark.sparkContext.parallelize(items, len(items))
-                        .map(fold_one).collect()
-                    )
-                else:
-                    from concurrent.futures import ThreadPoolExecutor
+            def fold_one(b):
+                try:
+                    return b, _arrow_fold_bucket(self.root, b, pinned[b],
+                                                 self.key_cols, self.lww_col, outdir, kind)
+                except _ArrowFoldUnsupported:
+                    return b, None
 
-                    with ThreadPoolExecutor(max_workers=min(8, len(items))) as ex:
-                        results = list(ex.map(fold_one, items))
-                for b, entry in results:
+            with ThreadPoolExecutor(max_workers=min(8, len(arrow))) as ex:
+                for b, entry in ex.map(fold_one, arrow):
                     if entry is None:
                         spark_buckets.append(b)
                     else:
-                        new_files[str(b)] = [entry]
-        spark_entries = [e for b in spark_buckets for e in pinned[b]]
-        for b, es in self._rewrite(spark_entries, schema, kind).items():
-            new_files.setdefault(b, []).extend(es)
+                        new_files[b] = [entry]
+        if spark_buckets:
+            spark_entries = [e for b in spark_buckets for e in pinned[b]]
+            for b, es in self._rewrite(spark_entries, schema, kind).items():
+                new_files.setdefault(b, []).extend(es)
+        return self._commit_rewrite(pinned, new_files, {
+            "mode": mode, "folded_files": sum(map(len, pinned.values())),
+        })
 
+    def _commit_rewrite(self, pinned: dict[str, list[dict]],
+                        new_files: dict[str, list[dict]], record: dict) -> list[int]:
+        """Commit a rewrite of pinned per-bucket file sets (the folds,
+        expire_tombstones) under THE stale-pin rule, Iceberg RewriteFiles
+        semantics: a bucket takes the rewrite's output only if every path
+        pinned from it is still in it; the pinned paths are then replaced
+        and files appended meanwhile (a live writer's deltas) survive.
+        Otherwise the bucket stays exactly as committed — another fold
+        consumed a pinned file, a CoW merge rewrote the bucket, a rebucket
+        or rollback replaced it, or an expiry dropped it — and our output
+        ages out as a grace-period orphan: committing it would re-add rows
+        the winner already rewrote (duplicated or resurrected keys) or
+        bring back a bucket the layout no longer has. Returns the buckets
+        that took the output; `record` plus them goes into the lineage."""
+        if not set(new_files) <= set(pinned):
+            return []  # written under another bucket layout than pinned from
         done: list[int] = []
 
         def _mutate(cur: dict) -> dict:
             done.clear()
             files = {}
             for b, es in cur["files"].items():
-                cur_paths = {e["path"] for e in es}
-                pin = {e["path"] for e in pinned.get(int(b), [])}
-                # STALE-PIN guard (Iceberg RewriteFiles conflict rule): if
-                # another fold already consumed any of the entries this
-                # rewrite pinned, OUR rewrite of that bucket is based on a
-                # superseded file set — committing it would re-add rows the
-                # winning fold already rewrote (two base files per bucket =
-                # duplicated data; caught by the r6 pipelined-replay race).
-                # The bucket is left exactly as the winner committed it and
-                # our output file becomes a grace-aged orphan.
-                if int(b) in pinned and pin <= cur_paths:
-                    kept = [e for e in es if e["path"] not in folded_paths]
+                pin = {e["path"] for e in pinned.get(b, [])}
+                if pin and pin <= {e["path"] for e in es}:
                     # entry order in the manifest is irrelevant to readers —
                     # read_full collapses base ∪ deltas by LWW either way
-                    files[b] = new_files.get(b, []) + kept
+                    merged = new_files.get(b, []) + [e for e in es if e["path"] not in pin]
                     done.append(int(b))
+                    if merged:
+                        files[b] = merged
                 else:
                     files[b] = list(es)
-            for b, es in new_files.items():
-                if b not in files:
-                    files[b] = list(es)
-                    done.append(int(b))
             out = dict(cur)
             out["files"] = files
-            out["lineage"] = [*cur["lineage"], {
-                "mode": mode,
-                "compacted_buckets": sorted(done),
-                "folded_files": len(folded_paths),
-            }]
+            out["lineage"] = [*cur["lineage"], {**record, "compacted_buckets": sorted(done)}]
             return out
 
         self._commit_mutation(_mutate)
@@ -1596,43 +1548,26 @@ class ParquetSnapshotTableIO:
         watermark=None every tombstone is dropped (only safe once the stream
         is fully quiesced).
 
-        Concurrency-safe against a live ingest writer, RewriteFiles-style:
-        the rewrite folds a PINNED set of file entries, and the commit
-        replaces exactly those paths — delta files appended while the
+        Concurrency-safe against live writers, RewriteFiles-style: the
+        rewrite reads a PINNED set of file entries and commits through the
+        stale-pin rule (_commit_rewrite) — delta files appended while the
         rewrite ran survive untouched (readers keep collapsing the new base
-        with them by LWW)."""
+        with them by LWW), and a bucket a concurrent CoW merge rewrote keeps
+        that merge's files."""
         m = self.current_manifest()
         schema = TableSchema(**m["schema"])
-        entries = [e for es in m["files"].values() for e in es]
-        if not entries:
+        pinned = {b: es for b, es in m["files"].items() if es}
+        if not pinned:
             return
-        pinned = {e["path"] for e in entries}
         df = self.read_full(manifest=m)
         keep = ~F.col(SYS_DELETED)
         if watermark is not None:
             keep = keep | (F.col(self.lww_col) >= F.lit(watermark))
-        live = df.filter(keep)
-        files = self._write_buckets(live, schema.version)
-
-        def _mutate(cur: dict) -> dict:
-            out_files: dict[str, list[dict]] = {}
-            for b, es in cur["files"].items():
-                kept = [e for e in es if e["path"] not in pinned]
-                merged = files.get(b, []) + kept
-                if merged:
-                    out_files[b] = merged
-            for b, es in files.items():
-                if b not in out_files:
-                    out_files[b] = list(es)
-            out = dict(cur)
-            out["files"] = out_files
-            out["lineage"] = [*cur["lineage"], {
-                "mode": "expire_tombstones",
-                "watermark": None if watermark is None else str(watermark),
-            }]
-            return out
-
-        self._commit_mutation(_mutate)
+        files = self._write_buckets(df.filter(keep), schema.version)
+        self._commit_rewrite(pinned, files, {
+            "mode": "expire_tombstones",
+            "watermark": None if watermark is None else str(watermark),
+        })
 
     # ---------- time travel + snapshot/file maintenance ----------
 

@@ -1,6 +1,7 @@
 """Arrow-native folds (_arrow_fold_bucket) must be indistinguishable from
 the Spark fold: same table state, same manifest stats, same downstream
-major-fold result."""
+major-fold result. The fold picks its engine per bucket; a Spark-side
+reference is forced by setting ARROW_FOLD_MAX_BYTES to 0."""
 
 from __future__ import annotations
 
@@ -31,19 +32,27 @@ def _ingest(spark, root, pdf, **kw):
     return t
 
 
+def _spark_fold(monkeypatch, table, fold):
+    """Run `fold` ("compact" / "compact_minor") with every bucket routed to
+    the Spark fold."""
+    with monkeypatch.context() as mp:
+        mp.setattr(parquet_snapshot, "ARROW_FOLD_MAX_BYTES", 0)
+        return getattr(table, fold)()
+
+
 def _sorted_pdf(df):
     pdf = df.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     return pdf
 
 
-def test_arrow_minor_fold_matches_spark(spark, tmp_path):
+def test_arrow_minor_fold_matches_spark(spark, tmp_path, monkeypatch):
     pdf = gen_changelog(8000, 400, seed=11)
     ta = _ingest(spark, str(tmp_path / "arrow"), pdf)
     ts_ = _ingest(spark, str(tmp_path / "spark"), pdf)
 
-    done_a = ta.compact_minor(engine="arrow")
-    done_s = ts_.compact_minor(engine="spark")
+    done_a = ta.compact_minor()
+    done_s = _spark_fold(monkeypatch, ts_, "compact_minor")
     assert done_a == done_s and done_a  # same due buckets, something folded
 
     # table state identical to each other AND to the sequential oracle
@@ -66,7 +75,7 @@ def test_arrow_minor_fold_matches_spark(spark, tmp_path):
 
     # a later MAJOR fold over the arrow-written delta behaves identically
     ta.compact()
-    ts_.compact()
+    _spark_fold(monkeypatch, ts_, "compact")
     pd.testing.assert_frame_equal(_sorted_pdf(ta.read()), _sorted_pdf(ts_.read()))
     assert all(
         e["kind"] == "base"
@@ -98,8 +107,25 @@ def test_arrow_fold_after_schema_evolution_falls_back(spark, tmp_path):
         .withColumn("lang", F.lit("en"))
     )
     apply_batch(t, evolved, batch_id="e1")
-    done = t.compact_minor(engine="arrow")
+    # delta paths of every bucket whose deltas span schema versions
+    mixed = {
+        e["path"]
+        for es in t.current_manifest()["files"].values()
+        if len({e["schema_version"] for e in es if e["kind"] == "delta"}) > 1
+        for e in es if e["kind"] == "delta"
+    }
+    assert mixed
+    rewritten: set = set()
+    spark_rewrite = t._rewrite
+
+    def recording_rewrite(entries, schema, kind):
+        rewritten.update(e["path"] for e in entries)
+        return spark_rewrite(entries, schema, kind)
+
+    t._rewrite = recording_rewrite
+    done = t.compact_minor()
     assert done  # folded (via fallback where needed)
+    assert mixed <= rewritten, "a mixed-version bucket skipped the Spark fold"
     versions = {
         e["schema_version"]
         for es in t.current_manifest()["files"].values()
@@ -109,15 +135,15 @@ def test_arrow_fold_after_schema_evolution_falls_back(spark, tmp_path):
     assert t.read().count() > 0
 
 
-def test_arrow_major_fold_matches_spark(spark, tmp_path):
-    """compact(engine="arrow") — the r6 driver-side MAJOR fold — must leave
-    the same table state and manifest shape as the Spark rewrite."""
+def test_arrow_major_fold_matches_spark(spark, tmp_path, monkeypatch):
+    """The driver-side arrow MAJOR fold must leave the same table state and
+    manifest shape as the Spark rewrite."""
     pdf = gen_changelog(8000, 400, seed=17)
     ta = _ingest(spark, str(tmp_path / "arrow"), pdf)
     ts_ = _ingest(spark, str(tmp_path / "spark"), pdf)
 
-    done_a = ta.compact(engine="arrow")
-    done_s = ts_.compact(engine="spark")
+    done_a = ta.compact()
+    done_s = _spark_fold(monkeypatch, ts_, "compact")
     assert done_a == done_s and done_a
 
     got_a, got_s = _sorted_pdf(ta.read()), _sorted_pdf(ts_.read())
@@ -148,7 +174,7 @@ def test_arrow_major_fold_size_guard_routes_to_spark(spark, tmp_path, monkeypatc
     monkeypatch.setattr(parquet_snapshot, "_arrow_fold_bucket", _no_arrow)
     pdf = gen_changelog(4000, 200, seed=23)
     t = _ingest(spark, str(tmp_path / "big"), pdf)
-    done = getattr(t, fold)(engine="arrow")
+    done = getattr(t, fold)()
     assert done
     oracle = (
         pandas_oracle_apply(pdf)
@@ -157,33 +183,20 @@ def test_arrow_major_fold_size_guard_routes_to_spark(spark, tmp_path, monkeypatc
     pd.testing.assert_frame_equal(_sorted_pdf(t.read())[oracle.columns], oracle)
 
 
-@pytest.mark.parametrize("fold", ["compact_minor", "compact"])
-def test_arrow_distributed_minor_fold_matches_thread_path(spark, tmp_path, fold):
-    """engine="arrow-distributed" (per-bucket folds as Spark tasks) must be
-    indistinguishable from the driver-thread arrow path on the minor and the
-    major fold: same due buckets, same table state, same per-bucket
-    manifest stats."""
-    pdf = gen_changelog(8000, 400, seed=11)
-    td = _ingest(spark, str(tmp_path / "dist"), pdf)
-    ta = _ingest(spark, str(tmp_path / "arrow"), pdf)
+@pytest.mark.parametrize("fold", ["compact", "compact_minor"])
+def test_default_table_folds_small_buckets_on_arrow(spark, tmp_path, fold):
+    """A table built without any engine setting folds every bucket that fits
+    ARROW_FOLD_MAX_BYTES with the arrow kernel: the Spark fold never runs."""
+    pdf = gen_changelog(4000, 200, seed=23)
+    t = _ingest(spark, str(tmp_path / "t"), pdf)
 
-    done_d = getattr(td, fold)(engine="arrow-distributed")
-    done_a = getattr(ta, fold)(engine="arrow")
-    assert done_d == done_a and done_d
+    def _no_spark(*a, **k):
+        raise AssertionError("a small bucket reached the Spark fold")
 
-    got_d, got_a = _sorted_pdf(td.read()), _sorted_pdf(ta.read())
-    pd.testing.assert_frame_equal(got_d, got_a)
+    t._rewrite = _no_spark
+    assert getattr(t, fold)()
     oracle = (
         pandas_oracle_apply(pdf)
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(got_d[oracle.columns], oracle)
-
-    md, ma = td.current_manifest()["files"], ta.current_manifest()["files"]
-    kind = "delta" if fold == "compact_minor" else "base"
-    for b in map(str, done_d):
-        ed = [e for e in md[b] if e["kind"] == kind]
-        ea = [e for e in ma[b] if e["kind"] == kind]
-        assert len(ed) == len(ea) == 1  # k files folded to ONE
-        for stat in ("rows", "del_rows", "lww_min", "lww_max", "schema_version"):
-            assert ed[0].get(stat) == ea[0].get(stat), (b, stat, ed, ea)
+    pd.testing.assert_frame_equal(_sorted_pdf(t.read())[oracle.columns], oracle)

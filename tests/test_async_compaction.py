@@ -43,9 +43,6 @@ def test_policy_triggers_on_count_and_share():
         "2": [{"kind": "base", "rows": 1000}],
     }}
     assert CompactionPolicy(max_delta_files=2).buckets_due(manifest) == [0]
-    assert CompactionPolicy(
-        max_delta_files=None, max_delta_row_share=0.5
-    ).buckets_due(manifest) == [1]
     assert CompactionPolicy(max_delta_files=0).buckets_due(manifest) == [0, 1]
 
 
@@ -66,10 +63,6 @@ def test_policy_stagger_phase_shifts_thresholds():
     assert pol.buckets_due(manifest(6)) == [0, 1, 2, 3]
     # stagger=0 keeps the old single-wave behavior
     assert CompactionPolicy(max_delta_files=2).buckets_due(manifest(3)) == [0, 1, 2, 3]
-    # share trigger is unaffected by stagger
-    assert CompactionPolicy(
-        max_delta_files=None, max_delta_row_share=0.001, stagger=3
-    ).buckets_due(manifest(3)) == [0, 1, 2, 3]
 
 
 def test_manual_cycle_folds_deltas(spark, tmp_path):
@@ -144,24 +137,6 @@ def test_duplicate_batch_skipped_under_mutation_commit(spark, tmp_path):
     recs = replay_changelog(spark, table, log, n_batches=3, run_id="dup")
     assert all("skipped_duplicate_batch" in r for r in recs)
     assert table.snapshot_id() == sid
-
-
-def test_policy_per_cycle_cap_most_urgent_first():
-    from pentaho_kettle_spark.tableio.compaction import CompactionPolicy
-
-    manifest = {
-        "files": {
-            "0": [{"kind": "delta", "rows": 10}] * 3,
-            "1": [{"kind": "delta", "rows": 10}] * 7,
-            "2": [{"kind": "delta", "rows": 10}] * 5,
-            "3": [{"kind": "base", "rows": 100}],
-        }
-    }
-    p = CompactionPolicy(max_delta_files=2, max_buckets_per_cycle=2)
-    # buckets 1 (7 deltas) and 2 (5 deltas) are the most urgent
-    assert p.buckets_due(manifest) == [1, 2]
-    # uncapped: every bucket over the bound, in bucket order
-    assert CompactionPolicy(max_delta_files=2).buckets_due(manifest) == [0, 1, 2]
 
 
 def test_minor_compaction_merges_deltas_base_untouched(spark, tmp_path):

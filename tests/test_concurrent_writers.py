@@ -1,19 +1,26 @@
 """Concurrent-writer isolation: the CoW merge's optimistic commit loop and
-expire_tombstones' pinned-file-set rewrite.
+the stale-pin rule of pinned-file-set rewrites (folds, expire_tombstones).
 
-Both tests interleave a second writer deterministically by hooking the first
-writer's `_write_buckets` (data files are written OUTSIDE the commit lock, so
-this is exactly the window a real concurrent commit lands in). Before the
-fixes, writer B's commit was silently erased: the CoW merge swapped in a
-rewrite planned against a stale manifest, and expire_tombstones replaced the
-whole file map with its pre-rewrite view.
+The tests interleave a second writer deterministically by hooking the first
+writer's `_write_buckets` or `_new_write_dir` (data files are written OUTSIDE
+the commit lock, so this is exactly the window a real concurrent commit
+lands in). Before the fixes, writer B's commit was silently erased or
+doubled: the CoW merge swapped in a rewrite planned against a stale
+manifest; expire_tombstones first replaced the whole file map with its
+pre-rewrite view, then kept its output beside a concurrent CoW rewrite of
+the same bucket; and a fold re-added buckets a concurrent rebucket had
+removed.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
+from pentaho_kettle_spark.cdc.changelog import CHANGELOG_SCHEMA
+from pentaho_kettle_spark.cdc.replay import replay_changelog
+from pentaho_kettle_spark.fixtures import gen_changelog, pandas_oracle_apply
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
 SCHEMA = T.StructType([
@@ -37,21 +44,36 @@ def _changes(spark, rows):
     return spark.createDataFrame(rows, sch).select("k", "v", "ts", "op", "_seq")
 
 
-def _hook_first_write(t, fire):
-    """Run `fire()` once, right after t's first data-file write (i.e. inside
-    the pre-commit window), then restore normal behavior."""
-    orig = t._write_buckets
+def _hook_first_write(t, fire, method="_write_buckets"):
+    """Run `fire()` once, right after t's first call of `method` (a data
+    write or a write-dir allocation, i.e. inside the pre-commit window),
+    then restore normal behavior."""
+    orig = getattr(t, method)
     state = {"writes": 0}
 
-    def hooked(df, schema_version, kind="base"):
-        files = orig(df, schema_version, kind)
+    def hooked(*args, **kwargs):
+        out = orig(*args, **kwargs)
         state["writes"] += 1
         if state["writes"] == 1:
             fire()
-        return files
+        return out
 
-    t._write_buckets = hooked
+    setattr(t, method, hooked)
     return state
+
+
+def _assert_matches_oracle(table, pdf):
+    got = table.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    got["ts"] = got["ts"].astype("datetime64[us]")
+    exp = pandas_oracle_apply(pdf).sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    exp["ts"] = exp["ts"].astype("datetime64[us]")
+    assert len(exp) == 2782  # gen_changelog(4000, 200, seed=5)
+    pd.testing.assert_frame_equal(got[exp.columns], exp)
+
+
+_DATA_SCHEMA = T.StructType(
+    [f for f in CHANGELOG_SCHEMA.fields if f.name not in ("seq", "op", "ingest_ts")]
+)
 
 
 def test_cow_merge_retries_on_concurrent_commit(spark, tmp_path):
@@ -194,3 +216,57 @@ def test_commit_releases_only_own_threads_markers(spark, tmp_path):
     release.set()
     th.join(30)
     assert not os.path.exists(staged["marker"])  # A's own commit released it
+
+
+def test_fold_loses_to_concurrent_rebucket(spark, tmp_path):
+    """rebucket(4) from a second handle commits while compact() is mid-fold
+    on an 8-bucket MoR table. Every bucket the fold pinned was replaced
+    (0-3) or removed (4-7), so none may take the fold's output. Before the
+    stale-pin rule covered vanished buckets, 4-7 came back and read()
+    returned 4326 rows instead of the oracle's 2782."""
+    root = str(tmp_path / "fold_rebucket")
+    pdf = gen_changelog(4000, 200, seed=5)
+    t = ParquetSnapshotTableIO(spark, root, n_buckets=8, write_mode="mor",
+                               compact_delta_files=None)
+    t.init_empty(_DATA_SCHEMA)
+    replay_changelog(spark, t, spark.createDataFrame(pdf, schema=CHANGELOG_SCHEMA),
+                     n_batches=4, run_id="r")
+    other = ParquetSnapshotTableIO(spark, root, write_mode="mor",
+                                   compact_delta_files=None)
+
+    _hook_first_write(t, lambda: other.rebucket(4), method="_new_write_dir")
+    done = t.compact()
+
+    _assert_matches_oracle(t, pdf)
+    assert done == []
+    m = t.current_manifest()
+    assert m["n_buckets"] == 4 and set(m["files"]) <= {"0", "1", "2", "3"}
+
+
+def test_expire_tombstones_loses_to_concurrent_cow_merge(spark, tmp_path):
+    """A CoW batch from a second handle commits while expire_tombstones is
+    rewriting: the buckets the batch rewrote must keep the batch's files.
+    Before expire_tombstones committed through the stale-pin rule, both
+    versions of each such bucket stayed as base files and read() returned
+    4207 rows instead of the oracle's 2782."""
+    root = str(tmp_path / "expire_cow")
+    pdf = gen_changelog(4000, 200, seed=5)
+    cut = pdf["ingest_ts"].median()
+    early, late = pdf[pdf["ingest_ts"] <= cut], pdf[pdf["ingest_ts"] > cut]
+    t = ParquetSnapshotTableIO(spark, root, n_buckets=8, write_mode="cow")
+    t.init_empty(_DATA_SCHEMA)
+    replay_changelog(spark, t, spark.createDataFrame(early, schema=CHANGELOG_SCHEMA),
+                     n_batches=2, run_id="early")
+    other = ParquetSnapshotTableIO(spark, root, write_mode="cow")
+
+    def late_batch():
+        replay_changelog(spark, other,
+                         spark.createDataFrame(late, schema=CHANGELOG_SCHEMA),
+                         run_id="late")
+
+    _hook_first_write(t, late_batch)
+    # the late half's own out-of-order bound: no later event is older
+    t.expire_tombstones(watermark=late["ts"].min().to_pydatetime())
+
+    assert "late-00000" in t.committed_batches()
+    _assert_matches_oracle(t, pdf)

@@ -1,5 +1,5 @@
 """Property fuzz: generated schedules interleaving merge_apply with
-maintenance ops (compact_minor spark/arrow, compact, expire_tombstones,
+maintenance ops (compact_minor on either fold engine, compact, expire_tombstones,
 rebucket, expire_snapshots) — fired either between commits or INSIDE another
 writer's pre-commit window (the `_write_buckets` hook from
 test_concurrent_writers.py, where the r4 lost-update bugs lived).
@@ -16,10 +16,13 @@ contract under which expiry is state-preserving).
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pyspark.sql.types as T
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pentaho_kettle_spark.tableio import parquet_snapshot
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
 SCHEMA = T.StructType([
@@ -91,9 +94,11 @@ def test_maintenance_interleaved_with_merges_preserves_lww(
 
     def run_maint(op: str, arg, handle) -> None:
         if op == "minor_spark":
-            handle.compact_minor(engine="spark")
+            # every bucket over the arrow size bound → the Spark fold
+            with mock.patch.object(parquet_snapshot, "ARROW_FOLD_MAX_BYTES", 0):
+                handle.compact_minor()
         elif op == "minor_arrow":
-            handle.compact_minor(engine="arrow")
+            handle.compact_minor()
         elif op == "major":
             handle.compact()
         elif op == "expire_stones":

@@ -412,3 +412,23 @@ def test_arrow_key_sample_rejects_derived_frames(spark, tmp_path):
     assert _arrow_key_sample(derived, ["k2"], 0.01, 10) is None
     # filtered scan -> refused (rows would be wrong)
     assert _arrow_key_sample(scan.filter("v < 10"), ["k"], 0.01, 10) is None
+
+
+def test_salt_estimate_uses_the_fraction_actually_sampled(spark, tmp_path):
+    """A 20k-event one-file log whose hottest key holds half its events
+    puts 10k rows of that key in a batch — far below SALT_MIN_KEY_ROWS, so
+    salting must not engage. The row-group sampler reads the whole log, and
+    the log size estimate must divide by that fraction (1.0), not by the
+    Spark sample's nominal 1%, which inflated the log 100× to 2M events and
+    salted it."""
+    from pentaho_kettle_spark.cdc.skew import hot_key_counts, skewed_keys
+
+    path = str(tmp_path / "log")
+    spark.range(20_000).select(
+        F.when(F.col("id") % 2 == 0, F.lit(-1)).otherwise(F.col("id")).alias("k")
+    ).coalesce(1).write.parquet(path)
+    log = spark.read.parquet(path)
+    assert skewed_keys(log, ["k"]) is None
+    rows, sampled_total, fraction = hot_key_counts(log, ["k"])
+    assert rows[0]["k"] == -1 and rows[0]["count"] == 10_000
+    assert sampled_total == 20_000 and fraction == 1.0

@@ -480,38 +480,6 @@ def test_patch_apply_partial_columns(spark, tmp_path):
     )
 
 
-def test_sort_on_write_clusters_rows(spark, tmp_path):
-    """sort_on_write writes each bucket file key-sorted (tight row-group
-    min/max for point lookups) without changing any read result."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    results = {}
-    for flag in (False, True):
-        t = ParquetSnapshotTableIO(
-            spark, str(tmp_path / f"tsort{flag}"), n_buckets=2,
-            sort_on_write=flag,
-        )
-        t.init_empty(SCHEMA)
-        rows = [
-            (f"c{97 - i}", i % 3, f"t{i}", _ts("2026-01-01T00:00:01"), "U", i)
-            for i in range(60)
-        ]
-        t.merge_apply(_chg(spark, rows), "b1")
-        results[flag] = {
-            (r.conv_id, r.turn_idx, r.text) for r in t.read().collect()
-        }
-        if flag:
-            m = t.current_manifest()
-            entry = next(iter(m["files"].values()))[0]
-            pf = pq.ParquetFile(os.path.join(t.root, entry["path"]))
-            col = pf.read(columns=["conv_id", "turn_idx"]).to_pylist()
-            keys = [(r["conv_id"], r["turn_idx"]) for r in col]
-            assert keys == sorted(keys)
-    assert results[False] == results[True]
-
-
 def test_cow_merge_collapses_multi_event_batch(spark, tmp_path):
     """A CoW batch carrying several events for one key must resolve to the
     per-key (ts, seq) winner, not duplicate the key in the rewritten bucket
