@@ -178,7 +178,7 @@ def main() -> None:
                           "spark.scheduler.mode": "FAIR",
                           "spark.scheduler.allocation.file": fair_xml,
                       })
-    # 32MB scan splits: balanced task waves at any width (see bench/replay_job.py)
+    # 32MB scan splits: balanced task waves at any width (see bench/scaling.py)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
     qs = entrymod.queries()
 

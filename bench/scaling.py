@@ -15,7 +15,13 @@ Measured host reality this protocol accounts for (see BENCH/BASELINE.md):
     interleaved, median of several.
   * fresh-JVM JIT: in-JVM warm-up replay before the timed section.
 
+A run reports only the pairs it measured; earlier runs live in git history.
+
 Usage: python bench/scaling.py [--pairs 2:8,8:32] [--events N] [--trials N]
+
+The script is also the job `spark-submit` runs on each side of a pair:
+  bench/scaling.py replay <changelog_dir> <n_batches> <out_json>
+  bench/scaling.py ceiling <cores>
 """
 
 from __future__ import annotations
@@ -26,10 +32,24 @@ import os
 import statistics
 import subprocess
 import sys
+import time
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+
+# The replay job's engine settings. Merge-on-read with async compaction is
+# the sustained-state deployment shape. MAJOR_MIN_DELTA_SHARE: due buckets
+# below 25% delta share get the minor delta-merge (base untouched) — the
+# round-4 change that removed the membw-bound late-replay fold spikes at 32
+# streams. STAGGER phase-shifts per-bucket fold thresholds so the first
+# major-fold wave spreads over ~4 batches (A/B: tail max/median 1.17 vs
+# 2.4-4.2, +15% median at 32c — BENCH/BASELINE.md r4).
+MODE = "mor"
+MAJOR_MIN_DELTA_SHARE = 0.25
+STAGGER = 3
+# the log is written as LOG_FILES time-ordered parquet files, like a
+# WAL/binlog segment directory: per-batch time filters prune at the scan
+LOG_FILES = 32
 
 
 def build_zip(path: str) -> None:
@@ -51,37 +71,28 @@ CACHE_BASE = (
 
 def gen_log(events: int, convs: int, zipf_a: float | None = 1.2) -> str:
     tag = "uniform" if zipf_a is None else f"z{zipf_a}"
-    # "rng2" layout: range-partitioned by ingest_ts, like a real WAL/binlog
-    # segment directory — lets per-batch time filters prune files at the scan.
-    # Cached on tmpfs: the sandbox virtio disk stalls unpredictably.
-    cache = f"{CACHE_BASE}/changelog_e{events}_c{convs}_s42_{tag}_rng2"
+    # cached on tmpfs: the sandbox virtio disk stalls unpredictably
+    cache = f"{CACHE_BASE}/changelog_e{events}_c{convs}_s42_{tag}_f{LOG_FILES}"
     if os.path.exists(os.path.join(cache, "_SUCCESS")):
         return cache
-    from pentaho_kettle_spark.cdc.changelog import CHANGELOG_SCHEMA
     from pentaho_kettle_spark.fixtures.changelog_gen import gen_changelog
-    from pentaho_kettle_spark.session import get_spark
+    from perfbench.inputs import write_log
 
-    spark = get_spark(app_name="gen", master="local[8]", shuffle_partitions=8)
-    pdf = gen_changelog(events, convs, seed=42, zipf_a=zipf_a)
-    spark.createDataFrame(pdf, schema=CHANGELOG_SCHEMA).repartitionByRange(
-        32, "ingest_ts"
-    ).sortWithinPartitions("ingest_ts").write.mode("overwrite").parquet(cache)
-    spark.stop()
+    write_log(gen_changelog(events, convs, seed=42, zipf_a=zipf_a), cache, LOG_FILES)
+    open(os.path.join(cache, "_SUCCESS"), "w").close()
     return cache
 
 
-def run_once(cores: int, log_dir: str, batches: int, zip_path: str, tag: str) -> dict:
-    """One spark-submit replay pinned to a `cores`-CPU budget.
+def _spark_submit(cores: int, zip_path: str, *job_args: str, conf: tuple = ()) -> str:
+    """Run this script under `spark-submit` as a job pinned to `cores` CPUs.
 
     `taskset -c 0..cores-1` models an N-core CLUSTER honestly: without it,
-    local[8] is merely 8 task slots backed by all 32 host CPUs — GC, JIT,
-    netty IO and the Python driver run on the other 24, which silently
-    inflates T_N and understates scaling efficiency. Heap is EQUAL on both
-    sizes (protocol: "same JVM heap") and pre-touched, because first-touch
-    page faults on this host run at ~1.3 GB/s and serialize — they must not
-    land inside the timed window.
-    """
-    out_json = f"/tmp/pks_scale_{tag}_{cores}.json"
+    local[8] is merely 8 task slots backed by all host CPUs — GC, JIT, netty
+    IO and the Python driver run on the others, which silently inflates T_N
+    and understates scaling efficiency. Heap is EQUAL on both sizes
+    (protocol: "same JVM heap") and pre-touched, because first-touch page
+    faults on this host run at ~1.3 GB/s and serialize — they must not land
+    inside the timed window. Returns the job's stdout."""
     heap = 8
     cmd = [
         "taskset", "-c", f"0-{cores - 1}",
@@ -89,28 +100,33 @@ def run_once(cores: int, log_dir: str, batches: int, zip_path: str, tag: str) ->
         "--master", f"local[{cores}]",
         "--driver-memory", f"{heap}g",
         "--conf", f"spark.driver.extraJavaOptions=-Xms{heap}g -XX:+AlwaysPreTouch",
-        "--conf", f"spark.sql.shuffle.partitions={cores}",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        # FAIR pools: async compaction folds yield slots to ingest batches
-        # (CompactionScheduler tags its thread pks_compaction, weight 1:8)
-        "--conf", "spark.scheduler.mode=FAIR",
-        "--conf", f"spark.scheduler.allocation.file={os.path.join(REPO, 'bench', 'fairscheduler.xml')}",
-        # shuffle/spill files on tmpfs: the sandbox virtio disk stalls for
-        # tens of seconds under writeback; cluster shuffle dirs are local SSD
-        "--conf", "spark.local.dir=/dev/shm/pks_spark_local",
-        "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.ui.enabled=false",
+        *[a for kv in conf for a in ("--conf", kv)],
         "--py-files", zip_path,
-        os.path.join(REPO, "bench", "replay_job.py"),
-        # 0.25 = major_min_delta_share: due buckets below 25% delta share get
-        # the minor delta-merge (base untouched) — the round-4 change that
-        # removed the membw-bound late-replay fold spikes at 32 streams.
-        # stagger=3 phase-shifts per-bucket fold thresholds so the first
-        # major-fold wave spreads over ~4 batches (A/B: tail max/median
-        # 1.17 vs 2.4-4.2, +15% median at 32c — BENCH/BASELINE.md r4)
-        log_dir, str(batches), "auto", out_json, "mor", "0.25", "3",
+        os.path.abspath(__file__), *job_args,
     ]
-    subprocess.run(cmd, check=True, capture_output=True, text=True)
+    return subprocess.run(cmd, check=True, capture_output=True, text=True).stdout
+
+
+def run_once(cores: int, log_dir: str, batches: int, zip_path: str, tag: str) -> dict:
+    """One spark-submit replay pinned to a `cores`-CPU budget."""
+    out_json = f"/tmp/pks_scale_{tag}_{cores}.json"
+    _spark_submit(
+        cores, zip_path, "replay", log_dir, str(batches), out_json,
+        conf=(
+            f"spark.sql.shuffle.partitions={cores}",
+            "spark.sql.adaptive.enabled=true",
+            # FAIR pools: async compaction folds yield slots to ingest
+            # batches (CompactionScheduler tags its thread pks_compaction,
+            # weight 1:8)
+            "spark.scheduler.mode=FAIR",
+            f"spark.scheduler.allocation.file={os.path.join(REPO, 'bench', 'fairscheduler.xml')}",
+            # shuffle/spill files on tmpfs: the sandbox virtio disk stalls for
+            # tens of seconds under writeback; cluster shuffle dirs are local SSD
+            "spark.local.dir=/dev/shm/pks_spark_local",
+            "spark.sql.session.timeZone=UTC",
+        ),
+    )
     with open(out_json) as f:
         return json.load(f)
 
@@ -121,30 +137,8 @@ def spark_compute_ceiling(cores: int, zip_path: str) -> float:
     empty-engine control. Whatever efficiency THIS job reaches between two
     widths is the ceiling Spark itself gets on this host; the replay's
     efficiency divided by it isolates what the ENGINE adds."""
-    job = (
-        "import time, sys\n"
-        "from pyspark.sql import SparkSession, functions as F\n"
-        "spark = SparkSession.builder.getOrCreate()\n"
-        "df = spark.range(0, 400_000_000, 1, int(sys.argv[1]) * 4)\n"
-        "c = F.col('id')\n"
-        "for _ in range(8): c = F.xxhash64(c)\n"
-        "df.select(c.alias('h')).selectExpr('max(h)').collect()  # warm\n"
-        "t0 = time.time()\n"
-        "df.select(c.alias('h')).selectExpr('max(h)').collect()\n"
-        "print('CEIL', time.time() - t0)\n"
-        "spark.stop()\n"
-    )
-    with open("/tmp/pks_ceiling_job.py", "w") as f:
-        f.write(job)
-    cmd = [
-        "taskset", "-c", f"0-{cores - 1}", "spark-submit",
-        "--master", f"local[{cores}]", "--driver-memory", "8g",
-        "--conf", "spark.driver.extraJavaOptions=-Xms8g -XX:+AlwaysPreTouch",
-        "--conf", "spark.ui.enabled=false",
-        "--py-files", zip_path, "/tmp/pks_ceiling_job.py", str(cores),
-    ]
-    out = subprocess.run(cmd, check=True, capture_output=True, text=True)
-    for line in out.stdout.splitlines():
+    out = _spark_submit(cores, zip_path, "ceiling", str(cores))
+    for line in out.splitlines():
         if line.startswith("CEIL"):
             return round(float(line.split()[1]), 2)
     raise RuntimeError("ceiling job produced no timing")
@@ -161,8 +155,10 @@ def host_membw(procs: int, seconds: int = 6) -> float:
         "print(n*64)"
     )
     ps = [
-        subprocess.Popen(["taskset", "-c", str(i % 32), sys.executable, "-c", code],
-                         stdout=subprocess.PIPE)
+        subprocess.Popen(
+            ["taskset", "-c", str(i % os.cpu_count()), sys.executable, "-c", code],
+            stdout=subprocess.PIPE,
+        )
         for i in range(procs)
     ]
     total_mb = sum(int(p.communicate()[0]) for p in ps)
@@ -221,39 +217,21 @@ def main() -> None:
     ap.add_argument("--small-batches", type=int, default=4)
     args = ap.parse_args()
 
+    sys.path.insert(0, REPO)
     zip_path = "/tmp/pks.zip"
     build_zip(zip_path)
 
     pairs = [tuple(map(int, p.split(":"))) for p in args.pairs.split(",")]
-    # merge into an existing scaling.json so a single-pair rerun (e.g. to
-    # catch a calm host window for 2:8) keeps the other pair's results
-    prev_path = os.path.join(REPO, "BENCH", "scaling.json")
-    results: dict = {"batches": args.batches, "pairs": {}, "host_membw_gbps": {}}
-    if os.path.exists(prev_path):
-        with open(prev_path) as f:
-            prev = json.load(f)
-        results["pairs"] = prev.get("pairs", {})
-        # keep prior controls for pairs not rerun; this run's pairs get
-        # fresh same-window controls below (a single-pair rerun must not
-        # drop the OTHER pair's memory-bandwidth controls or batch count)
-        results["_prev_ceiling"] = prev.get("spark_compute_ceiling_sec", {})
-        results["host_membw_gbps"] = prev.get("host_membw_gbps", {})
-        results["batches"] = prev.get("batches", args.batches)
-
-    for low, high in pairs:
-        for procs in (low, high):
-            # always re-measure this run's pair cores (same-window rule);
-            # cores only present in kept pairs retain their prior values
-            results["host_membw_gbps"][str(procs)] = host_membw(procs)
-
-    results["spark_compute_ceiling_sec"] = results.pop("_prev_ceiling", {})
-    for low, high in pairs:
-        for c in (low, high):
-            k = str(c)
-            # always re-measure this run's pair controls (same-window rule)
-            results["spark_compute_ceiling_sec"][k] = spark_compute_ceiling(
-                c, zip_path
-            )
+    cores = sorted({c for pair in pairs for c in pair})
+    # controls are measured in the same window as this run's pairs
+    results: dict = {
+        "batches": args.batches,
+        "pairs": {},
+        "host_membw_gbps": {str(c): host_membw(c) for c in cores},
+        "spark_compute_ceiling_sec": {
+            str(c): spark_compute_ceiling(c, zip_path) for c in cores
+        },
+    }
 
     for low, high in pairs:
         small = low < 8
@@ -283,8 +261,9 @@ def main() -> None:
             },
         }
 
-    # headline: the skewed efficiency on the pair where the host itself can
-    # still scale (the engine's number, not the shared VM's memory ceiling)
+    # headline: the skewed efficiency on the pair of this run where the host
+    # itself can still scale (the engine's number, not the shared VM's
+    # memory ceiling)
     best = max(
         results["pairs"].values(),
         key=lambda p: p["distributions"]["skewed"]["scaling_efficiency"],
@@ -324,18 +303,16 @@ def _render_results_md(results: dict) -> None:
             )
     bw = ", ".join(f"{k} procs: {v} GB/s"
                    for k, v in sorted(results["host_membw_gbps"].items(), key=lambda x: int(x[0])))
-    ceil = results.get("spark_compute_ceiling_sec", {})
+    ceil = results["spark_compute_ceiling_sec"]
     ceil_lines = []
-    if ceil:
-        for pair_key in results["pairs"]:
-            lo, hi = pair_key.split(":")
-            if lo in ceil and hi in ceil:
-                eff = round(ceil[lo] / (4 * ceil[hi]), 3)
-                ceil_lines.append(
-                    f"pure-compute Spark control (range→xxhash64×8→max, no engine "
-                    f"code, no shuffle/IO) scales {lo}→{hi} at efficiency "
-                    f"**{eff}** ({ceil[lo]}s → {ceil[hi]}s)"
-                )
+    for pair_key in results["pairs"]:
+        lo, hi = pair_key.split(":")
+        eff = round(ceil[lo] / (4 * ceil[hi]), 3)
+        ceil_lines.append(
+            f"pure-compute Spark control (range→xxhash64×8→max, no engine "
+            f"code, no shuffle/IO) scales {lo}→{hi} at efficiency "
+            f"**{eff}** ({ceil[lo]}s → {ceil[hi]}s)"
+        )
     lines += [
         "",
         f"Host memcpy bandwidth (numpy, 64MB buffers, pinned): {bw}.",
@@ -352,11 +329,132 @@ def _render_results_md(results: dict) -> None:
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     with open(path) as f:
         content = f.read()
+    # replace the Results section up to the next heading; the archived
+    # sections after it stay
     start = content.index("## Results")
-    end = content.index("## Reading the result")
+    end = content.index("\n#", start + len("## Results")) + 1
     with open(path, "w") as f:
         f.write(content[:start] + "\n".join(lines) + "\n" + content[end:])
 
 
+def job_replay(changelog_dir: str, n_batches: str, out_json: str) -> None:
+    """Job mode (under spark-submit): the end-to-end merge-apply replay
+    (ingest → collapse → salted MERGE → commit) with async compaction.
+    Writes {"events", "wall_sec", "events_per_sec", ...} to `out_json`."""
+    import shutil
+    import tempfile
+
+    import pyspark.sql.types as T
+    from pyspark.sql import SparkSession
+
+    from pentaho_kettle_spark.cdc.changelog import CHANGELOG_SCHEMA, read_changelog
+    from pentaho_kettle_spark.cdc.replay import replay_changelog
+    from pentaho_kettle_spark.tableio.compaction import (
+        CompactionPolicy,
+        CompactionScheduler,
+    )
+    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
+
+    spark = SparkSession.builder.getOrCreate()
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # smaller scan splits: the default 128MB leaves the changelog scan with
+    # ~1.4 ragged task waves at 8 cores (11 partitions / 8 slots); 32MB gives
+    # every width several balanced waves. A real cluster reading an object
+    # store does the same via input-split tuning.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
+
+    log = read_changelog(spark, changelog_dir)
+    n = log.count()
+    data_schema = T.StructType(
+        [f for f in CHANGELOG_SCHEMA.fields if f.name not in ("seq", "op", "ingest_ts")]
+    )
+
+    # The metric is SUSTAINED throughput (BASELINE.json#metric): a fresh JVM
+    # spends its first ~30-40s JIT-compiling codegen'd stages, a fixed cost
+    # that is pure measurement noise for a pipeline meant to run for hours.
+    # Warm the JVM on a 10% sample into a throwaway table, then time.
+    # tables live on tmpfs: the sandbox's virtio disk has multi-second
+    # writeback stalls (observed 100s+ on a 2s batch) that are measurement
+    # noise for a compute-scaling benchmark; a real cluster writes to an
+    # object store whose aggregate bandwidth scales with the cluster
+    tbl_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    warm_root = tempfile.mkdtemp(prefix="pks_scale_warm_", dir=tbl_base)
+    warm_table = ParquetSnapshotTableIO(
+        spark, warm_root + "/t", n_buckets=32, write_mode=MODE,
+        compact_delta_files=1,  # force a compaction so that path JITs too
+    )
+    warm_table.init_empty(data_schema)
+    replay_changelog(
+        spark, warm_table, log.sample(0.1, seed=1), n_batches=2, salted="auto",
+        n_salts=16, run_id="warm",
+    )
+    shutil.rmtree(warm_root, ignore_errors=True)
+
+    # compaction runs ASYNC (tableio/compaction.py), overlapped with ingest;
+    # inline compaction is disabled. The drain fold (scheduler.stop) is
+    # INSIDE the timed window, so total work matches the inline variant;
+    # only the overlap differs.
+    root = tempfile.mkdtemp(prefix="pks_scale_tbl_", dir=tbl_base)
+    table = ParquetSnapshotTableIO(
+        spark, root + "/t", n_buckets=32, write_mode=MODE, compact_delta_files=None,
+    )
+    table.init_empty(data_schema)
+    sched = CompactionScheduler(
+        table,
+        CompactionPolicy(max_delta_files=4, major_min_delta_share=MAJOR_MIN_DELTA_SHARE,
+                         stagger=STAGGER),
+        interval_sec=1.0,
+    )
+    t0 = time.time()
+    sched.start()
+    lineage = replay_changelog(spark, table, log, n_batches=int(n_batches),
+                               salted="auto", n_salts=16, run_id="scale")
+    sched.stop(final_cycle=True)
+    wall = time.time() - t0
+    rows = table.read().count()
+    shutil.rmtree(root, ignore_errors=True)
+
+    parallelism = spark.sparkContext.defaultParallelism
+    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.stop()  # REQUIRED under spark-submit: a lingering JVM would
+    # contend with the next trial and wreck the measurement
+    with open(out_json, "w") as f:
+        json.dump(
+            {
+                "events": n,
+                "wall_sec": round(wall, 2),
+                "events_per_sec": round(n / wall, 1),
+                "final_rows": rows,
+                "parallelism": parallelism,
+                "shuffle_partitions": shuffle_parts,
+                "mode": MODE,
+                "batch_secs": [r.get("batch_sec") for r in lineage],
+            },
+            f,
+        )
+
+
+def job_ceiling(cores: str) -> None:
+    """Job mode (under spark-submit): the pure-compute control that
+    `spark_compute_ceiling` times. Prints `CEIL <seconds>`."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    spark = SparkSession.builder.getOrCreate()
+    df = spark.range(0, 400_000_000, 1, int(cores) * 4)
+    c = F.col("id")
+    for _ in range(8):
+        c = F.xxhash64(c)
+    df.select(c.alias("h")).selectExpr("max(h)").collect()  # warm
+    t0 = time.time()
+    df.select(c.alias("h")).selectExpr("max(h)").collect()
+    print("CEIL", time.time() - t0)
+    spark.stop()
+
+
 if __name__ == "__main__":
-    main()
+    jobs = {"replay": job_replay, "ceiling": job_ceiling}
+    if len(sys.argv) > 1 and sys.argv[1] in jobs:
+        jobs[sys.argv[1]](*sys.argv[2:])
+    else:
+        main()

@@ -10,8 +10,9 @@ The rule is written once, in `_winner`: `max_by(struct(payload),
 struct(ts, seq))`, one aggregate whose map-side partial aggregation drops
 duplicates and stale events BEFORE the shuffle. `lww_winners` is the bare
 collapse the table IO's read, fold and merge plans use (no spreading, no
-renaming). `lww_collapse` is the change-batch collapse; its arguments pick
-one of four shapes:
+renaming); `lww_fold_columns` is its column-wise form for `patch_apply`.
+`lww_collapse` is the change-batch collapse; its arguments pick one of four
+shapes:
 
   * key-partitioned (default) — one exchange on the key;
   * salted two-phase (`n_salts` > 1) — (key, salt), then key;
@@ -46,6 +47,22 @@ def _winner(df: DataFrame, group_cols: list[str], payload: list[str] | Column,
     return df.groupBy(*group_cols).agg(
         F.max_by(value, F.struct(lww_col, seq_col)).alias("w")
     )
+
+
+def lww_fold_columns(df: DataFrame, group_cols: list[str], columns: list[str],
+                     lww_col: str, seq_col: str) -> DataFrame:
+    """Column-wise collapse (partial-column upserts): per group, the winning
+    (lww_col, seq_col) stamp and each of `columns`' latest NON-NULL value
+    under `_winner`'s order (NULL when the group has none). `max_by` skips
+    rows whose ordering is NULL, so masking the order with the column's
+    nullness leaves the NULL rows out. One aggregate, no window sort.
+    Returns group_cols + lww_col + seq_col + columns."""
+    order = F.struct(lww_col, seq_col)
+    agg = df.groupBy(*group_cols).agg(
+        F.max_by(order, order).alias("w"),
+        *[F.max_by(c, F.when(F.col(c).isNotNull(), order)).alias(c) for c in columns],
+    )
+    return agg.select(*group_cols, f"w.{lww_col}", f"w.{seq_col}", *columns)
 
 
 def _unpack(agg: DataFrame, lead: list[str], payload: list[str],

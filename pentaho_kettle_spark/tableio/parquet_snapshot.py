@@ -930,7 +930,7 @@ class ParquetSnapshotTableIO:
         Cost: one exchange for the fold, a bucket-pruned join against the
         stored state (the same IO class as a CoW merge of those buckets),
         then the merge itself."""
-        from pyspark.sql import Window
+        from pentaho_kettle_spark.cdc.lww import lww_fold_columns
 
         m = self.current_manifest()
         if m is None:
@@ -943,25 +943,7 @@ class ParquetSnapshotTableIO:
         lww = self.lww_col
         payload = [c for c in names if c not in key and c != lww]
 
-        latest = Window.partitionBy(*key).orderBy(
-            F.col(lww).desc(), F.col(SYS_SEQ).desc()
-        )
-        w = latest.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        fold = (
-            patches.withColumn("_rn", F.row_number().over(latest))
-            .select(
-                *key,
-                F.col(lww).alias("_p_lww"),
-                F.col(SYS_SEQ).alias("_p_seq"),
-                "_rn",
-                *[
-                    F.first(F.col(c), ignorenulls=True).over(w).alias(f"_p_{c}")
-                    for c in payload
-                ],
-            )
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        fold = lww_fold_columns(patches, key, payload, lww, SYS_SEQ)
 
         # stored state of the touched buckets only (the same prune the CoW
         # merge performs)
@@ -978,26 +960,26 @@ class ParquetSnapshotTableIO:
         fresh = j.filter(
             F.col("_s_lww").isNull()
             | (
-                F.struct(F.col("_p_lww"), F.col("_p_seq"))
+                F.struct(F.col(lww), F.col(SYS_SEQ))
                 > F.struct(F.col("_s_lww"), F.col("_s_seq"))
             )
         )
         live = F.col("_s_lww").isNotNull() & ~F.coalesce(F.col("_s_del"), F.lit(False))
         resolved = fresh.select(
             *key,
-            F.col("_p_lww").alias(lww),
+            lww,
             *[
-                F.when(live, F.coalesce(F.col(f"_p_{c}"), F.col(f"_s_{c}")))
-                .otherwise(F.col(f"_p_{c}"))
+                F.when(live, F.coalesce(F.col(c), F.col(f"_s_{c}")))
+                .otherwise(F.col(c))
                 .alias(c)
                 for c in payload
             ],
             F.lit("U").alias("op"),
-            F.col("_p_seq").alias(SYS_SEQ),
+            SYS_SEQ,
         ).select(*names, "op", SYS_SEQ)
-        # `resolved` is one row per key by construction (the fold keeps
-        # row_number 1 per key) — skip merge_apply's safety collapse so the
-        # patch path doesn't pay a redundant exchange per batch
+        # `resolved` is one row per key by construction (the fold groups by
+        # the key) — skip merge_apply's safety collapse so the patch path
+        # doesn't pay a redundant exchange per batch
         return self.merge_apply(
             resolved, batch_id=batch_id, seq_high_watermark=seq_high_watermark,
             assume_collapsed=True,

@@ -1,6 +1,8 @@
 """The engine's settings, pinned: every constructor/method parameter, policy
 field and environment variable a caller can set. A new knob has to be added
-here deliberately — and earn its keep — or this test fails."""
+here deliberately — and earn its keep — or this test fails. The
+measurement scripts' environment keys, and the files the docs' `python`
+commands name, are pinned the same way."""
 
 from __future__ import annotations
 
@@ -15,7 +17,9 @@ from pentaho_kettle_spark.cdc import skew
 from pentaho_kettle_spark.tableio.compaction import CompactionPolicy
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO as P
 
-PKG = Path(__file__).resolve().parents[1] / "pentaho_kettle_spark"
+REPO = Path(__file__).resolve().parents[1]
+PKG = REPO / "pentaho_kettle_spark"
+ENV_KEY = re.compile(r"""(?:environ\.get\(|environ\[|getenv\()\s*["'](\w+)["']""")
 
 
 def _params(fn) -> list[str]:
@@ -41,9 +45,24 @@ def test_table_and_policy_settings():
 
 
 def test_environment_variables_read_by_the_package():
-    pattern = re.compile(r"""(?:environ\.get\(|environ\[|getenv\()\s*["'](\w+)["']""")
-    keys = {k for py in PKG.rglob("*.py") for k in pattern.findall(py.read_text())}
+    keys = {k for py in PKG.rglob("*.py") for k in ENV_KEY.findall(py.read_text())}
     assert keys == {"PKS_MASTER", "SPARK_GRAFT_CPUS", "PKS_DRIVER_MEM", "PKS_LOCAL_DIR"}
+
+
+def test_environment_variables_read_by_the_scripts():
+    scripts = [REPO / "bench.py", *(REPO / "bench").glob("*.py"), *(REPO / "tools").glob("*.py")]
+    keys = {k for py in scripts for k in ENV_KEY.findall(py.read_text())}
+    assert keys == {
+        "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "PKS_BENCH_EVENTS", "PKS_BENCH_CONVS",
+        "SPARK_GRAFT_SF_CHECK_DIR", "SPARK_GRAFT_SF01_DIR",
+    }
+
+
+def test_documented_commands_name_existing_files():
+    docs = [REPO / "README.md", REPO / ".claude" / "skills" / "verify" / "SKILL.md"]
+    paths = {p for d in docs for p in re.findall(r"\bpython3? +([\w./-]+\.py)\b", d.read_text())}
+    assert "bench.py" in paths
+    assert sorted(p for p in paths if not (REPO / p).is_file()) == []
 
 
 @pytest.mark.parametrize("engine", ["spark", "arrow-distributed"])

@@ -70,7 +70,7 @@ def test_minhash_codegen_signatures_match_hof_shingles(spark):
     """The exploded-index signature path (Generate + codegen projection)
     must be bit-identical to aggregating over `_shingles`'s HOF array —
     including the duplicate-shingle difference (min is insensitive), the
-    short-doc branch (n < k hashes the whole text), and empty text. Pinned
+    short-doc branch (n < k hashes the whole text), empty and NULL text. Pinned
     for BOTH hash functions (xxhash64 scale path, phash64 oracle twin)."""
     import pandas as pd
 
@@ -84,6 +84,7 @@ def test_minhash_codegen_signatures_match_hof_shingles(spark):
         (4, "short doc"),  # n < k
         (5, ""),  # empty after normalize
         (6, "  Mixed   CASE   and    runs	of whitespace normalize down  "),
+        (7, None),  # NULL text
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for hash_fn in (F.xxhash64, phash64):

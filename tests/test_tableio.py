@@ -480,6 +480,45 @@ def test_patch_apply_partial_columns(spark, tmp_path):
     )
 
 
+
+def test_patch_apply_folds_without_a_window(spark, tmp_path, monkeypatch):
+    """patch_apply's per-key fold is one aggregate under the LWW winner rule
+    (`lww_fold_columns`), not a row_number window: the DataFrame it hands
+    to merge_apply executes with no Window node."""
+    t = ParquetSnapshotTableIO(
+        spark, str(tmp_path / "tpw"), n_buckets=4, write_mode="mor",
+        compact_delta_files=None,
+    )
+    t.init_empty(SCHEMA)
+    t.merge_apply(_chg(spark, [("c1", 0, "hello", _ts("2026-01-01T00:00:01"), "U", 1)]), "b1")
+    handed = []
+    merge_apply = t.merge_apply
+
+    def capture(changes, *args, **kwargs):
+        handed.append(changes)
+        return merge_apply(changes, *args, **kwargs)
+
+    monkeypatch.setattr(t, "merge_apply", capture)
+    t.patch_apply(
+        spark.createDataFrame(
+            [
+                ("c1", 0, "v2", _ts("2026-01-01T00:00:02"), 2),
+                ("c1", 0, None, _ts("2026-01-01T00:00:03"), 3),
+                ("c2", 0, "new", _ts("2026-01-01T00:00:01"), 4),
+            ],
+            "conv_id string, turn_idx int, text string, ts timestamp, _seq long",
+        ),
+        "p1",
+    )
+    (resolved,) = handed
+    got = sorted((r.conv_id, r.text, r._seq) for r in resolved.collect())
+    assert got == [("c1", "v2", 3), ("c2", "new", 4)]
+    plan = resolved._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert sorted((r.conv_id, r.text) for r in t.read().collect()) == [
+        ("c1", "v2"), ("c2", "new"),
+    ]
+
 def test_cow_merge_collapses_multi_event_batch(spark, tmp_path):
     """A CoW batch carrying several events for one key must resolve to the
     per-key (ts, seq) winner, not duplicate the key in the rewritten bucket
