@@ -25,22 +25,13 @@ from pentaho_kettle_spark.functions import oracle_sqlgen as osql
 from pentaho_kettle_spark.functions import sampling as fsamp
 from pentaho_kettle_spark.functions import similarity as fsim
 from pentaho_kettle_spark.functions import text as ftext
-from pentaho_kettle_spark.functions.portable import phash64
+from pentaho_kettle_spark.functions.portable import floor_round, phash64
 from pentaho_kettle_spark.operators.calculator import Calc
 from pentaho_kettle_spark.operators.group_by import Agg
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _rnd(c, n: int = 2):
-    """Cross-engine-stable rounding: floor(x*10^n + 0.5)/10^n runs the SAME
-    float ops on Spark and DuckDB, unlike round() whose half-up tie handling
-    diverges at double-representation boundaries (~1/5k values)."""
-    m = int(10**n)
-    c = c if not isinstance(c, str) else F.col(c)
-    return F.floor(c * m + F.lit(0.5)) / m
 
 
 def _us(c):
@@ -87,11 +78,11 @@ def _q_q1_pricing_summary(spark, sf):
     )
     return out.select(
         "l_returnflag", "l_linestatus",
-        _rnd("sum_qty", 2).alias("sum_qty"),
-        _rnd("sum_base_price", 2).alias("sum_base_price"),
-        _rnd("sum_disc_price", 2).alias("sum_disc_price"),
-        _rnd("avg_qty", 4).alias("avg_qty"),
-        _rnd("avg_disc", 4).alias("avg_disc"),
+        floor_round("sum_qty", 2).alias("sum_qty"),
+        floor_round("sum_base_price", 2).alias("sum_base_price"),
+        floor_round("sum_disc_price", 2).alias("sum_disc_price"),
+        floor_round("avg_qty", 4).alias("avg_qty"),
+        floor_round("avg_disc", 4).alias("avg_disc"),
         "count_order",
     )
 
@@ -126,8 +117,8 @@ def _q_calculator_math(spark, sf):
     ])
     return out.select(
         "l_orderkey", "l_linenumber",
-        _rnd("charge", 2).alias("charge"),
-        _rnd("qty_sqrt", 4).alias("qty_sqrt"),
+        floor_round("charge", 2).alias("charge"),
+        floor_round("qty_sqrt", 4).alias("qty_sqrt"),
         "qty_mod",
     )
 
@@ -209,7 +200,7 @@ def _q_multiway_join_agg(spark, sf):
         Agg("o_totalprice", "SUM", "revenue"),
         Agg("*", "COUNT_ALL", "n_orders"),
     ])
-    return out.select("r_name", _rnd("revenue", 2).alias("revenue"), "n_orders")
+    return out.select("r_name", floor_round("revenue", 2).alias("revenue"), "n_orders")
 
 
 def _q_stream_lookup(spark, sf):
@@ -246,7 +237,7 @@ def _v1_v2(spark, sf):
         o.filter(F.col("o_orderkey") % 37 != 5)
         .withColumn(
             "o_totalprice",
-            F.when(F.col("o_orderkey") % 7 == 0, _rnd(F.col("o_totalprice") * 1.1, 2))
+            F.when(F.col("o_orderkey") % 7 == 0, floor_round(F.col("o_totalprice") * 1.1, 2))
             .otherwise(F.col("o_totalprice")),
         )
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
@@ -297,7 +288,7 @@ def _q_group_by_extended(spark, sf):
         order_by=["_ord"],
     )
     return out.select(
-        "l_returnflag", "med_qty", "n_supp", _rnd("sd_qty", 4).alias("sd_qty"),
+        "l_returnflag", "med_qty", "n_supp", floor_round("sd_qty", 4).alias("sd_qty"),
         "min_qty", "max_qty", "first_qty", "last_qty",
     )
 
@@ -331,7 +322,7 @@ def _q_cumulative_sum(spark, sf):
         [{"subject": "value", "type": "sum", "out": "running_value"}],
     )
     return out.select(
-        "user_id", "event_id", _rnd("running_value", 4).alias("running_value")
+        "user_id", "event_id", floor_round("running_value", 4).alias("running_value")
     )
 
 
@@ -348,9 +339,9 @@ def _q_denormaliser_pivot(spark, sf):
     )
     return out.select(
         "user_id",
-        _rnd("click_sum", 2).alias("click_sum"),
-        _rnd("view_sum", 2).alias("view_sum"),
-        _rnd("purchase_sum", 2).alias("purchase_sum"),
+        floor_round("click_sum", 2).alias("click_sum"),
+        floor_round("view_sum", 2).alias("view_sum"),
+        floor_round("purchase_sum", 2).alias("purchase_sum"),
         "error_cnt",
     )
 
@@ -462,8 +453,8 @@ def _q_univariate_stats(spark, sf):
     out = ops.univariate_stats(li, ["l_quantity"])
     return out.select(
         "l_quantity_n",
-        _rnd("l_quantity_mean", 4).alias("l_quantity_mean"),
-        _rnd("l_quantity_stddev", 4).alias("l_quantity_stddev"),
+        floor_round("l_quantity_mean", 4).alias("l_quantity_mean"),
+        floor_round("l_quantity_stddev", 4).alias("l_quantity_stddev"),
         "l_quantity_min", "l_quantity_max", "l_quantity_median",
     )
 
@@ -487,7 +478,7 @@ def _q_embedding_topk(spark, sf):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = fsim.brute_force_topk(corpus, queries, k=5)
-    return out.select("query_id", "vec_id", _rnd("cosine", 5).alias("cosine"))
+    return out.select("query_id", "vec_id", floor_round("cosine", 5).alias("cosine"))
 
 
 def _q_cdc_lww_collapse(spark, sf):
@@ -525,7 +516,7 @@ def _q_event_time_windows(spark, sf):
         _us("window_end").alias("win_end_us"),
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),
-        _rnd("sum_value", 4).alias("sum_value"),
+        floor_round("sum_value", 4).alias("sum_value"),
     )
 
 
@@ -547,7 +538,7 @@ def _q_sliding_windows(spark, sf):
         _us("window_end").alias("win_end_us"),
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),
-        _rnd("sum_value", 4).alias("sum_value"),
+        floor_round("sum_value", 4).alias("sum_value"),
     )
 
 
@@ -612,14 +603,14 @@ def _q_insert_update_delete(spark, sf):
     base = o.filter(F.col("o_orderkey") % 10 < 8)
     upserts = o.filter((F.col("o_orderkey") % 10 >= 8) | (F.col("o_orderkey") % 7 == 0)).withColumn(
         "o_totalprice",
-        F.when(F.col("o_orderkey") % 7 == 0, _rnd(F.col("o_totalprice") * 1.1, 2))
+        F.when(F.col("o_orderkey") % 7 == 0, floor_round(F.col("o_totalprice") * 1.1, 2))
         .otherwise(F.col("o_totalprice")),
     )
     deletes = o.filter(F.col("o_orderkey") % 13 == 0)
     # standalone Update (update/Update.java): keys absent from the target
     # are DISCARDED, not inserted — %10==9 rows here are not in `base`
     updates = o.filter(F.col("o_orderkey") % 10 >= 8).withColumn(
-        "o_totalprice", _rnd(F.col("o_totalprice") * 0.9, 2)
+        "o_totalprice", floor_round(F.col("o_totalprice") * 0.9, 2)
     )
     out = ops.update_rows(base, updates, ["o_orderkey"])
     out = ops.insert_update(out, upserts, ["o_orderkey"])
@@ -780,7 +771,7 @@ def _q_lsh_ann(spark, sf):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = fsim.lsh_ann_topk(corpus, queries, k=5, n_planes=6, dim=64)
-    return out.select("query_id", "vec_id", _rnd("cosine", 5).alias("cosine"))
+    return out.select("query_id", "vec_id", floor_round("cosine", 5).alias("cosine"))
 
 
 def _q_ivf_ann(spark, sf):
@@ -798,10 +789,7 @@ def _q_ivf_ann(spark, sf):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = ivf_topk(corpus, queries, k=5, n_cells=16, n_probe=2)
-    return out.select(
-        "query_id", "vec_id",
-        (F.floor(F.col("cosine") * 100000 + F.lit(0.5)) / 100000).alias("cosine"),
-    )
+    return out.select("query_id", "vec_id", floor_round("cosine", 5).alias("cosine"))
 
 
 def _q_embedding_near_dups(spark, sf):
@@ -867,7 +855,7 @@ def _q_database_lookup(spark, sf):
         order_by="p_partkey",
     )
     return out.select(
-        "l_orderkey", "l_linenumber", "brand", _rnd("retail", 2).alias("retail")
+        "l_orderkey", "l_linenumber", "brand", floor_round("retail", 2).alias("retail")
     )
 
 
@@ -933,10 +921,10 @@ def _q_calculator_ext(spark, sf):
     ])
     return out.select(
         "o_orderkey", "add3", "max2", "min2", "rem", "prio_hex", "prio_rt", "lev",
-        _rnd("pct2", 4).alias("pct2"),
-        _rnd("pct3", 4).alias("pct3"),
-        _rnd("comb1", 2).alias("comb1"),
-        _rnd("comb2", 2).alias("comb2"),
+        floor_round("pct2", 4).alias("pct2"),
+        floor_round("pct3", 4).alias("pct3"),
+        floor_round("comb1", 2).alias("comb1"),
+        floor_round("comb2", 2).alias("comb2"),
         "neg", "dd_msec",
     )
 
@@ -961,8 +949,8 @@ def _q_ktr_lineitem_rollup(spark, sf):
     return outs["Sorted"].select(
         "flag_label",
         "l_linestatus",
-        _rnd("sum_disc_price", 2).alias("sum_disc_price"),
-        _rnd("sum_qty", 2).alias("sum_qty"),
+        floor_round("sum_disc_price", 2).alias("sum_disc_price"),
+        floor_round("sum_qty", 2).alias("sum_qty"),
         "n_items",
     )
 
@@ -987,7 +975,7 @@ def _q_ktr_vars_fee(spark, sf):
     return outs["Fee"].select(
         "o_orderkey",
         "o_totalprice",
-        _rnd("o_fee", 2).alias("o_fee"),
+        floor_round("o_fee", 2).alias("o_fee"),
     )
 
 
@@ -1009,7 +997,7 @@ def _q_formula_step(spark, sf):
         "o_orderkey",
         "tier",
         "pkey",
-        _rnd("net", 2).alias("net"),
+        floor_round("net", 2).alias("net"),
     )
 
 
@@ -1097,7 +1085,7 @@ def _q_ktr_mapping_fee(spark, sf):
         "o_orderkey",
         "o_totalprice",
         "o_orderpriority",
-        _rnd("o_fee", 2).alias("o_fee"),
+        floor_round("o_fee", 2).alias("o_fee"),
     )
 
 
@@ -1275,7 +1263,7 @@ def _q_cdc_schema_evolution(spark, sf):
         assert "amount" in names and "value" not in names and "props" in names
         out = tio.read().select(
             "user_id", "event_type",
-            _rnd("amount", 4).alias("amount"), "props",
+            floor_round("amount", 4).alias("amount"), "props",
             _us("ts").alias("ts_us"),
         )
         return out.localCheckpoint(eager=True)
@@ -1839,7 +1827,7 @@ def _q_cdc_incremental_agg(spark, sf):
             )
             agg.sync()
         out = agg.read().select(
-            "event_type", "cnt", _rnd("sum_value", 2).alias("sum_value")
+            "event_type", "cnt", floor_round("sum_value", 2).alias("sum_value")
         )
         return out.localCheckpoint(eager=True)
     finally:
@@ -1850,10 +1838,11 @@ def _q_cdc_lineage_metrics(spark, sf):
     """LINEAGE/METRICS oracle row (north-rule: 'per-partition lineage +
     metrics'): replay the derived changelog in four MoR batches, then
     return the PER-BATCH LINEAGE the table recorded — rows_appended and
-    tombstones come from `observe()` metrics inside each merge_apply. The
-    DuckDB oracle recomputes both numbers from first principles (distinct
-    keys per batch; winners that are deletes), so the engine's telemetry
-    itself is hash-verified, not just its data."""
+    tombstones are summed from the footer stats (row count, delete-bit
+    count) that `_file_entry` records for each delta file a merge_apply
+    writes. The DuckDB oracle recomputes both numbers from first principles
+    (distinct keys per batch; winners that are deletes), so the engine's
+    telemetry itself is hash-verified, not just its data."""
     import shutil
     import tempfile
 
@@ -2347,7 +2336,7 @@ def _q_kjb_parallel_job(spark, sf):
     other = res.results["other_fee"]["Agg"]
     return urgent.unionByName(other).select(
         "o_orderpriority",
-        _rnd("sum_fee", 2).alias("sum_fee"),
+        floor_round("sum_fee", 2).alias("sum_fee"),
         "n_orders",
     )
 
@@ -2459,7 +2448,7 @@ def _q_update_standalone(spark, sf):
     incoming = o.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey",
         F.lit("R").alias("o_orderstatus"),
-        _rnd(F.col("o_totalprice") * 1.1, 2).alias("o_totalprice"),
+        floor_round(F.col("o_totalprice") * 1.1, 2).alias("o_totalprice"),
     )
     return ops.update_rows(target, incoming, ["o_orderkey"])
 

@@ -3,10 +3,10 @@ n-gram Jaccard, embedding-cosine near-dup.
 
 Scale design notes:
   * Exact: hash-groupBy — one shuffle on a 64-bit hash, never on raw text.
-  * MinHash+LSH: shingle → K minhashes → B bands → self-join on
-    (band_id, band_hash) buckets. The candidate join is equi (hash-join),
-    NOT an all-pairs cross join; only in-bucket pairs are verified. This is
-    the 100 TB path: cost ∝ Σ bucket² instead of n².
+  * MinHash+LSH: shingle → K minhashes → B bands → one window min per
+    (band, bucket): each doc links to its bucket's smallest id, NOT an
+    all-pairs join. This is the 100 TB path: Σ(bucket size − 1) ≤ B × docs
+    star edges instead of n² pairs.
   * SimHash: 64-bit sign-aggregated shingle hashes; near-dups differ in few
     bits — banded by 16-bit chunks for candidate generation.
   * All shingling/hashing is Catalyst higher-order functions (transform /
@@ -15,31 +15,25 @@ Scale design notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pentaho_kettle_spark.functions import bind_once
+from pentaho_kettle_spark.functions.portable import floor_round
+from pentaho_kettle_spark.functions.text import fingerprint, normalize_text
+from pentaho_kettle_spark.plans.spread import spread_for_compute
 
 # 31-bit Mersenne prime: pmod(h, p) < 2^31 and coeff < 2^31 keep every
 # intermediate product under 2^62 — no int64 overflow under ANSI mode.
 _MERSENNE = (1 << 31) - 1
 
 
-def _normalize(col: Column) -> Column:
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
 def _shingles(col: Column, k: int = 5, hash_fn=F.xxhash64) -> Column:
     """Word k-shingles → array of 64-bit hashes. `hash_fn` defaults to
     xxhash64 (fastest, the scale path); pass `portable.phash64` for runs that
     must be reproducible in engines without xxhash64 (the DuckDB oracle).
-
-    The word array is bound ONCE per row as a lambda variable (the outer
-    single-element `transform`): Catalyst does not hoist loop-invariant
-    subexpressions out of higher-order-function lambdas, so referencing
-    `split(regexp_replace(...))` directly inside the per-shingle lambda
-    re-runs the O(|text|) normalize+split per SHINGLE — O(|text|²) per doc.
-    Binding it as a lambda variable makes it O(|text|) (measured 1.8-2.6x
-    on the full minhash pipeline at sf1.0, r6)."""
-    norm = _normalize(col)
+    The word array is bound once per row (`bind_once`), so the per-shingle
+    lambda does not re-run the O(|text|) normalize+split per SHINGLE."""
 
     def _from_words(words: Column) -> Column:
         n = F.size(words)
@@ -50,30 +44,13 @@ def _shingles(col: Column, k: int = 5, hash_fn=F.xxhash64) -> Column:
             ),
         ).otherwise(F.array(hash_fn(F.array_join(words, " "))))
 
-    return F.element_at(F.transform(F.array(F.split(norm, " ")), _from_words), 1)
-
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Spread a narrow input across the cluster BEFORE shingle explosion.
-
-    Shingling multiplies each row's work ~|text| times, so parallelism must
-    be sized to the EXPLODED volume, not the input bytes: a single small
-    parquet row group (one scan task) would otherwise run the entire
-    corpus's shingle hashing on one core. Only repartitions when the input
-    has fewer partitions than the session's default parallelism — a real
-    100-TB corpus arrives in thousands of scan tasks and passes through
-    untouched (no shuffle added)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, id_col)
-    return df
+    return bind_once(F.split(normalize_text(col), " "), _from_words)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one doc per normalized-text hash (lowest id wins — deterministic)."""
-    h = F.xxhash64(_normalize(F.col(text_col)))
     return (
-        df.withColumn("_h", h)
+        df.withColumn("_h", fingerprint(F.col(text_col)))
         .groupBy("_h")
         .agg(F.min(F.col(id_col)).alias(id_col))
         .join(df, on=id_col, how="inner")
@@ -86,22 +63,6 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
 
     rnd = random.Random(42)
     return [(rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
-
-
-def minhash_signature(col: Column, num_hashes: int = 32, k_shingle: int = 5) -> Column:
-    """MinHash signature as an array column: per hash i, min over shingles of
-    (a_i*h + b_i) mod p. Coefficients are fixed (seeded) literals — identical
-    across executors. For large corpora prefer `minhash_signatures_exploded`
-    (explode + hash-agg stays in whole-stage codegen; nested higher-order
-    transforms do not)."""
-    sh = _shingles(col, k_shingle)
-    sigs = [
-        F.array_min(
-            F.transform(sh, lambda h: (F.pmod(h, F.lit(_MERSENNE)) * a + b) % _MERSENNE)
-        )
-        for a, b in _minhash_coeffs(num_hashes)
-    ]
-    return F.array(*sigs)
 
 
 def minhash_signatures_exploded(
@@ -124,8 +85,8 @@ def minhash_signatures_exploded(
     keep the exact `_shingles` semantics: greatest(n-k, 0) yields index 0,
     whose `otherwise` branch hashes the whole joined text."""
     k = k_shingle
-    norm = _normalize(F.col(text_col))
-    base = _spread(df, id_col).select(F.col(id_col), F.split(norm, " ").alias("_w"))
+    words = F.split(normalize_text(F.col(text_col)), " ")
+    base = spread_for_compute(df, id_col).select(F.col(id_col), words.alias("_w"))
     n = F.size(F.col("_w"))
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     ex = base.select(F.col(id_col), F.col("_w"), F.explode(idx).alias("_i"))
@@ -141,19 +102,21 @@ def minhash_signatures_exploded(
     return ex.groupBy(id_col).agg(*aggs)
 
 
-def minhash_lsh_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    k_shingle: int = 5,
-    hash_fn=F.xxhash64,
+def _lsh_stars(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int,
+    k_shingle: int, hash_fn,
 ) -> DataFrame:
-    """Near-duplicate clusters via banded MinHash LSH. Returns (id, dup_of)
-    pairs where dup_of is the smallest id sharing a band bucket (candidate
-    near-dup). Union-find over connected components is left to the caller
-    (or iterate pairs→min-label to convergence for full clustering)."""
+    """Banded MinHash LSH as star edges (id, dup_of): every doc that shares a
+    (band, bucket) with a smaller id, linked to that bucket's min id.
+
+    A window min over the banded rows instead of aggregate-then-self-join:
+    the join form instantiates the whole shingle+signature subtree once per
+    branch (Catalyst has no cross-branch reuse through an aggregate), so
+    every signature was computed twice. One partition-by-bucket window
+    keeps the subtree single-instance — fresh-plan noop wall at sf1.0/32c
+    fell 3.1s → 1.7s (r6). Skew note: a pathological mega-bucket funnels
+    into one window task, but the join form's shuffle keyed the same
+    (band, bucket) pair to one task too — no robustness lost."""
     rows_per_band = num_hashes // bands
     with_sig = minhash_signatures_exploded(df, text_col, id_col, num_hashes, k_shingle, hash_fn)
     band_rows = with_sig.select(
@@ -173,26 +136,29 @@ def minhash_lsh_dedup(
             ])
         ).alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
-    # min id per (band, bucket) = cluster representative candidate. A window
-    # min over the banded rows instead of aggregate-then-self-join: the
-    # join form instantiates the whole shingle+signature subtree once per
-    # branch (Catalyst has no cross-branch reuse through an aggregate), so
-    # every signature was computed twice. One partition-by-bucket window
-    # keeps the subtree single-instance — fresh-plan noop wall at sf1.0/32c
-    # fell 3.1s → 1.7s (r6). Skew note: a pathological mega-bucket funnels
-    # into one window task, but the join form's shuffle keyed the same
-    # (band, bucket) pair to one task too — no robustness lost.
-    from pyspark.sql import Window
-
     w = Window.partitionBy("band", "bucket")
-    pairs = (
+    return (
         band_rows.withColumn("_rep", F.min(id_col).over(w))
         .filter(F.col(id_col) != F.col("_rep"))
         .select(F.col(id_col), F.col("_rep").alias("dup_of"))
-        .groupBy(id_col)
-        .agg(F.min("dup_of").alias("dup_of"))
     )
-    return pairs
+
+
+def minhash_lsh_dedup(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    k_shingle: int = 5,
+    hash_fn=F.xxhash64,
+) -> DataFrame:
+    """Near-duplicate clusters via banded MinHash LSH. Returns (id, dup_of)
+    pairs where dup_of is the smallest id sharing a band bucket (candidate
+    near-dup). Union-find over connected components is left to the caller
+    (or iterate pairs→min-label to convergence for full clustering)."""
+    stars = _lsh_stars(df, text_col, id_col, num_hashes, bands, k_shingle, hash_fn)
+    return stars.groupBy(id_col).agg(F.min("dup_of").alias("dup_of"))
 
 
 def minhash_lsh_edges(
@@ -210,38 +176,7 @@ def minhash_lsh_edges(
     clustering: two docs share a component iff a bucket chain links them.
     Edge count is Σ(bucket size − 1) ≤ bands × docs — linear, never the
     quadratic all-pairs within a bucket."""
-    rows_per_band = num_hashes // bands
-    with_sig = minhash_signatures_exploded(
-        df, text_col, id_col, num_hashes, k_shingle, hash_fn
-    )
-    band_rows = with_sig.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    hash_fn(
-                        F.concat_ws(",", *[
-                            F.col(f"h{b * rows_per_band + r}").cast("string")
-                            for r in range(rows_per_band)
-                        ])
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # window min instead of aggregate+self-join — single signature-subtree
-    # instance, same star edges (see minhash_lsh_dedup)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket")
-    return (
-        band_rows.withColumn("_rep", F.min(id_col).over(w))
-        .filter(F.col(id_col) != F.col("_rep"))
-        .select(F.col(id_col), F.col("_rep").alias("dup_of"))
-        .distinct()
-    )
+    return _lsh_stars(df, text_col, id_col, num_hashes, bands, k_shingle, hash_fn).distinct()
 
 
 def connected_components(
@@ -321,7 +256,7 @@ def simhash_table(
     hash-agg columns (all shift amounts are literals → whole-stage codegen),
     then reassemble the sign pattern into one long. Map-side partial sums
     make the shuffle 64 longs per doc regardless of doc length."""
-    ex = _spread(df, id_col).select(
+    ex = spread_for_compute(df, id_col).select(
         F.col(id_col), F.explode(_shingles(F.col(text_col), k_shingle, hash_fn)).alias("_s")
     )
     votes = [
@@ -409,7 +344,7 @@ def ngram_jaccard_pairs(
     # materialized once: `ex` below is instantiated up to four times (stop-
     # shingle count, per-doc sizes, and both sides of the self-join) — the
     # shingle arrays must not be recomputed per instantiation
-    base = _spread(df, id_col).select(F.col(id_col), sh.alias("_sh")).withColumn(
+    base = spread_for_compute(df, id_col).select(F.col(id_col), sh.alias("_sh")).withColumn(
         "_n", F.size("_sh")
     ).localCheckpoint(eager=False)
     ex = base.select(id_col, "_n", F.explode("_sh").alias("_s"))
@@ -432,11 +367,8 @@ def ngram_jaccard_pairs(
                  F.col("a._n").alias("na"), F.col("b._n").alias("nb"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    # floor-form rounding: identical float ops on Spark and DuckDB (see
-    # __spark_entry__._rnd) so the oracle hash-compares bit-for-bit
     jac = inter.withColumn(
-        "jaccard",
-        F.floor(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")) * 1000000 + F.lit(0.5)) / 1000000,
+        "jaccard", floor_round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6)
     )
     return jac.filter(F.col("jaccard") >= min_jaccard).select("id_a", "id_b", "jaccard")
 
@@ -482,7 +414,7 @@ def decontaminate(
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    base = _spread(docs, id_col).select(
+    base = spread_for_compute(docs, id_col).select(
         F.col(id_col), _shingles(F.col(text_col), k_shingle, hash_fn).alias("_sh")
     )
     ex = base.select(id_col, F.size("_sh").alias("_n"), F.explode("_sh").alias("_s"))
@@ -497,9 +429,7 @@ def decontaminate(
         F.col(id_col),
         F.col("_n").cast("long").alias("n_grams"),
         F.col("n_hits").cast("long").alias("n_hits"),
-        (F.floor(F.col("n_hits") / F.col("_n") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "hit_ratio"
-        ),
+        floor_round(F.col("n_hits") / F.col("_n"), 6).alias("hit_ratio"),
         (F.col("n_hits") >= min_hits).cast("long").alias("contaminated"),
     )
 
@@ -520,16 +450,17 @@ def embedding_cosine_near_dups(
         dot_expr,
         hyperplane_bucket,
         norm_expr,
+        vector_dim,
     )
 
-    # _spread: the in-bucket pair count is ~|bucket|² per bucket — compute
+    if dim is None:
+        dim = vector_dim(df, vec_col)
+    # spread: the in-bucket pair count is ~|bucket|² per bucket — compute
     # volume far above the input bytes — and the scoring join's streaming
     # side inherits the partitioning materialized here. A single-row-group
     # parquet input would otherwise score every pair on one core (measured
     # 36 s → 3 s at 32 cores for 3.4M pairs, sf1).
-    base = _spread(df.select(F.col(id_col), F.col(vec_col)), id_col)
-    if dim is None:
-        dim = len(base.select(vec_col).first()[0])
+    base = spread_for_compute(df.select(F.col(id_col), F.col(vec_col)), id_col)
     # materialized once: the self-join instantiates `bucketed` twice, which
     # would run the n_planes dot products per side. The vector norm rides
     # along (one fold per ROW, materialized), so each of the quadratically
@@ -547,8 +478,7 @@ def embedding_cosine_near_dups(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            # floor-form rounding (cross-engine stable, see oracle_sqlgen)
-            (F.floor(cos * 100000 + F.lit(0.5)) / 100000).alias("cosine"),
+            floor_round(cos, 5).alias("cosine"),
         )
         .filter(F.col("cosine") >= min_cosine)
     )

@@ -1,4 +1,4 @@
-"""Cross-engine-portable 60-bit hash.
+"""Cross-engine-portable expressions: a 60-bit hash and floor rounding.
 
 The dedup/fingerprint kernels default to `xxhash64` (fastest JVM-side hash,
 the 100 TB path). The driver's DuckDB oracle cannot evaluate xxhash64, so
@@ -28,3 +28,13 @@ def phash64(col: Column) -> Column:
 def phash64_sql(expr: str) -> str:
     """The DuckDB twin of `phash64` over a SQL expression string."""
     return f"('0x' || substr(md5(({expr})::VARCHAR),1,15))::BIGINT"
+
+
+def floor_round(c: Column | str, n: int = 2) -> Column:
+    """Round to `n` decimals as floor(x*10^n + 0.5)/10^n: the SAME float ops
+    on Spark and DuckDB (the oracle twins spell it out in SQL), unlike
+    round(), whose half-up tie handling diverges at double-representation
+    boundaries (~1/5k values)."""
+    m = int(10**n)
+    c = F.col(c) if isinstance(c, str) else c
+    return F.floor(c * m + F.lit(0.5)) / m

@@ -1,16 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k — exact, one broadcast of the query set,
-`F.zip_with`-based dot product fully inside codegen. Scale path: random
-hyperplane LSH bucketing (query only probes its bucket ± multiprobe) — the
-IVF-style candidate reduction that survives a 100× corpus.
+`F.zip_with`-based dot product evaluated JVM-side. Scale paths: random
+hyperplane LSH bucketing (query only probes its bucket) and an IVF coarse
+quantizer (query probes its nearest centroid cells) — candidate reductions
+that survive a 100× corpus. All three share one scoring + top-k tail.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pentaho_kettle_spark.functions import bind_once
+from pentaho_kettle_spark.plans.spread import spread_for_compute
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -21,10 +25,6 @@ def dot_expr(a: Column, b: Column) -> Column:
 
 def norm_expr(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def _py_norm(v: list[float]) -> float:
@@ -41,22 +41,57 @@ def _py_norm(v: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _bind1(expr: Column, fn) -> Column:
-    """Bind `expr` once as a lambda variable (Catalyst does not hoist
-    loop-invariant subtrees out of higher-order-function lambdas)."""
-    return F.element_at(F.transform(F.array(expr), fn), 1)
+def vector_dim(df: DataFrame, vec_col: str) -> int:
+    """Length of the first non-NULL vector in `df` — a one-row driver sniff.
+    0 when there is none (an empty or all-NULL corpus): nothing can score a
+    real cosine then, and the plan still builds with its normal columns."""
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    return 0 if row is None else row[0]
 
 
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Per-row vector math multiplies each row's work ~dim×queries times, so
-    parallelism must track that compute volume, not the input bytes — a
-    single small parquet row group would score the whole corpus on one
-    core. No-op when the input already has enough partitions (a real
-    sharded corpus), so no shuffle is added at scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, id_col)
-    return df
+def _cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    query_id_col: str,
+    key: tuple | None = None,
+) -> DataFrame:
+    """Exact cosine of every candidate (query, corpus row) pair, then the k
+    best per query (ties to the lower id). `key = (name, corpus_fn,
+    query_fn)` restricts candidates to an equi-join on `name`, computed by
+    the two functions from each side's vector; `None` scores every pair.
+
+    Norms are precomputed once per side BELOW the join (the projections
+    can't collapse across it), so each scored pair pays one dot product
+    instead of dot + two re-derived norms — same doubles, same ops,
+    bit-identical cosines. The top-k is one row_number window per query
+    (no global sort)."""
+    cb = spread_for_compute(corpus, id_col)
+    qb = queries.select(
+        F.col(query_id_col),
+        F.col(vec_col).alias("_qv"),
+        norm_expr(F.col(vec_col)).alias("_qn"),
+    )
+    if key is not None:
+        name, corpus_fn, query_fn = key
+        cb = cb.withColumn(name, corpus_fn(F.col(vec_col)))
+        qb = qb.withColumn(name, query_fn(F.col("_qv")))
+    cb = cb.withColumn("_vn", norm_expr(F.col(vec_col)))
+    qb = F.broadcast(qb)
+    pairs = cb.crossJoin(qb) if key is None else cb.join(qb, on=key[0])
+    scored = pairs.select(
+        F.col(query_id_col),
+        F.col(id_col),
+        (dot_expr(F.col(vec_col), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias("cosine"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
+    )
 
 
 def brute_force_topk(
@@ -68,37 +103,8 @@ def brute_force_topk(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact cosine top-k per query: broadcast the (small) query set against
-    the corpus, score JVM-side, keep k per query with one aggregation
-    (no global sort; per-partition partial top-k via AQE hash agg)."""
-    # norms are precomputed once per side BELOW the join (the projections
-    # can't collapse across it), so each of the |corpus|·|queries| scored
-    # pairs pays one dot product instead of dot + two re-derived norms —
-    # same doubles, same ops, bit-identical cosines
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qv"),
-            norm_expr(F.col(vec_col)).alias("_qn"),
-        )
-    )
-    scored = (
-        _spread(corpus, id_col)
-        .withColumn("_vn", norm_expr(F.col(vec_col)))
-        .crossJoin(q)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            (dot_expr(F.col(vec_col), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias("cosine"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    the corpus and score every pair JVM-side."""
+    return _cosine_topk(corpus, queries, k, vec_col, id_col, query_id_col)
 
 
 def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -134,32 +140,13 @@ def lsh_ann_topk(
     candidates. Recall rises with fewer planes / multiprobe; this is the IVF
     analog where the 'inverted list' is the LSH bucket."""
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    cb = (
-        _spread(corpus, id_col)
-        .withColumn("_bkt", hyperplane_bucket(F.col(vec_col), dim, n_planes))
-        .withColumn("_vn", norm_expr(F.col(vec_col)))
-    )
-    qb = F.broadcast(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qv"),
-            norm_expr(F.col(vec_col)).alias("_qn"),
-        ).withColumn("_bkt", hyperplane_bucket(F.col("_qv"), dim, n_planes))
-    )
-    # per-side norms precomputed below the join (see brute_force_topk)
-    scored = cb.join(qb, on="_bkt").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (dot_expr(F.col(vec_col), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias("cosine"),
-    )
-    from pyspark.sql import Window
+        dim = vector_dim(corpus, vec_col)
 
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    def bucket(v):
+        return hyperplane_bucket(v, dim, n_planes)
+
+    return _cosine_topk(
+        corpus, queries, k, vec_col, id_col, query_id_col, key=("_bkt", bucket, bucket)
     )
 
 
@@ -219,10 +206,10 @@ def ivf_topk(
             ]
             return -F.array_max(F.array(*entries))["ni"]
 
-        return _bind1(norm_expr(vec), _inner)
+        return bind_once(norm_expr(vec), _inner)
 
     def _probe_expr(vec: Column) -> Column:
-        # the n_probe nearest cells: sort struct(-cos, idx) ascending
+        # the n_probe nearest cells, one row each: sort struct(-cos, idx) ascending
         def _inner(nv):
             entries = [
                 F.struct(
@@ -234,31 +221,8 @@ def ivf_topk(
             ordered = F.sort_array(F.array(*entries))
             return F.transform(F.slice(ordered, 1, n_probe), lambda s: s["i"])
 
-        return _bind1(norm_expr(vec), _inner)
+        return F.explode(bind_once(norm_expr(vec), _inner))
 
-    cb = (
-        _spread(corpus, id_col)
-        .withColumn("_cell", _cell_expr(F.col(vec_col)))
-        .withColumn("_vn", norm_expr(F.col(vec_col)))
-    )
-    qb = F.broadcast(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qv"),
-            norm_expr(F.col(vec_col)).alias("_qn"),
-        ).withColumn("_cell", F.explode(_probe_expr(F.col("_qv"))))
-    )
-    # per-side norms precomputed below the join (see brute_force_topk)
-    scored = cb.join(qb, on="_cell").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (dot_expr(F.col(vec_col), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias("cosine"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    return _cosine_topk(
+        corpus, queries, k, vec_col, id_col, query_id_col, key=("_cell", _cell_expr, _probe_expr)
     )

@@ -8,6 +8,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pentaho_kettle_spark.functions import bind_once
+from pentaho_kettle_spark.functions.portable import floor_round
+
 _STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
     "for", "on", "with", "as", "was", "at", "by", "be", "this",
@@ -30,54 +33,30 @@ def token_count(col: Column) -> Column:
     return (words + punct).cast("long")
 
 
-def quality_score(col: Column) -> Column:
-    """Length / punctuation / stopword-ratio composite in [0, 1]."""
-    length = F.length(col).cast("double")
-    words = F.split(F.lower(col), r"\s+")
-    n_words = F.size(words).cast("double")
-    stop_hits = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS))).cast("double")
-    stop_ratio = F.when(n_words > 0, stop_hits / n_words).otherwise(F.lit(0.0))
-    punct_ratio = F.length(F.regexp_replace(col, r"[a-zA-Z0-9\s]", "")) / F.greatest(length, F.lit(1.0))
-    len_score = F.least(length / F.lit(500.0), F.lit(1.0))
-    avg_word = F.when(n_words > 0, length / n_words).otherwise(F.lit(0.0))
-    word_score = F.when((avg_word >= 3) & (avg_word <= 12), F.lit(1.0)).otherwise(F.lit(0.3))
-    raw = (
-        0.4 * len_score + 0.2 * (1 - F.least(punct_ratio * 4, F.lit(1.0)))
-        + 0.2 * F.least(stop_ratio * 5, F.lit(1.0)) + 0.2 * word_score
-    )
-    # floor-form rounding: same float ops on Spark and DuckDB (oracle parity)
-    return F.floor(raw * 1000000 + F.lit(0.5)) / 1000000
+def normalize_text(col: Column) -> Column:
+    """Trimmed, lower-cased, whitespace runs collapsed to one space — the
+    text that fingerprints and shingles hash."""
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def language_id(col: Column) -> Column:
-    """Function-word-voting language heuristic → 2-letter code or 'und'."""
-    words = F.split(F.lower(col), r"\s+")
-    scores = []
-    for lang, markers in _LANG_MARKERS.items():
-        hits = F.size(F.filter(words, lambda w: w.isin(*markers)))
-        scores.append(F.struct(hits.alias("hits"), F.lit(lang).alias("lang")))
-    best = F.array_max(F.array(*scores))
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def fingerprint(col: Column, normalize: bool = True, hash_fn=F.xxhash64) -> Column:
+def fingerprint(col: Column, hash_fn=F.xxhash64) -> Column:
     """Document fingerprint: 64-bit hash of the normalized text (rolling-hash
     equivalent at document granularity; shingle-level hashing lives in
     functions/dedup.py). `hash_fn=portable.phash64` gives a DuckDB-
     reproducible fingerprint for oracle runs."""
-    c = col
-    if normalize:
-        c = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    return hash_fn(c)
+    return hash_fn(normalize_text(col))
 
 
 def add_text_features(df: DataFrame, text_col: str = "text", hash_fn=F.xxhash64) -> DataFrame:
-    """Fused twin of token_count + quality_score + language_id + fingerprint
-    (bit-identical math). The standalone helpers each re-split the text per
-    referencing expression — Catalyst CSE does not fire across
-    higher-order-function trees — so the shared lowercase word array here is
-    evaluated ONCE per row into a struct in its own projection, and every
-    word-derived term reads a struct field (same binding fix as
+    """Token count, quality score, language id and fingerprint in one pass.
+
+    `quality` is a length / punctuation / stopword-ratio composite in
+    [0, 1], floor-rounded to 6 dp; `lang_pred` is a function-word vote →
+    2-letter code or 'und'. Separate per-feature expressions would each
+    re-split the text per referencing expression — Catalyst CSE does not
+    fire across higher-order-function trees — so the shared lowercase word
+    array is evaluated ONCE per row into a struct in its own projection,
+    and every word-derived term reads a struct field (same binding fix as
     gopher_quality; measured 8.5 → ~4 s per 50 k sf1 docs)."""
     c = F.col(text_col)
     lower_words = F.split(F.lower(c), r"\s+")
@@ -94,14 +73,12 @@ def add_text_features(df: DataFrame, text_col: str = "text", hash_fn=F.xxhash64)
             ],
         )
 
-    stats = df.withColumn(
-        "_tw", F.element_at(F.transform(F.array(lower_words), _word_metrics), 1)
-    )
+    stats = df.withColumn("_tw", bind_once(lower_words, _word_metrics))
     m = F.col("_tw")
     n_words = m["n_words"]
     stop_hits = m["stop_hits"]
 
-    # quality_score, verbatim arithmetic over the bound fields
+    # quality score over the bound fields
     length = F.length(c).cast("double")
     stop_ratio = F.when(n_words > 0, stop_hits / n_words).otherwise(F.lit(0.0))
     punct_ratio = F.length(F.regexp_replace(c, r"[a-zA-Z0-9\s]", "")) / F.greatest(
@@ -116,9 +93,9 @@ def add_text_features(df: DataFrame, text_col: str = "text", hash_fn=F.xxhash64)
         0.4 * len_score + 0.2 * (1 - F.least(punct_ratio * 4, F.lit(1.0)))
         + 0.2 * F.least(stop_ratio * 5, F.lit(1.0)) + 0.2 * word_score
     )
-    quality = F.floor(raw * 1000000 + F.lit(0.5)) / 1000000
+    quality = floor_round(raw, 6)
 
-    # language_id, verbatim struct-vote over the bound per-language hits
+    # language id: struct-vote over the bound per-language hits
     scores = [
         F.struct(m[f"hits_{lang}"].alias("hits"), F.lit(lang).alias("lang"))
         for lang in _LANG_MARKERS
@@ -191,11 +168,6 @@ GOPHER_DEFAULTS = dict(
 _GOPHER_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def _r6(c: Column) -> Column:
-    # floor-form 6dp rounding: identical float ops on Spark and DuckDB
-    return F.floor(c * 1000000 + F.lit(0.5)) / 1000000
-
-
 def gopher_quality(
     df: DataFrame,
     text_col: str = "text",
@@ -231,16 +203,6 @@ def gopher_quality(
     nonspace_chars = F.length(F.regexp_replace(c, r"\s", "")).cast("double")
     symbols = F.size(F.regexp_extract_all(c, F.lit(r"(#|\.\.\.)"), F.lit(0)))
 
-    # Lambda-variable binding (r6, same fix as dedup._shingles): Catalyst
-    # does not hoist loop-invariant subexpressions out of higher-order
-    # lambdas, so a lambda body that references the ARRAY EXPRESSION itself
-    # (F.get(ls, i-1) where ls = array_sort(filter(split(text)))) re-runs
-    # the whole split+sort once per ELEMENT — O(n²·|text|) per document.
-    # Binding the array as a lambda variable through a single-element outer
-    # transform makes every F.get a cheap bound-reference index.
-    def _bind1(expr, fn):
-        return F.element_at(F.transform(F.array(expr), fn), 1)
-
     # duplicate-line metrics: sort once, duplicates become adjacent
     lines = F.array_sort(
         F.filter(F.split(c, "\n"), lambda x: F.trim(x) != "")
@@ -272,7 +234,7 @@ def gopher_quality(
         )
 
     # top-2-gram share: longest equal run in the sorted gram array —
-    # words and the gram array are each bound once (see _bind1 note)
+    # words and the gram array are each bound once (bind_once)
     def _word_metrics(ws):
         grams = F.array_sort(
             F.transform(
@@ -314,7 +276,7 @@ def gopher_quality(
                     ws, F.array(*[F.lit(s) for s in _GOPHER_STOPS])
                 )
             ).alias("stop_hits"),
-            _bind1(grams, _top_run).alias("gram"),
+            bind_once(grams, _top_run).alias("gram"),
         )
 
     # ONE evaluation of the text → words/lines pipelines per row (second
@@ -325,8 +287,8 @@ def gopher_quality(
     # non-cheap and referenced many times, so split/lower/sort run once per
     # row instead of once per referencing output column.
     metrics = F.struct(
-        _bind1(words, _word_metrics).alias("w"),
-        _bind1(lines, _line_metrics).alias("l"),
+        bind_once(words, _word_metrics).alias("w"),
+        bind_once(lines, _line_metrics).alias("l"),
         nonspace_chars.alias("nonspace"),
         symbols.alias("symbols"),
     )
@@ -335,26 +297,26 @@ def gopher_quality(
     m = F.col("_m")
     n_words = m["w"]["n"].cast("long")
     mean_word_len = F.when(
-        n_words > 0, _r6(m["nonspace"] / n_words)
+        n_words > 0, floor_round(m["nonspace"] / n_words, 6)
     ).otherwise(F.lit(0.0))
     frac_alpha = F.when(
-        n_words > 0, _r6(m["w"]["alpha"] / n_words)
+        n_words > 0, floor_round(m["w"]["alpha"] / n_words, 6)
     ).otherwise(F.lit(0.0))
     symbol_ratio = F.when(
-        n_words > 0, _r6(m["symbols"] / n_words)
+        n_words > 0, floor_round(m["symbols"] / n_words, 6)
     ).otherwise(F.lit(0.0))
     stop_hits = m["w"]["stop_hits"].cast("long")
     n_lines = m["l"]["n"].cast("long")
     dup_line_frac = F.when(
-        n_lines > 0, _r6(m["l"]["extras"] / n_lines)
+        n_lines > 0, floor_round(m["l"]["extras"] / n_lines, 6)
     ).otherwise(F.lit(0.0))
     dup_line_char_frac = F.when(
         m["l"]["total_chars"] > 0,
-        _r6(m["l"]["member_chars"] / m["l"]["total_chars"]),
+        floor_round(m["l"]["member_chars"] / m["l"]["total_chars"], 6),
     ).otherwise(F.lit(0.0))
     n_grams = m["w"]["gram"]["n"]
     top_share = F.when(
-        n_grams > 0, _r6(m["w"]["gram"]["top"] / n_grams)
+        n_grams > 0, floor_round(m["w"]["gram"]["top"] / n_grams, 6)
     ).otherwise(F.lit(0.0))
 
     out = stats.select(

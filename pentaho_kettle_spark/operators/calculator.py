@@ -7,9 +7,9 @@ columns (A, B, C) — JVM-side, inside whole-stage codegen; zero Python in the
 hot path. Functions Kettle evaluates with java.util.Calendar (working days,
 ISO week) are expressed with Spark datetime functions. Phonetic and
 edit-distance codes with no Catalyst builtin (METAPHONE, DOUBLE_METAPHONE,
-DAMERAU_LEVENSHTEIN, NEEDLEMAN_WUNSCH, JARO, CHECKSUM_ADLER32) run as
-Arrow-batched pandas_udfs over self-contained pure-python kernels in
-functions/strings_udf.py. DOUBLE_METAPHONE is the Philips-2000 variant
+DAMERAU_LEVENSHTEIN, NEEDLEMAN_WUNSCH, JARO, JARO_WINKLER,
+CHECKSUM_ADLER32) run as Arrow-batched pandas_udfs over self-contained
+pure-python kernels in functions/strings_udf.py. DOUBLE_METAPHONE is the Philips-2000 variant
 (primary code, maxCodeLen=4 — what Kettle gets from Commons Codec).
 """
 
@@ -105,8 +105,8 @@ CALC_FUNCTIONS: dict[str, object] = {
     "IS_NOT_NULL": lambda a, b, c: a.isNotNull(),
     "TRUE": lambda a, b, c: F.lit(True),
     "FALSE": lambda a, b, c: F.lit(False),
-    "JARO": lambda a, b, c: _jaro(a, b),
-    "JARO_WINKLER": lambda a, b, c: _jaro_winkler(a, b),
+    "JARO": lambda a, b, c: _udf2("jaro_udf", a, b),
+    "JARO_WINKLER": lambda a, b, c: _udf2("jaro_winkler_udf", a, b),
     # extended sweep (round 2): remaining CalculatorMetaFunction constants
     "ADD3": lambda a, b, c: a + b + c,
     "MAXIMUM": lambda a, b, c: F.greatest(a, b),
@@ -136,21 +136,6 @@ def _udf2(name: str, a: Column, b: Column) -> Column:
     from pentaho_kettle_spark.functions import strings_udf
 
     return getattr(strings_udf, name)(a.cast("string"), b.cast("string"))
-
-
-def _jaro(a: Column, b: Column) -> Column:
-    """Jaro similarity. No Catalyst builtin — computed via a tight SQL
-    higher-order-function expression would be unwieldy, so this uses the
-    pandas_udf path (Arrow-vectorized, allowed by input_hint)."""
-    from pentaho_kettle_spark.functions.strings_udf import jaro_udf
-
-    return jaro_udf(a.cast("string"), b.cast("string"))
-
-
-def _jaro_winkler(a: Column, b: Column) -> Column:
-    from pentaho_kettle_spark.functions.strings_udf import jaro_winkler_udf
-
-    return jaro_winkler_udf(a.cast("string"), b.cast("string"))
 
 
 @dataclass

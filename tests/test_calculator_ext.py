@@ -165,3 +165,28 @@ def test_double_metaphone_via_calculator(spark):
     out = ops.calculator(df, [Calc("code", "DOUBLE_METAPHONE", "name")])
     got = {r.name: r.code for r in out.collect()}
     assert got == {"smith": "SM0", "schmidt": "XMT", "jose": "HS", None: None}
+
+
+def test_jaro_via_calculator_matches_udfs(spark):
+    """JARO / JARO_WINKLER through ops.calculator give exactly what the
+    strings_udf pandas_udfs give, NULL operands included."""
+    from pentaho_kettle_spark import operators as ops
+    from pentaho_kettle_spark.functions.strings_udf import jaro_udf, jaro_winkler_udf
+    from pentaho_kettle_spark.operators.calculator import Calc
+
+    df = spark.createDataFrame(
+        [(1, "martha", "marhta"), (2, "dwayne", "duane"), (3, "dixon", "dicksonx"),
+         (4, "same", "same"), (5, "abc", None), (6, None, None)],
+        "id int, s1 string, s2 string",
+    )
+    out = ops.calculator(df, [
+        Calc("j", "JARO", "s1", "s2"),
+        Calc("jw", "JARO_WINKLER", "s1", "s2"),
+    ]).withColumn("ref_j", jaro_udf(F.col("s1"), F.col("s2"))) \
+      .withColumn("ref_jw", jaro_winkler_udf(F.col("s1"), F.col("s2")))
+    rows = {r.id: r for r in out.collect()}
+    for r in rows.values():
+        assert (r.j, r.jw) == (r.ref_j, r.ref_jw), r
+    assert abs(rows[1].j - 0.944444) < 1e-6 and abs(rows[1].jw - 0.961111) < 1e-6
+    assert rows[4].j == rows[4].jw == 1.0
+    assert rows[5].j is None and rows[6].jw is None

@@ -433,3 +433,51 @@ def test_salt_estimate_uses_the_fraction_actually_sampled(spark, tmp_path):
     rows, sampled_total, fraction = hot_key_counts(log, ["k"])
     assert rows[0]["k"] == -1 and rows[0]["count"] == 10_000
     assert sampled_total == 20_000 and fraction == 1.0
+
+
+def test_minhash_lsh_plans_keep_one_signature_subtree(spark):
+    """The window-min banding (r6, 4.46x on minhash_dedup) computes the
+    shingle+signature subtree once: one shingle-index explode, one band
+    explode, one Window, and no join that would instantiate the subtree
+    twice — for both the dedup and the edges tail."""
+    from pentaho_kettle_spark.functions.dedup import minhash_lsh_dedup, minhash_lsh_edges
+
+    df = spark.createDataFrame(
+        [(i, f"doc {i % 5} shares a few words with its near duplicate twin") for i in range(20)],
+        "doc_id long, text string",
+    )
+    for fn in (minhash_lsh_dedup, minhash_lsh_edges):
+        plan = fn(df, "text", "doc_id", num_hashes=16, bands=4)._jdf.queryExecution().executedPlan()
+        nodes = [ln.lstrip(" +-:") for ln in plan.toString().splitlines()]
+        assert sum(n.startswith("Generate explode(sequence") for n in nodes) == 1, fn
+        assert sum(n.startswith("Generate explode(array") for n in nodes) == 1, fn
+        assert sum(n.startswith("Generate") for n in nodes) == 2, fn
+        assert sum(n.startswith("Window") for n in nodes) == 1, fn
+        assert not any("SortMergeJoin" in n or "HashJoin" in n for n in nodes), fn
+
+
+def test_vector_dim_sniff_skips_null_and_empty(spark):
+    """lsh_ann_topk and embedding_cosine_near_dups sniff `dim` from the first
+    non-NULL vector: a NULL first vector gives the same rows as an explicit
+    dim, and an empty corpus gives an empty result with the normal columns."""
+    from pentaho_kettle_spark.functions.dedup import embedding_cosine_near_dups
+    from pentaho_kettle_spark.functions.similarity import lsh_ann_topk
+
+    schema = "vec_id long, embedding array<double>"
+    vecs = [(1, None), (2, [1.0, 0.0, 0.0]), (3, [0.9, 0.1, 0.0]), (4, [0.0, 0.0, 1.0])]
+    corpus = spark.createDataFrame(vecs, schema).coalesce(1)
+    empty = spark.createDataFrame([], schema)
+    queries = corpus.filter(F.col("vec_id") > 1).withColumnRenamed("vec_id", "query_id")
+
+    def ann(c, dim=None):
+        return lsh_ann_topk(c, queries, k=2, n_planes=4, dim=dim)
+
+    def near(c, dim=None):
+        return embedding_cosine_near_dups(c, min_cosine=0.5, n_lsh_planes=4, dim=dim)
+
+    for fn, cols in ((ann, ["query_id", "vec_id", "cosine"]), (near, ["id_a", "id_b", "cosine"])):
+        got = fn(corpus)
+        assert sorted(got.collect()) == sorted(fn(corpus, dim=3).collect())
+        assert got.count() > 0
+        out = fn(empty)
+        assert out.columns == cols and out.collect() == []
