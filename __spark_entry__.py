@@ -13,8 +13,11 @@ across engines.
 
 from __future__ import annotations
 
+import contextlib
 import os
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1001,6 +1004,51 @@ def _q_formula_step(spark, sf):
     )
 
 
+# --------------------------------------------------------------------------
+# table-backed rows: one scratch dir, one change log, one table handle
+# --------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh scratch directory (under /dev/shm when the host has it),
+    removed on exit, also when the body raises. Rows materialise their
+    result (localCheckpoint(eager=True)) inside the `with`, before the
+    files it reads are gone."""
+    parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    root = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _events_changelog(spark, sf, *extra):
+    """`events` as a change log keyed (user_id, event_type): LWW on ts,
+    seq = event_id, and every event whose event_id is a multiple of 11 is a
+    delete. `extra` columns (names or Columns) ride along at the end."""
+    return _t(spark, sf, "events").select(
+        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
+        F.col("event_id").cast("long").alias("seq"),
+        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
+        *extra,
+    )
+
+
+def _events_table(spark, root, rows, *, compact_delta_files, n_buckets=8,
+                  cols=("user_id", "event_type", "value", "ts")):
+    """An empty MoR table at `root` keyed (user_id, event_type) with LWW on
+    ts; its schema is `cols` as typed in `rows`."""
+    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
+
+    tio = ParquetSnapshotTableIO(
+        spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
+        n_buckets=n_buckets, write_mode="mor", compact_delta_files=compact_delta_files,
+    )
+    tio.init_empty(rows.select(*cols).schema)
+    return tio
+
+
 def _q_ktr_textfile_gz(spark, sf):
     """TextFileInput through the driver gate (SURVEY §2.1
     textfileinput/TextFileInput.java): nation is exported as GZIPPED
@@ -1008,16 +1056,11 @@ def _q_ktr_textfile_gz(spark, sf):
     it back via a directory + filemask wildcard (part-.*\\.csv\\.gz) with
     header skip — the loader resolves the mask, Spark decompresses by
     extension, declared Kettle types become the scan schema."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.plans.ktr import run_ktr
     from pentaho_kettle_spark.sources.files import csv_output
 
     n = _t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_tfi_corr_", dir=tmp_parent)
-    try:
+    with _scratch("pks_tfi_corr_") as root:
         csv_output(n, f"{root}/gz", header=True, delimiter="|",
                    compression="gzip")
         outs = run_ktr(
@@ -1026,8 +1069,6 @@ def _q_ktr_textfile_gz(spark, sf):
             variables={"DATA_DIR": f"{root}/gz"},
         )
         return outs["Read nation files"].localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_ktr_json_input(spark, sf):
@@ -1036,9 +1077,6 @@ def _q_ktr_json_input(spark, sf):
     (to_json over nested structs), then examples/orders_json.ktr extracts
     $.key / $.meta.status / $.meta.total via JSONPath fields and casts to
     the declared Kettle types — all get_json_object, zero Python."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.plans.ktr import run_ktr
 
     o = _t(spark, sf, "orders").select(
@@ -1052,9 +1090,7 @@ def _q_ktr_json_input(spark, sf):
             )
         ).alias("value")
     )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_json_corr_", dir=tmp_parent)
-    try:
+    with _scratch("pks_json_corr_") as root:
         o.write.mode("overwrite").option("compression", "gzip").text(
             f"{root}/gz"
         )
@@ -1064,8 +1100,6 @@ def _q_ktr_json_input(spark, sf):
             variables={"DATA_DIR": f"{root}/gz"},
         )
         return outs["Read order docs"].localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_ktr_mapping_fee(spark, sf):
@@ -1178,33 +1212,17 @@ def _dmeta_oracle_sql() -> str:
 
 
 def _q_cdc_merge_apply(spark, sf):
-    """END-TO-END tableio oracle row: derive a deterministic changelog from
-    `events` (key = (user_id, event_type), seq = event_id, delete when
-    event_id % 11 == 0), replay it through ParquetSnapshotTableIO in FOUR
-    out-of-order merge_apply batches (MoR mode + inline compaction +
-    a final full compact), then read the table back. The LWW contract makes
-    the result identical to a single global collapse — which is exactly what
-    the DuckDB oracle computes."""
-    import shutil
-    import tempfile
-
+    """END-TO-END tableio oracle row: derive the deterministic changelog
+    `_events_changelog` from `events`, replay it through
+    ParquetSnapshotTableIO in FOUR out-of-order merge_apply batches (MoR
+    mode + inline compaction + a final full compact), then read the table
+    back. The LWW contract makes the result identical to a single global
+    collapse — which is exactly what the DuckDB oracle computes."""
     from pentaho_kettle_spark.cdc.lww import lww_collapse
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_cdc_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=2,
-        )
-        data_schema = ev.select("user_id", "event_type", "value", "ts").schema
-        tio.init_empty(data_schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_cdc_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=2)
         for i in range(4):
             batch = ev.filter(F.pmod(F.col("seq"), F.lit(4)) == i)
             collapsed = lww_collapse(
@@ -1217,8 +1235,6 @@ def _q_cdc_merge_apply(spark, sf):
         )
         # materialize before the table root is deleted
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_schema_evolution(spark, sf):
@@ -1229,26 +1245,11 @@ def _q_cdc_schema_evolution(spark, sf):
     are read back under the new names with NULL-filled added columns; the
     DuckDB oracle computes the identical per-key winner with
     props visible only when the winner came from batch B."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", "props",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_evo_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=2,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf, "props")
+    with _scratch("pks_evo_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=2)
         b_a = ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 0).select(
             "user_id", "event_type", "value", "ts", "seq", "op"
         )
@@ -1267,8 +1268,6 @@ def _q_cdc_schema_evolution(spark, sf):
             _us("ts").alias("ts_us"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_incremental_read(spark, sf):
@@ -1281,25 +1280,11 @@ def _q_cdc_incremental_read(spark, sf):
     — reading only the buckets the interval touched. The DuckDB oracle
     recomputes both endpoint states as windowed winners (subset vs full
     log) and classifies with a full outer join."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_incr_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=2,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_incr_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=2)
         apply_batch(tio, ev.filter(F.pmod(F.col("seq"), F.lit(3)) == 0), batch_id="inc-a")
         snap_a = tio.snapshot_id()
         for i in (1, 2):
@@ -1310,8 +1295,6 @@ def _q_cdc_incremental_read(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us"), "_change_type"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_recent_scan(spark, sf):
@@ -1325,26 +1308,13 @@ def _q_cdc_recent_scan(spark, sf):
     file and pruned rows are either LWW losers or winners the post-filter
     drops. The DuckDB oracle collapses the FULL log and filters ts > cut."""
     import datetime as dt
-    import shutil
-    import tempfile
 
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
+    ev = _events_changelog(spark, sf)
     cut = dt.datetime(2024, 1, 20)
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_recent_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=64,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    with _scratch("pks_recent_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=64)
         apply_batch(tio, ev.filter(F.col("ts") <= F.lit(cut)), batch_id="rec-old")
         apply_batch(tio, ev.filter(F.col("ts") > F.lit(cut)), batch_id="rec-new")
         out = tio.read(lww_after=cut)
@@ -1355,8 +1325,6 @@ def _q_cdc_recent_scan(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_rollback_replay(spark, sf):
@@ -1368,25 +1336,11 @@ def _q_cdc_rollback_replay(spark, sf):
     so re-applying the good batch B under the same batch_id is not a
     duplicate. The DuckDB oracle is the collapse of A + good-B — the
     corrupt commit must leave no trace."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_rb_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=16,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_rb_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=16)
         b_a = ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 0)
         b_b = ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 1)
         apply_batch(tio, b_a, batch_id="rb-a")
@@ -1400,8 +1354,6 @@ def _q_cdc_rollback_replay(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_rebucket(spark, sf):
@@ -1414,25 +1366,12 @@ def _q_cdc_rebucket(spark, sf):
     to readers — and a reopened handle must adopt 16 buckets from the
     manifest. The DuckDB oracle is the windowed LWW collapse of the full
     log, identical to what a never-rebucketed table would hold."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
     from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_rbk_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=4, write_mode="mor", compact_delta_files=16,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_rbk_corr_") as root:
+        tio = _events_table(spark, root, ev, n_buckets=4, compact_delta_files=16)
         for i in (0, 1):
             apply_batch(
                 tio, ev.filter(F.pmod(F.col("seq"), F.lit(3)) == i),
@@ -1454,8 +1393,6 @@ def _q_cdc_rebucket(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_branch_wap(spark, sf):
@@ -1467,25 +1404,11 @@ def _q_cdc_branch_wap(spark, sf):
     equal the full-log collapse, and the staged batch must be absent from
     main's ledger until the publish. Oracle: windowed LWW collapse of the
     full log."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_wap_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=16,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_wap_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=16)
         apply_batch(tio, ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 0),
                     batch_id="wap-a")
         main_head = tio.snapshot_id()
@@ -1502,8 +1425,6 @@ def _q_cdc_branch_wap(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_point_lookup(spark, sf):
@@ -1514,25 +1435,11 @@ def _q_cdc_point_lookup(spark, sf):
     equality predicate through the LWW collapse into the parquet scan —
     O(bucket) IO where a naive read is O(table). The DuckDB oracle is the
     full-log windowed collapse filtered to user_id = 7."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_pl_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=None,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_pl_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=None)
         for i in (0, 1):
             apply_batch(
                 tio, ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i),
@@ -1548,8 +1455,6 @@ def _q_cdc_point_lookup(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_delete_where(spark, sf):
@@ -1561,25 +1466,11 @@ def _q_cdc_delete_where(spark, sf):
     erased version), so the final state equals the full-log collapse with
     purchase-winners filtered out. Oracle: windowed collapse WHERE the
     winner is not a purchase."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_dw_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=16,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_dw_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=16)
         for i in (0, 1):
             apply_batch(
                 tio, ev.filter(F.pmod(F.col("seq"), F.lit(2)) == i),
@@ -1591,8 +1482,6 @@ def _q_cdc_delete_where(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_optimize_maintenance(spark, sf):
@@ -1605,26 +1494,12 @@ def _q_cdc_optimize_maintenance(spark, sf):
     state bit-identical to the full-log collapse — asserted via
     meta_files() (zero 'delta'-kind files survive) and hash-verified
     against the DuckDB windowed-collapse twin."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
     from pentaho_kettle_spark.tableio.compaction import CompactionPolicy, optimize
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_opt_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=None,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_opt_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=None)
         for i in range(4):
             apply_batch(
                 tio, ev.filter(F.pmod(F.col("seq"), F.lit(4)) == i),
@@ -1648,8 +1523,6 @@ def _q_cdc_optimize_maintenance(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_follow_tail(spark, sf):
@@ -1661,26 +1534,12 @@ def _q_cdc_follow_tail(spark, sf):
     update after-images, delete before-images). The DuckDB twin recomputes
     both interval diffs from the raw log (A vs A∪B, A∪B vs full) and
     classifies with full outer joins."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.incremental import follow
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_fol_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=16,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_fol_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=16)
         apply_batch(tio, ev.filter(F.pmod(F.col("seq"), F.lit(3)) == 0),
                     batch_id="fol-a")
         gen = follow(tio, poll_interval=0.0, max_polls=8)
@@ -1696,8 +1555,6 @@ def _q_cdc_follow_tail(spark, sf):
             "_change_type", "poll",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_patch_upsert(spark, sf):
@@ -1711,10 +1568,6 @@ def _q_cdc_patch_upsert(spark, sf):
     which the DuckDB oracle computes with first_value(... IGNORE NULLS)
     windows."""
     import datetime as dt
-    import shutil
-    import tempfile
-
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
     ev = _t(spark, sf, "events").select(
         "user_id", "event_type",
@@ -1727,15 +1580,10 @@ def _q_cdc_patch_upsert(spark, sf):
         F.col("event_id").cast("long").alias("_seq"),
     )
     cut = dt.datetime(2024, 1, 20)
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_patch_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=16,
-        )
-        tio.init_empty(
-            ev.select("user_id", "event_type", "value", "label", "ts").schema
+    with _scratch("pks_patch_corr_") as root:
+        tio = _events_table(
+            spark, root, ev, compact_delta_files=16,
+            cols=("user_id", "event_type", "value", "label", "ts"),
         )
         tio.patch_apply(ev.filter(F.col("ts") <= F.lit(cut)), batch_id="patch-a")
         tio.patch_apply(ev.filter(F.col("ts") > F.lit(cut)), batch_id="patch-b")
@@ -1743,8 +1591,6 @@ def _q_cdc_patch_upsert(spark, sf):
             "user_id", "event_type", "value", "label", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_type_widen(spark, sf):
@@ -1756,28 +1602,14 @@ def _q_cdc_type_widen(spark, sf):
     truncated int (as double) or B's exact double; the oracle reproduces
     the truncation with trunc() (Spark ANSI cast double→int truncates
     toward zero, DuckDB's bare cast rounds)."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_widen_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=2,
-        )
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_widen_corr_") as root:
         b_a = ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 0).withColumn(
             "value", F.col("value").cast("int")
         )
-        tio.init_empty(b_a.select("user_id", "event_type", "value", "ts").schema)
+        tio = _events_table(spark, root, b_a, compact_delta_files=2)
         apply_batch(tio, b_a, batch_id="wid-a")
         assert [f["type"] for f in tio.schema().fields if f["name"] == "value"] == ["int"]
         apply_batch(tio, ev.filter(F.pmod(F.col("seq"), F.lit(2)) == 1), batch_id="wid-b")
@@ -1786,8 +1618,6 @@ def _q_cdc_type_widen(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_incremental_agg(spark, sf):
@@ -1798,26 +1628,12 @@ def _q_cdc_incremental_agg(spark, sf):
     aggregate table. The final aggregate must equal a from-scratch GROUP BY
     over the final winners, which is exactly what the DuckDB oracle
     computes. No sync ever rescans the base table."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.incremental import IncrementalAggregate
     from pentaho_kettle_spark.cdc.replay import apply_batch
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value", F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_incagg_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root + "/base", key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=2,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_incagg_corr_") as root:
+        tio = _events_table(spark, root + "/base", ev, compact_delta_files=2)
         agg = IncrementalAggregate(
             spark, root + "/agg", tio, ["event_type"], ["value"], n_buckets=4
         )
@@ -1830,8 +1646,6 @@ def _q_cdc_incremental_agg(spark, sf):
             "event_type", "cnt", floor_round("sum_value", 2).alias("sum_value")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_lineage_metrics(spark, sf):
@@ -1843,26 +1657,11 @@ def _q_cdc_lineage_metrics(spark, sf):
     writes. The DuckDB oracle recomputes both numbers from first principles
     (distinct keys per batch; winners that are deletes), so the engine's
     telemetry itself is hash-verified, not just its data."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.lww import lww_collapse
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_lin_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=None,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_lin_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=None)
         for i in range(4):
             batch = ev.filter(F.pmod(F.col("seq"), F.lit(4)) == i)
             collapsed = lww_collapse(
@@ -1883,8 +1682,6 @@ def _q_cdc_lineage_metrics(spark, sf):
         return spark.createDataFrame(
             rows, "batch_id string, rows_appended long, tombstones long"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_streaming_cdc_ingest(spark, sf):
@@ -1896,9 +1693,6 @@ def _q_streaming_cdc_ingest(spark, sf):
     checkpoint — the offset WAL yields zero reprocessing and the
     committed-batch manifest makes any replay a no-op — then the table is
     read back. The DuckDB oracle is the single global LWW collapse."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.streaming.ingest import start_cdc_ingest
     from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
@@ -1915,10 +1709,8 @@ def _q_streaming_cdc_ingest(spark, sf):
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("ts").cast("timestamp").alias("ingest_ts"),
     )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    base = tempfile.mkdtemp(prefix="pks_stream_corr_", dir=tmp_parent)
-    src, ckpt, root = f"{base}/src", f"{base}/ckpt", f"{base}/table"
-    try:
+    with _scratch("pks_stream_corr_") as base:
+        src, ckpt, root = f"{base}/src", f"{base}/ckpt", f"{base}/table"
         # several files -> several micro-batches under maxFilesPerTrigger=1
         ev.repartitionByRange(4, "seq").write.mode("overwrite").parquet(src)
         tio = ParquetSnapshotTableIO(
@@ -1949,8 +1741,6 @@ def _q_streaming_cdc_ingest(spark, sf):
             "conv_id", "turn_idx", "role", "text", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _q_cdc_checkpoint_resume(spark, sf):
@@ -1963,35 +1753,22 @@ def _q_cdc_checkpoint_resume(spark, sf):
     single global LWW collapse — which is what the DuckDB oracle computes.
     The skip count is asserted, so resume semantics (not just the end
     state) are part of the verified contract."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.replay import replay_changelog
     from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        F.col("ts").cast("timestamp").alias("ingest_ts"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_resume_corr_", dir=tmp_parent)
-    try:
-        kw = dict(
-            key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=2,
-        )
-        tio = ParquetSnapshotTableIO(spark, root, **kw)
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf, F.col("ts").cast("timestamp").alias("ingest_ts"))
+    with _scratch("pks_resume_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=2)
         lin1 = replay_changelog(
             spark, tio, ev, n_batches=4, run_id="res", stop_after_batch=1
         )
         assert len(lin1) == 2, "crash simulation applied the wrong batch count"
         # fresh handle = new-process resume: state comes from the on-disk
         # manifest only, never from the crashed writer's memory
-        tio2 = ParquetSnapshotTableIO(spark, root, **kw)
+        tio2 = ParquetSnapshotTableIO(
+            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
+            n_buckets=8, write_mode="mor", compact_delta_files=2,
+        )
         lin2 = replay_changelog(spark, tio2, ev, n_batches=4, run_id="res")
         skipped = sum(1 for r in lin2 if "skipped_duplicate_batch" in r)
         assert skipped == 2, f"manifest skipped {skipped} batches, expected 2"
@@ -2000,8 +1777,6 @@ def _q_cdc_checkpoint_resume(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cdc_time_travel(spark, sf):
@@ -2011,26 +1786,11 @@ def _q_cdc_time_travel(spark, sf):
     first two batches, which the DuckDB oracle computes from the same
     seq%4 membership rule. Verifies snapshot isolation + manifest replay,
     not just the head state."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.cdc.lww import lww_collapse
-    from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
-    ev = _t(spark, sf, "events").select(
-        "user_id", "event_type", "value",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").cast("long").alias("seq"),
-        F.when(F.col("event_id") % 11 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-    )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_tt_corr_", dir=tmp_parent)
-    try:
-        tio = ParquetSnapshotTableIO(
-            spark, root, key_cols=("user_id", "event_type"), lww_col="ts",
-            n_buckets=8, write_mode="mor", compact_delta_files=None,
-        )
-        tio.init_empty(ev.select("user_id", "event_type", "value", "ts").schema)
+    ev = _events_changelog(spark, sf)
+    with _scratch("pks_tt_corr_") as root:
+        tio = _events_table(spark, root, ev, compact_delta_files=None)
         sids = []
         for i in range(4):
             batch = ev.filter(F.pmod(F.col("seq"), F.lit(4)) == i)
@@ -2043,8 +1803,6 @@ def _q_cdc_time_travel(spark, sf):
             "user_id", "event_type", "value", _us("ts").alias("ts_us")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_streaming_stateful_dedup(spark, sf):
@@ -2057,8 +1815,6 @@ def _q_streaming_stateful_dedup(spark, sf):
     batches' — which the DuckDB oracle states as a window function. The
     per-key state value (not just row data) is what survives the batch
     boundary, so the state machinery itself is hash-verified."""
-    import shutil
-    import tempfile
     import uuid
 
     from pentaho_kettle_spark.streaming.stateful import stateful_seq_dedup
@@ -2074,10 +1830,8 @@ def _q_streaming_stateful_dedup(spark, sf):
         "batch", (F.col("batch") + 1).cast("int")
     )
     log = base.unionByName(dups)
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_state_corr_", dir=tmp_parent)
     qname = f"dedup_corr_{uuid.uuid4().hex[:8]}"
-    try:
+    with _scratch("pks_state_corr_") as root:
         src = f"{root}/src"
         os.makedirs(src, exist_ok=True)
         stream = (
@@ -2106,8 +1860,6 @@ def _q_streaming_stateful_dedup(spark, sf):
             q.stop()
         kept = spark.table(qname).select("conv_id", "turn_idx", "seq", "value", "batch")
         return kept.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_table_compare(spark, sf):
@@ -2290,17 +2042,12 @@ def _q_csv_roundtrip(spark, sf):
     re-read under an explicit schema must reproduce the source exactly
     (Spark's double formatter is round-trip-precise). The oracle is the
     original projection."""
-    import shutil
-    import tempfile
-
     from pentaho_kettle_spark.sources.files import csv_input, csv_output
 
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
-    tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="pks_csv_corr_", dir=tmp_parent)
-    try:
+    with _scratch("pks_csv_corr_") as root:
         csv_output(o, f"{root}/csv", header=True, delimiter="|")
         back = csv_input(
             spark, f"{root}/csv",
@@ -2309,8 +2056,6 @@ def _q_csv_roundtrip(spark, sf):
             delimiter="|",
         )
         return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_kjb_parallel_job(spark, sf):
@@ -2346,13 +2091,6 @@ def _q_kjb_parallel_job(spark, sf):
 # --------------------------------------------------------------------------
 
 
-def _shm_tmpdir(prefix: str) -> str:
-    import tempfile
-
-    parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=parent)
-
-
 def _q_text_file_lines(spark, sf):
     """Text file input, raw-line mode (SURVEY §2.1
     textfileinput/TextFileInput.java): wildcard multi-file read, per-file
@@ -2360,13 +2098,10 @@ def _q_text_file_lines(spark, sf):
     fields. The staged files carry one header line and one comment line per
     file so both filters are actually exercised; the oracle is the source
     projection the lines were rendered from."""
-    import shutil
-
     from pentaho_kettle_spark.sources.files import text_file_input
 
     rows = _t(spark, sf, "nation").select("n_nationkey", "n_name").collect()
-    root = _shm_tmpdir("pks_text_corr_")
-    try:
+    with _scratch("pks_text_corr_") as root:
         half = len(rows) // 2
         for i, chunk in enumerate((rows[:half], rows[half:])):
             with open(f"{root}/nation_{i}.txt", "w") as fh:
@@ -2386,8 +2121,6 @@ def _q_text_file_lines(spark, sf):
             F.split("line", r"\|").getItem(1).alias("n_name"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_fixed_width_input(spark, sf):
@@ -2395,13 +2128,10 @@ def _q_fixed_width_input(spark, sf):
     (start, length) substring projection with Kettle-type coercion — fully
     parallel, no hand-rolled NIO chunking. Oracle = the rows the fixed-width
     file was rendered from."""
-    import shutil
-
     from pentaho_kettle_spark.sources.files import fixed_input
 
     rows = _t(spark, sf, "nation").collect()
-    root = _shm_tmpdir("pks_fixed_corr_")
-    try:
+    with _scratch("pks_fixed_corr_") as root:
         with open(f"{root}/nation.fixed", "w") as fh:
             for r in rows:
                 fh.write(f"{r.n_nationkey:<6d}{r.n_name:<26s}{r.n_regionkey:<4d}\n")
@@ -2415,25 +2145,18 @@ def _q_fixed_width_input(spark, sf):
             ],
         )
         return df.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_cube_roundtrip(spark, sf):
     """Cube output -> cube input (SURVEY §2.1 cubeinput/cubeoutput): parquet
     is this engine's native serialized-rowset format; a distributed write
     re-read must reproduce the projection exactly."""
-    import shutil
-
     from pentaho_kettle_spark.sources.files import parquet_input
 
     p = _t(spark, sf, "part").select("p_partkey", "p_name", "p_retailprice")
-    root = _shm_tmpdir("pks_cube_corr_")
-    try:
+    with _scratch("pks_cube_corr_") as root:
         p.write.mode("overwrite").parquet(f"{root}/cube")
         return parquet_input(spark, f"{root}/cube").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _q_update_standalone(spark, sf):

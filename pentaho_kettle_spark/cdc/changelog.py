@@ -26,6 +26,39 @@ CHANGELOG_SCHEMA = T.StructType(
 )
 
 
+def parquet_row_groups(df: DataFrame, columns: list[str]) -> list[tuple] | None:
+    """Every row group behind a plain parquet scan, from the footers read on
+    the driver (no Spark job): (path, row-group index, row count,
+    {column: column-chunk metadata}) for each of `columns`. None when the
+    plan is not file-backed, a file is not parquet, pyarrow is missing, a
+    footer is unreadable, or a file lacks one of `columns` physically."""
+    try:
+        files = df.inputFiles()
+    except Exception:  # noqa: BLE001 - non-file-backed plans
+        return None
+    if not files or not all(f.endswith(".parquet") for f in files):
+        return None
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:
+        return None
+    groups = []
+    for f in files:
+        path = f[len("file:"):] if f.startswith("file:") else f
+        try:
+            md = pq.ParquetFile(path).metadata
+        except Exception:  # noqa: BLE001 - unreadable file
+            return None
+        names = md.schema.names
+        if any(c not in names for c in columns):
+            return None
+        idx = {c: names.index(c) for c in columns}
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            groups.append((path, i, rg.num_rows, {c: rg.column(j) for c, j in idx.items()}))
+    return groups
+
+
 def read_changelog(spark: SparkSession, path: str) -> DataFrame:
     """Batch read of a parquet change log. Schema is asserted, not inferred."""
     return spark.read.schema(CHANGELOG_SCHEMA).parquet(path)

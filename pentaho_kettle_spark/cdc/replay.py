@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 import datetime as _dt
 
-from pentaho_kettle_spark.cdc.changelog import read_changelog
+from pentaho_kettle_spark.cdc.changelog import parquet_row_groups, read_changelog
 from pentaho_kettle_spark.cdc.schema_evolution import evolve_and_conform
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 
@@ -155,32 +155,15 @@ def _footer_ts_bounds(changelog: DataFrame, n_batches: int) -> list | None:
     within one row group. Returns None (→ caller falls back to a Spark
     percentile pass) when the plan is not a plain parquet scan or any row
     group lacks ts stats."""
-    try:
-        files = changelog.inputFiles()
-    except Exception:  # noqa: BLE001 - non-file-backed plans
-        return None
-    if not files or not all(f.endswith(".parquet") for f in files):
-        return None
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
+    row_groups = parquet_row_groups(changelog, ["ingest_ts"])
+    if row_groups is None:
         return None
     groups: list[tuple] = []  # (min_ts, max_ts, rows)
-    for f in files:
-        path = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:  # noqa: BLE001 - unreadable file → fall back
+    for _path, _i, rows, chunks in row_groups:
+        st = chunks["ingest_ts"].statistics
+        if st is None or not st.has_min_max:
             return None
-        try:
-            col_idx = md.schema.names.index("ingest_ts")
-        except ValueError:
-            return None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            groups.append((st.min, st.max, md.row_group(rg).num_rows))
+        groups.append((st.min, st.max, rows))
     if not groups:
         return None
     groups.sort(key=lambda g: (g[0], g[1]))

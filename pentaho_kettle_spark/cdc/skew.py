@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pentaho_kettle_spark.cdc.changelog import parquet_row_groups
+
 # should_salt's bounds: a hot key must exceed SALT_SKEW_FACTOR × the average
 # task's rows AND this many rows per batch before salting pays
 SALT_MIN_KEY_ROWS = 100_000
@@ -76,33 +78,20 @@ def _arrow_key_sample(
     row supports r[key] and r["count"]; fraction = sampled rows / the
     footers' row total), or None when the plan is not a plain parquet scan /
     pyarrow can't serve it."""
+    # only safe when the DataFrame IS the bare scan: any Project/Filter
+    # on top would make a file-level sample silently read pre-transform
+    # rows (and pyarrow ignores missing columns rather than raising).
+    # A bare scan's analyzed plan is a LEAF relation.
     try:
-        files = events.inputFiles()
-        # only safe when the DataFrame IS the bare scan: any Project/Filter
-        # on top would make a file-level sample silently read pre-transform
-        # rows (and pyarrow ignores missing columns rather than raising).
-        # A bare scan's analyzed plan is a LEAF relation.
         if not events._jdf.queryExecution().analyzed().children().isEmpty():
             return None
     except Exception:  # noqa: BLE001
         return None
-    if not files or not all(f.endswith(".parquet") for f in files):
+    # key columns must exist PHYSICALLY in the files
+    row_groups = parquet_row_groups(events, key_cols)
+    if row_groups is None:
         return None
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None
-    groups = []  # (path, rg_index, rows)
-    for f in files:
-        path = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:  # noqa: BLE001
-            return None
-        if any(k not in set(md.schema.names) for k in key_cols):
-            return None  # key columns must exist PHYSICALLY in the files
-        for rg in range(md.num_row_groups):
-            groups.append((path, rg, md.row_group(rg).num_rows))
+    groups = [(path, rg, rows) for path, rg, rows, _chunks in row_groups]
     if not groups:
         return None
     # evenly-spaced subset until the row target is met
@@ -113,6 +102,7 @@ def _arrow_key_sample(
     step = max(1, len(groups) // want)
     picked = groups[::step][:want]
     import pandas as pd
+    import pyarrow.parquet as pq
 
     parts = []
     for path, rg, _rows in picked:

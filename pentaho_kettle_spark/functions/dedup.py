@@ -288,7 +288,12 @@ def simhash_candidates(
     mask = (1 << chunk_bits) - 1
     # materialized once: the self-join below instantiates `chunks` twice
     # (l/r), which without this recomputes the full shingle+vote subtree
-    # per side (see minhash_lsh_dedup)
+    # per side (see minhash_lsh_dedup). Not free to build: under AQE a
+    # non-eager local checkpoint runs the shuffle map stage of the spread
+    # exchange below it when the DataFrame is built, one job that scans
+    # `df` and writes the spread shuffle (measured with a job group: 1 job
+    # of 1 task at sf0.001 and sf0.01). The shingle+vote subtree runs at the
+    # first action; over an input that needs no spread, building runs none.
     base = simhash_table(df, text_col, id_col, hash_fn=hash_fn, n_bits=n_bits)\
         .withColumnRenamed("simhash", "_sh").localCheckpoint(eager=False)
     chunks = base.select(
@@ -343,7 +348,9 @@ def ngram_jaccard_pairs(
     sh = F.slice(F.array_sort(_shingles(F.col(text_col), k_shingle, hash_fn)), 1, max_shingles_per_doc)
     # materialized once: `ex` below is instantiated up to four times (stop-
     # shingle count, per-doc sizes, and both sides of the self-join) — the
-    # shingle arrays must not be recomputed per instantiation
+    # shingle arrays must not be recomputed per instantiation. Building it
+    # runs the spread exchange's shuffle map stage, as in simhash_candidates
+    # (1 job of 1 task at sf0.001 and sf0.01); the shingling runs later.
     base = spread_for_compute(df, id_col).select(F.col(id_col), sh.alias("_sh")).withColumn(
         "_n", F.size("_sh")
     ).localCheckpoint(eager=False)
@@ -466,6 +473,9 @@ def embedding_cosine_near_dups(
     # along (one fold per ROW, materialized), so each of the quadratically
     # many in-bucket PAIRS pays a single dot product instead of dot + two
     # re-derived norms — same doubles, same ops, bit-identical cosines.
+    # Building it runs the spread exchange's shuffle map stage, as in
+    # simhash_candidates (1 job of 1 task at sf0.001 and sf0.01); the dot
+    # products run at the first action.
     bucketed = base.withColumn(
         "_bkt", hyperplane_bucket(F.col(vec_col), dim, n_lsh_planes)
     ).withColumn("_nrm", norm_expr(F.col(vec_col))).localCheckpoint(eager=False)

@@ -42,6 +42,35 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns), kind="stable").reset_index(drop=True)
 
 
+def compare(got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
+    """Mismatches of a Spark result against its DuckDB oracle, after
+    `_normalize`: row count, column names, dtypes, then exact values. An
+    empty list means equal."""
+    g, w = _normalize(got), _normalize(want)
+    status = []
+    if len(g) != len(w):
+        status.append(f"rowcount {len(g)} != {len(w)}")
+    if list(g.columns) != list(w.columns):
+        status.append(f"columns {list(g.columns)} != {list(w.columns)}")
+    if not status:
+        # The driver's value hash is TYPE-SENSITIVE (int 3 != float 3.0):
+        # after width normalization, dtypes must match exactly.  A DuckDB
+        # HUGEINT (sum(int)) arrives as float64 while Spark's long is
+        # int64 — that exact mismatch was driver-red for two rounds while
+        # this replica's old check_dtype=False waved it through.
+        dg, dw = [str(d) for d in g.dtypes], [str(d) for d in w.dtypes]
+        if dg != dw:
+            bad = [f"{c}: spark {a} vs oracle {b}"
+                   for c, a, b in zip(g.columns, dg, dw) if a != b]
+            status.append(f"dtypes {'; '.join(bad)}")
+    if not status:
+        try:
+            pd.testing.assert_frame_equal(g, w, check_dtype=True, check_exact=True)
+        except AssertionError as e:
+            status.append(f"values: {str(e).splitlines()[-1][:200]}")
+    return status
+
+
 def main(names: list[str], json_out: str | None = None) -> int:
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
     report: dict[str, dict] = {}
@@ -78,36 +107,15 @@ def main(names: list[str], json_out: str | None = None) -> int:
             report[name] = {"pass": False, "err": f"duckdb: {e}"[:300]}
             print(f"FAIL {name}: duckdb error: {e}")
             continue
-        g, w = _normalize(got), _normalize(want)
-        status = []
-        if len(g) != len(w):
-            status.append(f"rowcount {len(g)} != {len(w)}")
-        if list(g.columns) != list(w.columns):
-            status.append(f"columns {list(g.columns)} != {list(w.columns)}")
-        if not status:
-            # The driver's value hash is TYPE-SENSITIVE (int 3 != float 3.0):
-            # after width normalization, dtypes must match exactly.  A DuckDB
-            # HUGEINT (sum(int)) arrives as float64 while Spark's long is
-            # int64 — that exact mismatch was driver-red for two rounds while
-            # this replica's old check_dtype=False waved it through.
-            dg, dw = [str(d) for d in g.dtypes], [str(d) for d in w.dtypes]
-            if dg != dw:
-                bad = [f"{c}: spark {a} vs oracle {b}"
-                       for c, a, b in zip(g.columns, dg, dw) if a != b]
-                status.append(f"dtypes {'; '.join(bad)}")
-        if not status:
-            try:
-                pd.testing.assert_frame_equal(g, w, check_dtype=True, check_exact=True)
-            except AssertionError as e:
-                status.append(f"values: {str(e).splitlines()[-1][:200]}")
+        status = compare(got, want)
         if status:
             failures.append(name)
             report[name] = {"pass": False, "err": "; ".join(status)[:300]}
             print(f"FAIL {name}: {'; '.join(status)}")
         else:
-            report[name] = {"pass": True, "rows": len(g),
+            report[name] = {"pass": True, "rows": len(got),
                             "sec": round(time.time() - t0, 1)}
-            print(f"PASS {name} ({len(g)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({len(got)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{len(targets) - len(failures)}/{len(targets)} passed")
     if json_out:
         import json
