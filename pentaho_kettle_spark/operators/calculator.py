@@ -178,7 +178,9 @@ def calculator(df: DataFrame, calcs: list[Calc | dict]) -> DataFrame:
         cols = df.columns
         expr = fn(_operand(c.field_a, cols), _operand(c.field_b, cols), _operand(c.field_c, cols))
         if c.value_type:
-            expr = cast_to_kettle_type(expr, c.value_type)
+            expr = cast_to_kettle_type(
+                expr, df.select(expr).schema[0].dataType, c.value_type
+            )
         df = df.withColumn(c.field_name, expr)
         if c.remove:
             tmp_remove.append(c.field_name)

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pentaho_kettle_spark.types import cast_to_kettle_type
+
 
 def add_constants(df: DataFrame, constants: dict[str, object]) -> DataFrame:
     for name, val in constants.items():
@@ -21,7 +23,15 @@ def add_constants(df: DataFrame, constants: dict[str, object]) -> DataFrame:
 
 
 def set_field_value(df: DataFrame, field: str, value=None, from_field: str | None = None) -> DataFrame:
-    return df.withColumn(field, F.col(from_field) if from_field else F.lit(value))
+    """Set Value Field (`from_field`) or Set Value Constant (`value`). A
+    constant keeps the type of the field it replaces, converted by
+    types.cast_to_kettle_type."""
+    if from_field:
+        return df.withColumn(field, F.col(from_field))
+    v = F.lit(value)
+    if field in df.columns:
+        v = cast_to_kettle_type(v, df.select(v).schema[0].dataType, df.schema[field].dataType)
+    return df.withColumn(field, v)
 
 
 def value_mapper(

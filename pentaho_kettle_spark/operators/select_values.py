@@ -31,7 +31,9 @@ def select_values(
     for m in meta or []:
         col = F.col(m["name"])
         if m.get("type"):
-            col = cast_to_kettle_type(col, m["type"], m.get("mask"))
+            col = cast_to_kettle_type(
+                col, df.schema[m["name"]].dataType, m["type"], m.get("mask")
+            )
         df = df.withColumn(m["name"], col)
         if m.get("rename"):
             df = df.withColumnRenamed(m["name"], m["rename"])

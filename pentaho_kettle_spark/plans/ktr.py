@@ -19,6 +19,15 @@ Supported <type>s (the row-shaping core; connectors map to sources/):
   GetVariable, Mapping/SimpleMapping/MappingInput/MappingOutput, MetaInject.
   ${VAR} substitution everywhere via plans/variables.py.
 
+Kettle values: every typed field and literal (DataGrid items, Constant and
+RowGenerator values, GetVariable fields, FilterRows `<value>`,
+ScriptValuesMod and JsonInput fields, SetValueConstant) converts through
+the one conversion, types.cast_to_kettle_type: text gets Kettle's lenient
+parse (trim, grouping mask, Y/TRUE/YES/1, the date mask or the default
+date patterns), typed input a cast; Integer is 64-bit. The file readers
+(CsvInput, TextFileInput) take their schema from `_fields_schema`, the
+one place this module maps a Kettle type name to a Spark type.
+
 Semantics pins preserved from the reference: FilterRows' two-way routing
 (NULL → false target), GroupBy aggregate type names, SortRows asc/desc
 flags. Unknown step types raise with the step name so a user knows exactly
@@ -34,11 +43,14 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pentaho_kettle_spark import operators as ops
 from pentaho_kettle_spark.operators.calculator import Calc
 from pentaho_kettle_spark.operators.group_by import Agg
+from pentaho_kettle_spark.types import KETTLE_TO_SPARK, cast_to_kettle_type
 
 
 @dataclass
@@ -120,30 +132,43 @@ def _single(inputs: dict) -> DataFrame:
     return next(iter(inputs.values()))
 
 
+def _fields_schema(fields: list[ET.Element]) -> T.StructType:
+    """A file reader's <fields>/<field> name+type list as its Spark schema."""
+    return T.StructType(
+        [
+            T.StructField(_txt(f, "name"), KETTLE_TO_SPARK[_txt(f, "type", "String")], True)
+            for f in fields
+        ]
+    )
+
+
+def _text_value(text: str | None, ktype: str, mask: str | None = None) -> Column:
+    """A typed Kettle literal written as XML text."""
+    return cast_to_kettle_type(F.lit(text).cast("string"), T.StringType(), ktype, mask)
+
+
+def _literal_fields(e: ET.Element, value_tag: str) -> dict[str, Column]:
+    """<fields>/<field> name, type, format and `value_tag` text (Constant,
+    RowGenerator, GetVariable) → {name: typed literal}."""
+    return {
+        _txt(f, "name"): _text_value(
+            "" if _bool(f, "set_empty_string") else _txt(f, value_tag),
+            _txt(f, "type", "String"),
+            _txt(f, "format"),
+        )
+        for f in e.findall("fields/field")
+    }
+
+
 def _b_csv_input(spark, step, inputs):
     from pentaho_kettle_spark.sources import csv_input
-    from pentaho_kettle_spark.types import KETTLE_TO_SPARK
 
     e = step.elem
     fields = e.findall("fields/field")
-    schema = None
-    if fields:
-        import pyspark.sql.types as T
-
-        schema = T.StructType(
-            [
-                T.StructField(
-                    _txt(f, "name"),
-                    KETTLE_TO_SPARK[_txt(f, "type", "String")],
-                    True,
-                )
-                for f in fields
-            ]
-        )
     return csv_input(
         spark,
         _txt(e, "filename"),
-        schema=schema,
+        schema=_fields_schema(fields) if fields else None,
         header=_bool(e, "header", True),
         delimiter=_txt(e, "separator", ",") or ",",
         enclosure=_txt(e, "enclosure", '"') or '"',
@@ -151,45 +176,27 @@ def _b_csv_input(spark, step, inputs):
 
 
 def _b_data_grid(spark, step, inputs):
-    from pentaho_kettle_spark.types import KETTLE_TO_SPARK
-
-    import pyspark.sql.types as T
-
+    """Data Grid: the <data> items as string rows, then one projection
+    converts each column to its field's type."""
     e = step.elem
-    names, types = [], []
-    for f in e.findall("fields/field"):
-        names.append(_txt(f, "name"))
-        types.append(KETTLE_TO_SPARK[_txt(f, "type", "String")])
-    schema = T.StructType([T.StructField(n, t, True) for n, t in zip(names, types)])
-    rows = []
-    for line in e.findall("data/line"):
-        items = [i.text for i in line.findall("item")]
-        conv = []
-        for v, t in zip(items, types):
-            if v is None:
-                conv.append(None)
-            elif isinstance(t, T.LongType):
-                conv.append(int(v))
-            elif isinstance(t, T.DoubleType):
-                conv.append(float(v))
-            else:
-                conv.append(v)
-        rows.append(tuple(conv))
-    return spark.createDataFrame(rows, schema)
+    fields = e.findall("fields/field")
+    names = [_txt(f, "name") for f in fields]
+    text = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+    rows = [
+        tuple(i.text for i in line.findall("item")) for line in e.findall("data/line")
+    ]
+    return spark.createDataFrame(rows, text).select(
+        *(
+            cast_to_kettle_type(
+                F.col(n), T.StringType(), _txt(f, "type", "String"), _txt(f, "format")
+            ).alias(n)
+            for n, f in zip(names, fields)
+        )
+    )
 
 
 def _b_constant(spark, step, inputs):
-    df = _single(inputs)
-    consts = {}
-    for f in step.elem.findall("fields/field"):
-        name, typ, val = _txt(f, "name"), _txt(f, "type", "String"), _txt(f, "value")
-        if typ == "Integer":
-            consts[name] = int(val)
-        elif typ == "Number":
-            consts[name] = float(val)
-        else:
-            consts[name] = val
-    return ops.add_constants(df, consts)
+    return ops.add_constants(_single(inputs), _literal_fields(step.elem, "value"))
 
 
 def _parse_condition(c: ET.Element) -> dict:
@@ -207,16 +214,11 @@ def _parse_condition(c: ET.Element) -> dict:
     leaf: dict = {"field": _txt(c, "leftvalue"), "function": func}
     val = c.find("value")
     if val is not None:
-        text = _txt(val, "text")
-        vtype = _txt(val, "type", "String")
-        if vtype == "Integer":
-            leaf["value"] = int(text)
-        elif vtype == "Number":
-            leaf["value"] = float(text)
-        elif vtype == "Boolean":
-            leaf["value"] = text in ("Y", "true", "TRUE", "1")
-        else:
-            leaf["value"] = text
+        text, vtype = _txt(val, "text"), _txt(val, "type", "String")
+        # a String stays a str: REGEXP/LIKE/IN LIST take Python strings
+        leaf["value"] = (
+            text if vtype == "String" else _text_value(text, vtype, _txt(val, "mask"))
+        )
     if _bool(c, "negated"):
         return {"op": "NOT", "children": [leaf]}
     return leaf
@@ -492,10 +494,9 @@ def _b_script_values_mod(spark, step, inputs):
     interpreter; scripts outside the subset raise with the offending line so
     the user knows to port them to operators/scripting.py script_values
     (the mapInPandas general path). Only the declared <fields> become output
-    columns (Kettle contract); each is cast to its declared type, and
+    columns (Kettle contract); each converts to its declared <type>, and
     <rename> names the output."""
     from pentaho_kettle_spark.plans.jsexpr import compile_script
-    from pentaho_kettle_spark.types import KETTLE_TO_SPARK
 
     df = _single(inputs)
     e = step.elem
@@ -515,8 +516,8 @@ def _b_script_values_mod(spark, step, inputs):
             )
         col = env[name]
         ktype = _txt(f, "type")
-        if ktype and ktype in KETTLE_TO_SPARK:
-            col = col.cast(KETTLE_TO_SPARK[ktype])
+        if ktype:
+            col = cast_to_kettle_type(col, df.select(col).schema[0].dataType, ktype)
         df = df.withColumn(out, col)
     return df
 
@@ -682,28 +683,14 @@ def _b_row_generator(spark, step, inputs):
     from pentaho_kettle_spark.sources.generators import row_generator
 
     e = step.elem
-    consts = {}
-    rownum_field = None
-    for f in e.findall("fields/field"):
-        name, typ, val = _txt(f, "name"), _txt(f, "type", "String"), _txt(f, "nullif")
-        if _bool(f, "set_empty_string"):
-            consts[name] = ""
-        elif typ == "Integer":
-            consts[name] = int(val) if val else None
-        elif typ == "Number":
-            consts[name] = float(val) if val else None
-        else:
-            consts[name] = val
-    if _txt(e, "rownum_field"):
-        rownum_field = _txt(e, "rownum_field")
+    consts = _literal_fields(e, "nullif")
+    rownum_field = _txt(e, "rownum_field") or None
     if _bool(e, "never_ending"):
         # Kettle's never-ending generator emits the constant row every
         # <interval_in_ms>; the Structured Streaming twin is the rate
         # source at the equivalent rows/sec. Downstream row-shaping steps
         # compose lazily; the caller sinks via writeStream/foreachBatch
         # (streaming/ingest.py) — a .ktr file cannot express the sink.
-        from pyspark.sql import functions as F
-
         interval_ms = int(_txt(e, "interval_in_ms", "1000") or 1000)
         if interval_ms <= 1000:
             # sub-second intervals map directly to rowsPerSecond
@@ -717,7 +704,7 @@ def _b_row_generator(spark, step, inputs):
         rate = spark.readStream.format("rate").option("rowsPerSecond", rps).load()
         if stride > 1:
             rate = rate.filter(F.col("value") % stride == 0)
-        cols = [F.lit(v).alias(k) for k, v in consts.items()]
+        cols = [v.alias(k) for k, v in consts.items()]
         cols.append(F.col("timestamp").alias("generated_ts"))
         if rownum_field:
             cols.append((F.col("value") / stride).cast("long").alias(rownum_field))
@@ -1045,22 +1032,9 @@ def _b_get_variables(spark, step, inputs):
     plans/variables.py; a missing variable leaves ${NAME} verbatim, exactly
     like the reference's environmentSubstitute). With no incoming hop the
     step emits ONE row of the variables, per the reference."""
-    from pentaho_kettle_spark.types import KETTLE_TO_SPARK
-
-    import pyspark.sql.functions as F
-
-    e = step.elem
-    cols = []
-    for f in e.findall("fields/field"):
-        name = _txt(f, "name")
-        # Spoon writes the value as <variable>${NAME}</variable>; by now the
-        # parse-time pass substituted it, so the text IS the value
-        val = _txt(f, "variable") or ""
-        typ = _txt(f, "type", "String")
-        col = F.lit(val)
-        if typ in KETTLE_TO_SPARK and typ != "String":
-            col = col.cast(KETTLE_TO_SPARK[typ])
-        cols.append(col.alias(name))
+    # Spoon writes the value as <variable>${NAME}</variable>; by now the
+    # parse-time pass substituted it, so the text IS the value
+    cols = [c.alias(n) for n, c in _literal_fields(step.elem, "variable").items()]
     if inputs:
         return _single(inputs).select("*", *cols)
     return spark.range(1).select(*cols)
@@ -1167,9 +1141,6 @@ def _b_text_file_input(spark, step, inputs):
         resolve_file_specs,
         text_file_input_csv,
     )
-    from pentaho_kettle_spark.types import KETTLE_TO_SPARK
-
-    import pyspark.sql.types as T
 
     e = step.elem
     paths = resolve_file_specs(_file_specs(e))
@@ -1196,18 +1167,10 @@ def _b_text_file_input(spark, step, inputs):
         raise NotImplementedError(
             f"TextFileInput '{step.name}': filetype {filetype!r}"
         )
-    schema = T.StructType(
-        [
-            T.StructField(
-                _txt(f, "name"), KETTLE_TO_SPARK[_txt(f, "type", "String")], True
-            )
-            for f in fields
-        ]
-    )
     return text_file_input_csv(
         spark,
         paths,
-        schema,
+        _fields_schema(fields),
         header=_bool(e, "header", True),
         nr_header_lines=int(_txt(e, "nr_headerlines", "1") or 1),
         nr_footer_lines=(
@@ -1240,10 +1203,7 @@ def _b_json_input(spark, step, inputs):
     if not fields:
         raise ValueError(f"JsonInput '{step.name}': no <fields> declared")
     if _bool(e, "IsInFields", False):
-        from pyspark.sql import functions as F
-
         from pentaho_kettle_spark.sources.files import json_path_fields
-        from pentaho_kettle_spark.types import cast_to_kettle_type
 
         src = _txt(e, "valueField")
         if not src:
@@ -1253,7 +1213,7 @@ def _b_json_input(spark, step, inputs):
         df = _single(inputs)
         df = json_path_fields(df, src, {n: p for n, p, _ in fields})
         for n, _p, kt in fields:
-            df = df.withColumn(n, cast_to_kettle_type(F.col(n), kt))
+            df = df.withColumn(n, cast_to_kettle_type(F.col(n), T.StringType(), kt))
         if _bool(e, "removeSourceField", False):
             df = df.drop(src)
         return df

@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pentaho_kettle_spark.types import cast_to_kettle_type
+
 
 def csv_input(
     spark: SparkSession,
@@ -21,9 +23,6 @@ def csv_input(
     delimiter: str = ",",
     enclosure: str = '"',
     escape: str = "\\",
-    lazy_conversion: bool = True,  # kept for parity; vectorized reader IS lazy
-    add_filename: bool = False,
-    corrupt_record_field: str | None = None,
 ) -> DataFrame:
     reader = (
         spark.read.option("header", header)
@@ -34,14 +33,9 @@ def csv_input(
     )
     if schema is not None:
         reader = reader.schema(schema)
-        if corrupt_record_field:
-            reader = reader.option("columnNameOfCorruptRecord", corrupt_record_field)
     else:
         reader = reader.option("inferSchema", True)  # dev only; prod passes schema
-    df = reader.csv(path)
-    if add_filename:
-        df = df.withColumn("filename", F.input_file_name())
-    return df
+    return reader.csv(path)
 
 
 def text_file_input(
@@ -170,13 +164,11 @@ def json_lines_input(
     extract via get_json_object (JVM-side JSONPath subset) and cast to the
     declared Kettle type. Gzip transparent; wildcard/multi-file via the
     same file-spec resolution as TextFileInput."""
-    from pentaho_kettle_spark.types import cast_to_kettle_type
-
     df = spark.read.text(list(paths))
     return df.select(
         *(
             cast_to_kettle_type(
-                F.get_json_object(F.col("value"), jpath), ktype
+                F.get_json_object(F.col("value"), jpath), T.StringType(), ktype
             ).alias(name)
             for name, jpath, ktype in fields
         )
@@ -190,12 +182,12 @@ def fixed_input(
     One substring projection per field over the raw line — fully parallel,
     like FixedInput.java's NIO chunk reader but without the hand-rolled
     splitting."""
-    from pentaho_kettle_spark.types import cast_to_kettle_type
-
     df = spark.read.text(path)
     cols = [
         cast_to_kettle_type(
-            F.trim(F.substring(F.col("value"), start + 1, length)), ktype
+            F.trim(F.substring(F.col("value"), start + 1, length)),
+            T.StringType(),
+            ktype,
         ).alias(name)
         for name, start, length, ktype in fields
     ]

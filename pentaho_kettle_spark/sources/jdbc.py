@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pentaho_kettle_spark.operators.filter_rows import _FUNCS
+
 __all__ = [
     "JdbcSpec",
     "jdbc_read_options",
@@ -168,32 +170,20 @@ _THETA = {"=", "<>", "<", "<=", ">", ">=", "LIKE", "BETWEEN", "IS NULL", "IS NOT
 
 
 def _cond(stream_col: Column, op: str, a: Column | None, b: Column | None) -> Column:
+    """One lookup condition, built from Condition.java's operator table
+    (operators/filter_rows.py `_FUNCS`) with lookup-side operands."""
     op = op.upper()
-    if op == "=":
-        return stream_col == a
-    if op == "<>":
-        return stream_col != a
-    if op == "<":
-        return stream_col < a
-    if op == "<=":
-        return stream_col <= a
-    if op == ">":
-        return stream_col > a
-    if op == ">=":
-        return stream_col >= a
+    if op not in _THETA:
+        raise ValueError(f"unknown lookup operator {op!r}")
     if op == "LIKE":
         # LIKE needs the lookup-side column as the *pattern*; Column.like only
         # takes a literal, so callers must build `s.x LIKE l.y` via F.expr
         # (database_lookup does).  Raising here keeps any future direct caller
         # from silently getting a match-everything predicate.
         raise ValueError("LIKE is handled by the caller via F.expr, not _cond")
-    if op == "BETWEEN":
-        return (stream_col >= a) & (stream_col <= b)
-    if op == "IS NULL":
-        return a.isNull()
-    if op == "IS NOT NULL":
-        return a.isNotNull()
-    raise ValueError(f"unknown lookup operator {op!r}")
+    if op in ("IS NULL", "IS NOT NULL"):
+        return _FUNCS[op](a, None)  # Kettle tests the lookup-side field
+    return _FUNCS[op](stream_col, (a, b) if op == "BETWEEN" else a)
 
 
 def database_lookup(
@@ -231,17 +221,13 @@ def database_lookup(
     cond = F.lit(True)
     for sf, op, lf in conditions:
         op = op.upper()
-        if op == "BETWEEN":
-            lo, hi = lf
-            cc = (F.col(f"s.{sf}") >= F.col(f"l.{lo}")) & (
-                F.col(f"s.{sf}") <= F.col(f"l.{hi}")
-            )
-        elif op == "LIKE":
+        if op == "LIKE":
             cc = F.expr(f"s.{sf} LIKE l.{lf}")
-        elif op in ("IS NULL", "IS NOT NULL"):
-            cc = _cond(F.col(f"s.{sf}"), op, F.col(f"l.{lf}"), None)
         else:
-            cc = _cond(F.col(f"s.{sf}"), op, F.col(f"l.{lf}"), None)
+            lo, hi = lf if op == "BETWEEN" else (lf, None)
+            cc = _cond(
+                F.col(f"s.{sf}"), op, F.col(f"l.{lo}"), hi and F.col(f"l.{hi}")
+            )
         cond = cond & cc
 
     joined = s.join(l, cond, "left")
