@@ -40,6 +40,7 @@ sample files in tests/.
 
 from __future__ import annotations
 
+import re
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass
 
@@ -215,10 +216,15 @@ def _parse_condition(c: ET.Element) -> dict:
     val = c.find("value")
     if val is not None:
         text, vtype = _txt(val, "text"), _txt(val, "type", "String")
-        # a String stays a str: REGEXP/LIKE/IN LIST take Python strings
-        leaf["value"] = (
-            text if vtype == "String" else _text_value(text, vtype, _txt(val, "mask"))
-        )
+        if func == "IN LIST":
+            # Kettle's Condition splits the list text on `;` (`\;` keeps a
+            # literal `;`) and drops the escapes
+            leaf["value"] = [v.replace("\\", "") for v in re.split(r"(?<!\\);", text or "")]
+        else:
+            # a String stays a str: REGEXP/LIKE take Python strings
+            leaf["value"] = (
+                text if vtype == "String" else _text_value(text, vtype, _txt(val, "mask"))
+            )
     if _bool(c, "negated"):
         return {"op": "NOT", "children": [leaf]}
     return leaf

@@ -190,9 +190,86 @@ class _CommitConflict(Exception):
 def bucket_expr(key, n_buckets: int):
     """THE bucket id of a key column (name or Column) — the one hash every
     bucket-aware path uses: the fused collapse, the write staging, the CoW
-    merge, patch_apply's prune and read_key's lookup."""
+    merge and patch_apply's prune; `_driver_bucket` is its driver-side twin
+    for read_key's lookup. The column is named `_bucket` and its metadata
+    records `n_buckets`, so a merge can tell which layout an upstream
+    `_bucket` was hashed for."""
     key = F.col(key) if isinstance(key, str) else key
-    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int").alias(
+        "_bucket", metadata={"n_buckets": n_buckets}
+    )
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of `data` as an unsigned 64-bit int. Spark's `xxhash64` is this
+    hash with seed 42 over the value's little-endian bytes (int, smallint and
+    tinyint as 4 bytes, bigint as 8, string as its UTF-8 bytes)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+# signed range and hashed width of the integral key types
+_INT_KEYS = {"tinyint": (8, 4), "smallint": (16, 4), "int": (32, 4), "bigint": (64, 8)}
+
+
+def _driver_bucket(value, key_type: str, n_buckets: int) -> int | None:
+    """`bucket_expr` of one literal of `key_type`, computed on the driver
+    without a Spark job; None when no driver rule covers the value (another
+    key type, or a value Spark would have to cast)."""
+    if key_type == "string" and isinstance(value, str):
+        try:
+            data = value.encode("utf-8")
+        except UnicodeEncodeError:  # lone surrogates: leave it to Spark
+            return None
+    elif key_type in _INT_KEYS and type(value) is int:
+        bits, width = _INT_KEYS[key_type]
+        if not -(1 << (bits - 1)) <= value < 1 << (bits - 1):
+            return None
+        data = value.to_bytes(width, "little", signed=True)
+    else:
+        return None
+    h = _xxh64(data)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets  # pmod of the signed long
 
 
 def _conform_cols(batch_cols, schema_fields, key_cols, lww_col) -> list:
@@ -373,6 +450,13 @@ class ParquetSnapshotTableIO:
         if spark is not None:  # metadata-only uses pass spark=None
             spark.conf.set(
                 "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+            )
+            # reads name their files from the manifest; past this many paths
+            # (default 32) Spark would re-list them in a distributed job
+            # before every scan, so the driver's path check is the only one
+            spark.conf.set(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1),
             )
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
@@ -564,7 +648,15 @@ class ParquetSnapshotTableIO:
     # ---------- read ----------
 
     def _read_files(self, entries: list[dict], schema: TableSchema) -> DataFrame | None:
-        """Read data-file entries, reconciling old schema versions by field id."""
+        """Read data-file entries, reconciling old schema versions by field id.
+
+        The scan is planned from the manifest alone, so building the
+        DataFrame runs no Spark job: each schema version's files are read
+        under the physical schema they were written with (that version's
+        fields plus the SYS columns), which skips Spark's footer schema
+        inference, and the constructor's listing threshold keeps Spark from
+        re-listing the named files in a distributed job. A named file that
+        is gone still fails here, in Spark's path check."""
         if not entries:
             return None
         by_ver: dict[str, list[str]] = {}
@@ -575,8 +667,12 @@ class ParquetSnapshotTableIO:
         parts = []
         cur_by_id = {f["id"]: f for f in schema.fields}
         for ver, paths in by_ver.items():
-            df = self.spark.read.parquet(*paths)
             old_fields = schema.history[ver]
+            phys = ", ".join(
+                [f"`{f['name'].replace('`', '``')}` {f['type']}" for f in old_fields]
+                + [f"{SYS_SEQ} bigint", f"{SYS_DELETED} boolean"]
+            )
+            df = self.spark.read.schema(phys).parquet(*paths)
             cols = []
             old_by_id = {f["id"]: f for f in old_fields}
             for fid, cur in cur_by_id.items():
@@ -660,10 +756,10 @@ class ParquetSnapshotTableIO:
         `lww_after` returns only keys whose current winning version is
         newer than the threshold — an incremental-consumer / recent-activity
         scan — and skips whole files via footer lww bounds (see read_full)."""
-        df = self.read_full(lww_after=lww_after)
-        if df is None:
-            return None
         m = self.current_manifest()
+        if m is None:
+            return None
+        df = self.read_full(lww_after=lww_after, manifest=m)
         names = TableSchema(**m["schema"]).names()
         out = df.filter(~F.col(SYS_DELETED))
         if lww_after is not None:
@@ -676,33 +772,41 @@ class ParquetSnapshotTableIO:
         sink must answer cheaply.
 
         IO is O(one bucket), not O(table): the key's bucket id is computed
-        driver-side with the same `xxhash64` the writer used (a one-row
-        constant-folded Spark job — bounded, like Iceberg's client-side
-        partition transform), only that bucket's files are listed from the
-        manifest, and the equality predicate is pushed below the LWW
-        collapse (Catalyst pushes grouping-key predicates through the
-        Aggregate) into the parquet scan, where row-group min/max stats
-        skip non-matching groups. At 4096 buckets a lookup touches ~0.02%
-        of the table's files."""
+        on the driver with the writer's hash (`_driver_bucket`, a Python
+        XXH64 — Iceberg's client-side partition transform) under the
+        `n_buckets` of the one manifest the lookup reads, only that
+        bucket's files are taken from that manifest, and the equality
+        predicate is pushed below the LWW collapse (Catalyst pushes
+        grouping-key predicates through the Aggregate) into the parquet
+        scan, where row-group min/max stats skip non-matching groups.
+        Building the DataFrame runs no Spark job; a key type without a
+        driver rule (not string or integral) costs one constant-folded
+        one-row job for its bucket id. At 4096 buckets a lookup touches
+        ~0.02% of the table's files."""
         m = self.current_manifest()
         if m is None:
             return None
         schema = TableSchema(**m["schema"])
+        n = self._layout(m)
         # xxhash64 is TYPE-sensitive (int32 7 and int64 7 hash differently),
-        # so the literal must be cast to the key column's declared type or
-        # the driver-side bucket id diverges from the writer's
-        key_type = dict(zip(schema.names(),
-                            [f["type"] for f in schema.fields]))[self.key_cols[0]]
+        # so the value is hashed as the key column's declared type, or the
+        # bucket id diverges from the writer's
+        key_type = {f["name"]: f["type"] for f in schema.fields}[self.key_cols[0]]
         key_lit = F.lit(key_value).cast(key_type)
-        b = self.spark.range(1).select(
-            bucket_expr(key_lit, self.n_buckets).alias("b")
-        ).first()["b"]
-        df = self.read_full(buckets=[b])
+        b = _driver_bucket(key_value, key_type, n)
+        if b is None:
+            b = self.spark.range(1).select(bucket_expr(key_lit, n)).first()[0]
+        df = self.read_full(buckets=[b], manifest=m)
         return (
             df.filter(F.col(self.key_cols[0]) == key_lit)
             .filter(~F.col(SYS_DELETED))
             .select(*schema.names())
         )
+
+    def _layout(self, m: dict | None) -> int:
+        """The bucket count manifest `m` was laid out in (the handle's own
+        for a table without one yet)."""
+        return int(m.get("n_buckets", self.n_buckets)) if m else self.n_buckets
 
     def schema(self) -> TableSchema | None:
         m = self.current_manifest()
@@ -747,18 +851,7 @@ class ParquetSnapshotTableIO:
         writers (ingest batch + async compactor) both write before their
         commit order is decided, so predicting the snapshot id races."""
         outdir = self._new_write_dir()
-        if "_bucket" in df.columns:
-            # upstream already bucket-partitioned (lww_collapse's
-            # bucket-fused single-exchange plan) — re-staging would add a shuffle
-            staged = df
-        else:
-            # pin the exchange to n_buckets partitions (not shuffle.partitions
-            # + AQE coalesce): the write stage's layout is FIXED — one task
-            # per bucket hash slot, one file per bucket per batch — so runtime
-            # re-planning only removes write parallelism here
-            staged = df.withColumn(
-                "_bucket", bucket_expr(self.key_cols[0], self.n_buckets)
-            ).repartition(self.n_buckets, "_bucket")
+        staged = self._staged(df, self.n_buckets)
         staged.write.mode("overwrite").partitionBy("_bucket").parquet(outdir)
         self._refresh_markers()  # long write done — restart the TTL clock
         files: dict[str, list[dict]] = {}
@@ -771,6 +864,20 @@ class ParquetSnapshotTableIO:
                 if entry["rows"]:
                     files.setdefault(dirpath.split("_bucket=")[-1], []).append(entry)
         return files
+
+    def _staged(self, df: DataFrame, n_buckets: int) -> DataFrame:
+        """`df` laid out for `_write_buckets` in `n_buckets` buckets. An
+        upstream `_bucket` (lww_collapse's bucket-fused single-exchange
+        plan) is kept — re-staging would add a shuffle. Otherwise the
+        exchange is pinned to n_buckets partitions (not shuffle.partitions +
+        AQE coalesce): the write stage's layout is FIXED — one task per
+        bucket hash slot, one file per bucket per batch — so runtime
+        re-planning only removes write parallelism here."""
+        if "_bucket" in df.columns:
+            return df
+        return df.withColumn(
+            "_bucket", bucket_expr(self.key_cols[0], n_buckets)
+        ).repartition(n_buckets, "_bucket")
 
     def _commit_fresh(self, schema: T.StructType, snapshot_id: int,
                       parent: int | None, files: dict, batches: list) -> None:
@@ -877,7 +984,7 @@ class ParquetSnapshotTableIO:
             raise RuntimeError("table not initialized; call init_empty first")
         names = TableSchema(**m["schema"]).names()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        live = self.read_full().filter(~F.col(SYS_DELETED)).filter(pred)
+        live = self.read_full(manifest=m).filter(~F.col(SYS_DELETED)).filter(pred)
         # the tombstone's seq must STRICTLY beat every erased version: the
         # stored watermark alone is not enough (tables loaded without
         # replay's watermark tracking keep -1), so take the matched rows'
@@ -947,8 +1054,8 @@ class ParquetSnapshotTableIO:
 
         # stored state of the touched buckets only (the same prune the CoW
         # merge performs)
-        touched = self._touched_buckets(patches)
-        stored = self.read_full(buckets=touched)
+        touched = self._touched_buckets(patches, self._layout(m))
+        stored = self.read_full(buckets=touched, manifest=m)
         stored_sel = stored.select(
             *key,
             F.col(lww).alias("_s_lww"),
@@ -1020,49 +1127,62 @@ class ParquetSnapshotTableIO:
         if batch_id is not None and batch_id in set(m["committed_batches"]):
             return {"skipped_duplicate_batch": batch_id}
         if self.write_mode == "mor":
-            return self._merge_apply_mor(changes, m, batch_id, seq_high_watermark)
+            chg = changes
+        else:
+            schema = TableSchema(**m["schema"])
+            # cast/conform changes to the current table schema (type widening
+            # is applied to the table *before* merge by the caller; here we
+            # align). An upstream `_bucket` column (the fused bucket-aligned
+            # collapse) is carried through: the merge join below then
+            # co-partitions on it and the bucket write needs no re-staging
+            # exchange.
+            chg = changes.select(
+                *_conform_cols(changes.columns, schema.fields, self.key_cols, self.lww_col),
+                F.col("op"),
+                F.col(SYS_SEQ).cast("long").alias(SYS_SEQ),
+            )
+            if not assume_collapsed:
+                # within-batch LWW over the conformed columns (op rides in
+                # the payload). `_bucket` is dropped first: this collapse
+                # re-partitions by key, so the bucket alignment is gone
+                # anyway and keeping the column would falsely signal
+                # _write_buckets to skip its staging.
+                chg = self._collapse_rows(chg.drop("_bucket"))
+            # persist: chg is consumed twice (bucket-pruning collect + the
+            # merge join) and survives commit-conflict retries; without this
+            # the upstream LWW collapse shuffle would run once per
+            # consumer/attempt
+            from pyspark.storagelevel import StorageLevel
 
-        schema = TableSchema(**m["schema"])
-        names = schema.names()
-
-        # cast/conform changes to the current table schema (type widening is
-        # applied to the table *before* merge by the caller; here we align).
-        # An upstream `_bucket` column (the fused bucket-aligned collapse)
-        # is carried through: the merge join below then co-partitions on it
-        # and the bucket write needs no re-staging exchange.
-        chg = changes.select(
-            *_conform_cols(changes.columns, schema.fields, self.key_cols, self.lww_col),
-            F.col("op"),
-            F.col(SYS_SEQ).cast("long").alias(SYS_SEQ),
-        )
-        if not assume_collapsed:
-            # within-batch LWW over the conformed columns (op rides in the
-            # payload). `_bucket` is dropped first: this collapse
-            # re-partitions by key, so the bucket alignment is gone anyway
-            # and keeping the column would falsely signal _write_buckets to
-            # skip its staging.
-            chg = self._collapse_rows(chg.drop("_bucket"))
-
-        # persist: chg is consumed twice (bucket-pruning collect + the merge
-        # join) and survives commit-conflict retries; without this the
-        # upstream LWW collapse shuffle would run once per consumer/attempt
-        from pyspark.storagelevel import StorageLevel
-
-        chg = chg.persist(StorageLevel.MEMORY_AND_DISK)
+            chg = chg.persist(StorageLevel.MEMORY_AND_DISK)
+        touched: dict[int, list[int]] = {}  # bucket pruning, once per layout
         try:
-            # bucket pruning: which buckets does this batch touch?
-            # (independent of the manifest — computed once across retries)
-            touched = self._touched_buckets(chg)
             # optimistic concurrency (Iceberg's commit retry loop): the
-            # rewrite is planned against manifest `m`; if another writer
-            # commits into a touched bucket before our pointer swap, the
-            # conflict check raises and the merge REPLANS against the new
-            # manifest — without it the swap would silently drop the
-            # concurrent writer's rows from the shared bucket
+            # write is planned against manifest `m` in its bucket layout. A
+            # CoW rewrite conflicts when another writer commits into a
+            # touched bucket before our pointer swap (the swap would
+            # silently drop that writer's rows); any merge conflicts when a
+            # rebucket or rollback changed the layout (its files would hash
+            # into buckets the table no longer has). Either way the commit
+            # raises and the merge REPLANS against the new manifest.
             for _attempt in range(4):
+                # the layout is table state: adopt the manifest's, and
+                # re-stage an upstream `_bucket` hashed for another one
+                n = self.n_buckets = self._layout(m)
+                batch = chg
+                if "_bucket" in chg.columns and (
+                    chg.schema["_bucket"].metadata.get("n_buckets") != n
+                ):
+                    batch = chg.drop("_bucket")
                 try:
+                    if self.write_mode == "mor":
+                        return self._merge_apply_mor(
+                            batch, m, n, batch_id, seq_high_watermark
+                        )
+                    if n not in touched:
+                        touched[n] = self._touched_buckets(batch, n)
                     return self._merge_apply_cow(
-                        chg, m, touched, batch_id, seq_high_watermark
+                        batch, m, n, touched[n], batch_id, seq_high_watermark
                     )
                 except _CommitConflict:
                     m = self.current_manifest()
@@ -1071,19 +1191,20 @@ class ParquetSnapshotTableIO:
                     ):
                         return {"skipped_duplicate_batch": batch_id}
             raise RuntimeError(
-                f"merge_apply {batch_id!r}: lost the commit race 4 times on "
-                f"buckets {sorted(touched)}; quiesce competing writers or "
-                "route this table through a single committer"
+                f"merge_apply {batch_id!r}: lost the commit race 4 times; "
+                "quiesce competing writers or route this table through a "
+                "single committer"
             )
         finally:
-            chg.unpersist()
+            if chg is not changes:
+                chg.unpersist()
 
-    def _touched_buckets(self, df: DataFrame) -> list[int]:
+    def _touched_buckets(self, df: DataFrame, n_buckets: int) -> list[int]:
         """Distinct bucket ids of `df`'s keys — a bounded collect of ≤
         n_buckets ints; a bucket-fused batch already carries `_bucket`."""
         bcol = (
             F.col("_bucket") if "_bucket" in df.columns
-            else bucket_expr(self.key_cols[0], self.n_buckets)
+            else bucket_expr(self.key_cols[0], n_buckets)
         )
         return [r["b"] for r in df.select(bcol.alias("b")).distinct().collect()]
 
@@ -1091,14 +1212,15 @@ class ParquetSnapshotTableIO:
         self,
         chg: DataFrame,
         m: dict,
+        n: int,
         touched: list[int],
         batch_id: str | None,
         seq_high_watermark: int | None,
     ) -> dict:
-        """One CoW rewrite attempt planned against manifest `m`: join the
-        touched buckets' state (as of `m`) with the changes, write the
-        merged buckets, and commit iff those buckets are still exactly as
-        `m` recorded them (raises _CommitConflict otherwise)."""
+        """One CoW rewrite attempt planned against manifest `m` in layout
+        `n`: join the touched buckets' state (as of `m`) with the changes,
+        write the merged buckets, and commit iff those buckets are still
+        exactly as `m` recorded them (raises _CommitConflict otherwise)."""
         schema = TableSchema(**m["schema"])
         names = schema.names()
         key = self.key_cols
@@ -1140,8 +1262,8 @@ class ParquetSnapshotTableIO:
                 # bucket write (one exchange of table bytes instead of a
                 # key-shuffle of both sides plus a staging exchange).
                 current = current.withColumn(
-                    "_bucket", bucket_expr(key[0], self.n_buckets)
-                ).repartition(self.n_buckets, "_bucket")
+                    "_bucket", bucket_expr(key[0], n)
+                ).repartition(n, "_bucket")
 
             c = chg.alias("c")
             t = current.alias("t")
@@ -1200,7 +1322,7 @@ class ParquetSnapshotTableIO:
         )
         merged = merged.drop("_outcome")
 
-        new_files = self._write_buckets(merged, schema.version)
+        new_files = self._write_buckets(self._staged(merged, n), schema.version)
         metrics = obs.get
 
         lineage_rec = {
@@ -1220,24 +1342,30 @@ class ParquetSnapshotTableIO:
             files.update(new_files)
             return files
 
-        if self._commit_batch(_files, batch_id, seq_high_watermark, lineage_rec) is None:
+        if self._commit_batch(_files, n, batch_id, seq_high_watermark, lineage_rec) is None:
             return {"skipped_duplicate_batch": batch_id}
         return lineage_rec
 
-    def _commit_batch(self, files_of, batch_id: str | None,
+    def _commit_batch(self, files_of, n_buckets: int, batch_id: str | None,
                       seq_high_watermark: int | None, lineage_rec: dict) -> dict | None:
-        """Commit one merge apply: `files_of(cur)` maps the current manifest
-        to the new file map (it may raise _CommitConflict); the batch id,
-        seq watermark and lineage record ride along. Stamps the record's
-        snapshot id and returns the committed manifest, or None when the
-        batch id was already committed (a re-delivered epoch is a no-op)."""
+        """Commit one merge apply whose files were laid out in `n_buckets`
+        buckets: `files_of(cur)` maps the current manifest to the new file
+        map (it may raise _CommitConflict); the batch id, seq watermark and
+        lineage record ride along. Stamps the record's snapshot id and
+        returns the committed manifest, or None when the batch id was
+        already committed (a re-delivered epoch is a no-op). Raises
+        _CommitConflict when the table's layout changed since the plan (a
+        rebucket or rollback committed): the files hash into buckets the
+        table no longer has."""
         def _mutate(cur: dict) -> dict:
             if batch_id is not None and batch_id in set(cur["committed_batches"]):
                 raise _DuplicateBatch(batch_id)
+            if self._layout(cur) != n_buckets:
+                raise _CommitConflict(f"layout {n_buckets} -> {self._layout(cur)}")
             hw = cur.get("seq_high_watermark", -1)
             return {
                 "schema": cur["schema"],
-                "n_buckets": self.n_buckets,
+                "n_buckets": n_buckets,
                 "files": files_of(cur),
                 "committed_batches": [*cur["committed_batches"],
                                       *([batch_id] if batch_id is not None else [])],
@@ -1258,6 +1386,7 @@ class ParquetSnapshotTableIO:
         self,
         changes: DataFrame,
         m: dict,
+        n: int,
         batch_id: str | None,
         seq_high_watermark: int | None,
     ) -> dict:
@@ -1278,7 +1407,7 @@ class ParquetSnapshotTableIO:
             (F.col("op") == F.lit("D")).alias(SYS_DELETED),
         )
 
-        new_files = self._write_buckets(delta, schema.version, kind="delta")
+        new_files = self._write_buckets(self._staged(delta, n), schema.version, kind="delta")
         # metrics derived from the parquet footers / per-file delete stats the
         # write just recorded — deterministic by construction. The previous
         # Observation-based counters could mis-count under task retry /
@@ -1305,7 +1434,7 @@ class ParquetSnapshotTableIO:
                 files[b] = files.get(b, []) + es
             return files
 
-        committed = self._commit_batch(_files, batch_id, seq_high_watermark, lineage_rec)
+        committed = self._commit_batch(_files, n, batch_id, seq_high_watermark, lineage_rec)
         if committed is None:
             return {"skipped_duplicate_batch": batch_id}
 
@@ -1353,32 +1482,28 @@ class ParquetSnapshotTableIO:
         m = self.current_manifest()
         schema = TableSchema(**m["schema"])
         entries = [e for es in m["files"].values() for e in es]
-        old_n = self.n_buckets
+        old_n = self._layout(m)
+        new_files = self._rewrite(entries, schema, "base", n_new)
+
+        def _mutate(cur: dict) -> dict:
+            if cur["snapshot_id"] != m["snapshot_id"]:
+                raise RuntimeError(
+                    "rebucket conflict: table advanced from snapshot "
+                    f"{m['snapshot_id']} to {cur['snapshot_id']} during the "
+                    "rewrite; retry when ingest is quiesced"
+                )
+            out = dict(cur)
+            out["n_buckets"] = n_new
+            out["files"] = {b: list(es) for b, es in new_files.items()}
+            out["lineage"] = [
+                *cur["lineage"],
+                {"mode": "rebucket", "from_buckets": old_n,
+                 "to_buckets": n_new},
+            ]
+            return out
+
+        committed = self._commit_mutation(_mutate)
         self.n_buckets = n_new
-        try:
-            new_files = self._rewrite(entries, schema, "base")
-
-            def _mutate(cur: dict) -> dict:
-                if cur["snapshot_id"] != m["snapshot_id"]:
-                    raise RuntimeError(
-                        "rebucket conflict: table advanced from snapshot "
-                        f"{m['snapshot_id']} to {cur['snapshot_id']} during the "
-                        "rewrite; retry when ingest is quiesced"
-                    )
-                out = dict(cur)
-                out["n_buckets"] = n_new
-                out["files"] = {b: list(es) for b, es in new_files.items()}
-                out["lineage"] = [
-                    *cur["lineage"],
-                    {"mode": "rebucket", "from_buckets": old_n,
-                     "to_buckets": n_new},
-                ]
-                return out
-
-            committed = self._commit_mutation(_mutate)
-        except BaseException:
-            self.n_buckets = old_n
-            raise
         return {"snapshot_id": committed["snapshot_id"],
                 "from_buckets": old_n, "to_buckets": n_new}
 
@@ -1415,6 +1540,7 @@ class ParquetSnapshotTableIO:
         group on), go to the one Spark fold (_rewrite)."""
         m = self.current_manifest()
         schema = TableSchema(**m["schema"])
+        self.n_buckets = self._layout(m)  # the Spark fold writes in it
         minor = kind == "delta"
 
         def pick(b) -> list[dict]:
@@ -1503,13 +1629,16 @@ class ParquetSnapshotTableIO:
         self._commit_mutation(_mutate)
         return sorted(done)
 
-    def _rewrite(self, entries: list[dict], schema: TableSchema, kind: str) -> dict:
+    def _rewrite(self, entries: list[dict], schema: TableSchema, kind: str,
+                 n_buckets: int | None = None) -> dict:
         """The Spark fold: read `entries`, collapse to one row per key, write
-        them as `kind` files in the current bucket layout ({} if none)."""
+        them as `kind` files in `n_buckets` buckets (the handle's layout by
+        default; {} if no entries)."""
         df = self._read_files(entries, schema)
         if df is None:
             return {}
-        return self._write_buckets(self._collapse_rows(df), schema.version, kind=kind)
+        df = self._staged(self._collapse_rows(df), n_buckets or self.n_buckets)
+        return self._write_buckets(df, schema.version, kind=kind)
 
     def _fits_arrow(self, entries: list[dict]) -> bool:
         """Whether an arrow fold may hold these files (an unreadable one
@@ -1545,7 +1674,9 @@ class ParquetSnapshotTableIO:
         keep = ~F.col(SYS_DELETED)
         if watermark is not None:
             keep = keep | (F.col(self.lww_col) >= F.lit(watermark))
-        files = self._write_buckets(df.filter(keep), schema.version)
+        files = self._write_buckets(
+            self._staged(df.filter(keep), self._layout(m)), schema.version
+        )
         self._commit_rewrite(pinned, files, {
             "mode": "expire_tombstones",
             "watermark": None if watermark is None else str(watermark),
@@ -1643,6 +1774,7 @@ class ParquetSnapshotTableIO:
             }
 
         m = self._commit_mutation(_mutate)
+        self.n_buckets = self._layout(m)
         return {"snapshot_id": m["snapshot_id"], "rolled_back_to": sid}
 
     # ---------- branches (Iceberg branch refs) ----------

@@ -138,6 +138,24 @@ def test_filter_rows_typed_value(spark, tmp_path, vtype, function, value, want):
     assert sorted(r.k for r in outs["T"].collect()) == want
 
 
+def test_filter_rows_in_list_splits_the_text_on_semicolons(spark, tmp_path):
+    """Kettle's Condition reads an IN LIST value as `;`-separated items: the
+    list `ab;c` holds `ab` and `c`, not the characters a, b and c."""
+    grid = _grid("G", "<field><name>s</name><type>String</type></field>", [["a"], ["b"], ["c"]])
+    steps = grid + (
+        "<step><name>F</name><type>FilterRows</type>"
+        "<send_true_to>T</send_true_to><send_false_to>N</send_false_to>"
+        "<compare><condition><leftvalue>s</leftvalue><function>IN LIST</function>"
+        "<value><name>constant</name><type>String</type><text>ab;c</text></value>"
+        "</condition></compare></step>"
+        "<step><name>T</name><type>Dummy</type></step>"
+        "<step><name>N</name><type>Dummy</type></step>"
+    )
+    outs = _run(spark, tmp_path, steps, [("G", "F"), ("F", "T"), ("F", "N")])
+    assert sorted(r.s for r in outs["T"].collect()) == ["c"]
+    assert sorted(r.s for r in outs["N"].collect()) == ["a", "b"]
+
+
 def test_number_to_integer_casts_in_calculator_and_select_values(spark):
     """Typed Number → Integer is a cast: it truncates toward zero."""
     df = spark.createDataFrame([(2.7,), (-2.7,)], "x double")
