@@ -31,10 +31,11 @@ from pentaho_kettle_spark.functions import text as ftext
 from pentaho_kettle_spark.functions.portable import floor_round, phash64
 from pentaho_kettle_spark.operators.calculator import Calc
 from pentaho_kettle_spark.operators.group_by import Agg
+from pentaho_kettle_spark.sources.files import parquet_input
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return parquet_input(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _us(c):
@@ -2151,8 +2152,6 @@ def _q_cube_roundtrip(spark, sf):
     """Cube output -> cube input (SURVEY §2.1 cubeinput/cubeoutput): parquet
     is this engine's native serialized-rowset format; a distributed write
     re-read must reproduce the projection exactly."""
-    from pentaho_kettle_spark.sources.files import parquet_input
-
     p = _t(spark, sf, "part").select("p_partkey", "p_name", "p_retailprice")
     with _scratch("pks_cube_corr_") as root:
         p.write.mode("overwrite").parquet(f"{root}/cube")

@@ -5,6 +5,14 @@ UTC session timezone (oracle comparability vs DuckDB), AQE on (runtime
 re-plan + skew-join splitting), Arrow on (vectorized pandas UDF transfer),
 shuffle partitions sized to cores for local mode (at cluster scale the
 deploy sets this to ~2-3x total cores).
+
+Python call-site capture is off (`spark.python.sql.dataFrameDebugging.enabled`
+= false), so building a query costs a third of the py4j round trips. The
+price: a Spark error no longer carries the Python call site of the
+DataFrame call that failed (its `DataFrameQueryContext`). To get it back,
+pass `extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`.
+PySpark reads this flag once per process, from the first active session,
+so it has to be set on the first session the process builds.
 """
 
 from __future__ import annotations
@@ -64,6 +72,11 @@ def get_spark(
         # clustering is deliberate here: n_buckets is the table's layout
         # parallelism, at cluster scale it is sized ≫ executor slots.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        # no Python call-site capture: with it on, every DataFrame/Column
+        # API call pays extra py4j round trips (active session, a conf read,
+        # PySparkCurrentOrigin set + clear), about two thirds of a query
+        # build's round trips. See the module docstring for the trade-off.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # shuffle/spill dir on tmpfs when available: the sandbox's virtio disk
     # stalls for seconds under writeback (cluster deploys use local SSDs and

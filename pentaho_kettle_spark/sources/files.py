@@ -8,6 +8,9 @@ gzip row format → parquet is our native format).
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -214,9 +217,61 @@ def json_path_fields(df: DataFrame, source_field: str, fields: dict[str, str]) -
     return df
 
 
+# local path -> (identity of the files under it, the schema Spark inferred),
+# the most recently inferred _PARQUET_SCHEMAS_MAX paths
+_PARQUET_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+_PARQUET_SCHEMAS_MAX = 256
+_PARQUET_SCHEMAS_LOCK = threading.Lock()
+
+
+def _local_files(path: str) -> tuple | None:
+    """(path, size, mtime_ns) of every file under a local `path`, walked on
+    the driver and sorted; None for a URI, a glob, or a path with no file
+    (missing or empty) — those read as Spark alone decides."""
+    if ":" in path.split("/", 1)[0] or any(c in path for c in "*?[]{}"):
+        return None
+    try:
+        if os.path.isfile(path):
+            files = [path]
+        else:
+            files = [os.path.join(d, n) for d, _, names in os.walk(path) for n in names]
+        out = []
+        for f in files:
+            st = os.stat(f)
+            out.append((f, st.st_size, st.st_mtime_ns))
+    except OSError:  # a file removed mid-walk
+        return None
+    return tuple(sorted(out)) or None
+
+
 def parquet_input(spark: SparkSession, path: str) -> DataFrame:
-    """Cube input equivalent — parquet is this engine's native row format."""
-    return spark.read.parquet(path)
+    """Cube input equivalent — parquet is this engine's native row format.
+
+    A bare `spark.read.parquet` infers the schema from the footers in a
+    Spark job every time a query is built. The schema Spark inferred is
+    kept per local path, keyed by the path, size and mtime of every file
+    under it; while those are unchanged the read passes it back, so the
+    build runs no job. A rewritten, added or removed file changes the key
+    and the schema is inferred again; a missing or empty path, a URI and a
+    glob always infer, so they fail or resolve exactly as Spark's reader
+    does. The stored schema is Spark's own inference, under the session's
+    parquet settings at the time it was inferred."""
+    # taken before the inference: a file rewritten in between leaves a key
+    # that no longer matches, which costs one more inference, never a stale
+    # schema
+    ident = _local_files(path)
+    hit = _PARQUET_SCHEMAS.get(path) if ident else None
+    if hit and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if ident:
+        schema = df.schema
+        with _PARQUET_SCHEMAS_LOCK:
+            _PARQUET_SCHEMAS.pop(path, None)
+            if len(_PARQUET_SCHEMAS) >= _PARQUET_SCHEMAS_MAX:
+                del _PARQUET_SCHEMAS[next(iter(_PARQUET_SCHEMAS))]
+            _PARQUET_SCHEMAS[path] = (ident, schema)
+    return df
 
 
 def csv_output(

@@ -1,8 +1,8 @@
 """Interpreted-expression gate: the CodegenFallback count in the physical
 plan of every functions/-backed registry query that builds without running a
-Spark job (beyond reading its table's schema), at sf0.001. A rewrite of an
-expression builder that leaves more of it interpreted fails here; one that
-moves an expression into codegen lowers a count, and the pin moves with it.
+Spark job, at sf0.001. A rewrite of an expression builder that leaves more of
+it interpreted fails here; one that moves an expression into codegen lowers a
+count, and the pin moves with it.
 The counter is perfbench's own (`KettleSteps.codegen_fallback_nodes`)."""
 
 from __future__ import annotations

@@ -144,3 +144,61 @@ def test_footer_skip_on_multisplit_plain_file(spark, tmp_path):
     assert len(got) == n
     assert [r.k for r in got] == list(range(n))
     assert got[0].name == "name0" and got[-1].name == f"name{n - 1}"
+
+
+def test_parquet_input_schema_follows_rewrites(spark, tmp_path):
+    """parquet_input keeps Spark's inferred schema per local path: a build
+    over unchanged files runs no Spark job, and a rewrite at the same path
+    (a file or a directory) with an added column and a changed type reads
+    the new schema and the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pentaho_kettle_spark.sources.files import parquet_input
+    from tests.test_manifest_planned_reads import _jobs
+
+    f = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32()), "v": ["a", "b"]}), f)
+    assert parquet_input(spark, f).schema.simpleString() == "struct<k:int,v:string>"
+    again, ran = _jobs(spark, lambda: parquet_input(spark, f))
+    assert ran == [] and again.schema.simpleString() == "struct<k:int,v:string>"
+    pq.write_table(pa.table({"k": pa.array([3], pa.int64()), "v": ["c"], "w": [1.5]}), f)
+    new = parquet_input(spark, f)
+    assert new.schema.simpleString() == "struct<k:bigint,v:string,w:double>"
+    assert [tuple(r) for r in new.collect()] == [(3, "c", 1.5)]
+
+    d = str(tmp_path / "dir")
+    spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(d)
+    assert [tuple(r) for r in parquet_input(spark, d).collect()] == [(1, "a")]
+    spark.createDataFrame([(2, "b", 2.5)], "k long, v string, w double") \
+        .write.mode("overwrite").parquet(d)
+    new = parquet_input(spark, d)
+    assert new.schema.simpleString() == "struct<k:bigint,v:string,w:double>"
+    assert [tuple(r) for r in new.collect()] == [(2, "b", 2.5)]
+
+
+def test_parquet_input_deleted_files_fail_loudly(spark, tmp_path):
+    """A path whose files are gone raises, also after its schema was kept:
+    it never reads as an empty result."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from pentaho_kettle_spark.sources.files import parquet_input
+
+    f = str(tmp_path / "t.parquet")
+    d = str(tmp_path / "dir")
+    spark.createDataFrame([(1, "a")], "k int, v string").coalesce(1).write.parquet(d)
+    shutil.copy(next(os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")), f)
+    built = parquet_input(spark, f)
+    assert built.count() == 1 and parquet_input(spark, d).count() == 1
+
+    os.remove(f)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        parquet_input(spark, f)
+    with pytest.raises(Exception, match="FILE_NOT_EXIST|does not exist"):
+        built.collect()  # built before the delete: the scan fails, not empties
+    for n in os.listdir(d):
+        os.remove(os.path.join(d, n))
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        parquet_input(spark, d)
