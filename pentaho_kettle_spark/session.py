@@ -13,6 +13,24 @@ DataFrame call that failed (its `DataFrameQueryContext`). To get it back,
 pass `extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`.
 PySpark reads this flag once per process, from the first active session,
 so it has to be set on the first session the process builds.
+
+Spark's codegen cache holds 2048 classes (`spark.sql.codegen.cache.maxEntries`;
+Spark's default is 100). The cache maps the Java source of each generated
+class (a whole-stage codegen stage, a projection, an ordering) to the class
+Janino compiled from it, so a query shape the JVM has run before reuses its
+classes. It evicts the least recently used class. The 11 perfbench
+`kettle_steps` queries cycle through about 100 classes per pass, in the same
+order every pass, so at 100 entries each class was evicted before its next
+use: every pass recompiled them all (95 to 112 compiles per pass, by
+seed), and the JIT then compiled the new bytecode again. One round of all
+114 registry rows at sf0.01 compiles 1,069 classes; 2048 holds that about
+twice over. A cached class costs about 9 KB of Metaspace, 25 KB of heap
+(its source, kept as the cache key) and 9 KB of JIT code cache: about
+40 MB for the registry's working set, at most about 90 MB for a full
+cache. The setting is a static conf: the JVM reads it once, from the first
+session, when it first generates code. To change it, pass
+`extra_conf={"spark.sql.codegen.cache.maxEntries": "..."}` to the first
+session the process builds.
 """
 
 from __future__ import annotations
@@ -77,6 +95,13 @@ def get_spark(
         # PySparkCurrentOrigin set + clear), about two thirds of a query
         # build's round trips. See the module docstring for the trade-off.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # compile each generated class once per JVM: Spark's default LRU of
+        # 100 classes is no larger than the cycle of classes the kettle_steps
+        # queries run through, so every lookup missed. 2048 is about twice
+        # the 1,069 classes of all 114 registry rows, at about 43 KB per
+        # class (Metaspace, heap and code cache). Static: read once per JVM,
+        # from the first session. See the module docstring.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     # shuffle/spill dir on tmpfs when available: the sandbox's virtio disk
     # stalls for seconds under writeback (cluster deploys use local SSDs and

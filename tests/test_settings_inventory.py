@@ -1,6 +1,7 @@
 """The engine's settings, pinned: every constructor/method parameter, policy
-field and environment variable a caller can set. A new knob has to be added
-here deliberately — and earn its keep — or this test fails. The
+field and environment variable a caller can set, and every Spark config
+`get_spark` sets. A new knob or engine switch has to be added here
+deliberately — and earn its keep — or this test fails. The
 measurement scripts' environment keys, and the files the docs' `python`
 commands name, are pinned the same way."""
 
@@ -20,6 +21,7 @@ from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO
 REPO = Path(__file__).resolve().parents[1]
 PKG = REPO / "pentaho_kettle_spark"
 ENV_KEY = re.compile(r"""(?:environ\.get\(|environ\[|getenv\()\s*["'](\w+)["']""")
+CONF_KEY = re.compile(r"""\.config\(\s*["']([\w.]+)["']""")
 
 
 def _params(fn) -> list[str]:
@@ -47,6 +49,20 @@ def test_table_and_policy_settings():
 def test_environment_variables_read_by_the_package():
     keys = {k for py in PKG.rglob("*.py") for k in ENV_KEY.findall(py.read_text())}
     assert keys == {"PKS_MASTER", "SPARK_GRAFT_CPUS", "PKS_DRIVER_MEM", "PKS_LOCAL_DIR"}
+
+
+def test_session_configs_pinned_by_get_spark():
+    keys = set(CONF_KEY.findall((PKG / "session.py").read_text()))
+    assert keys == {
+        "spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled", "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled", "spark.sql.execution.arrow.pyspark.enabled",
+        "spark.sql.parquet.compression.codec", "spark.sql.parquet.outputTimestampType",
+        "spark.driver.memory", "spark.ui.enabled", "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.requireAllClusterKeysForCoPartition",
+        "spark.python.sql.dataFrameDebugging.enabled", "spark.sql.codegen.cache.maxEntries",
+        "spark.local.dir",
+    }
 
 
 def test_environment_variables_read_by_the_scripts():
