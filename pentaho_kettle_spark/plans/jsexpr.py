@@ -5,15 +5,19 @@ Backs the ScriptValuesMod (.ktr "Modified Java Script Value") step builder
 Rhino per row; arbitrary JS cannot (and should not) run inside a Catalyst
 plan, but the overwhelmingly common real-world use of the step is one-line
 derived fields — `var fee = amount * rate / 100;`, `var flag = qty > 10 ?
-'big' : 'small';`, `var key = name + '_' + id;`. This module compiles
-exactly that subset to native Spark expressions (JVM codegen — the FAST
-path, faster than the reference's per-row Rhino), and raises
-NotImplementedError naming the offending construct for anything else, so a
-user knows precisely which script needs porting to script_values()
-(operators/scripting.py mapInPandas — the general fallback).
+'big' : 'small';`, `var key = name + '_' + id;`. This module declares
+exactly that subset as a dialect of plans/exprcore.py, which compiles it to
+native Spark expressions (JVM codegen — the FAST path, faster than the
+reference's per-row Rhino), and raises NotImplementedError naming the
+offending construct for anything else, so a user knows precisely which
+script needs porting to script_values() (operators/scripting.py
+mapInPandas — the general fallback).
 
 Supported grammar (C-style precedence):
-  literals        123, 1.5, 'str', "str", true, false, null
+  literals        123, 1.5, 'str', "str", true, false, null; string
+                  escapes \\n \\t \\r \\b \\f \\v \\0 \\\\ \\' \\" \\xHH \\uHHHH
+                  decode as in JS, any other escaped character stands for
+                  itself
   identifiers     input columns or previously-assigned script vars
   arithmetic      + - * / %  (unary -); `+` follows JS semantics: when
                   either operand is string-typed it is CONCATENATION (both
@@ -29,6 +33,10 @@ Supported grammar (C-style precedence):
                   .indexOf(s)  .replace(a, b)  .concat(s)
   functions       Math.abs/round/floor/ceil/min/max/pow/sqrt,
                   parseInt(x), parseFloat(x), str2num(x), num2str(x)
+  comments        // ... and /* ... */, anywhere between tokens
+
+Math.round rounds half toward +∞, as JS does: Math.round(-2.5) = -2,
+Math.round(2.5) = 3 (Spark's round goes half away from zero).
 
 Known coercion caveat (documented, not hidden): JS stringifies an integral
 double as "2" while Spark's CAST(double AS STRING) gives "2.0". String-`+`
@@ -39,50 +47,13 @@ belong in script_values().
 
 from __future__ import annotations
 
+import operator
 import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_TOKEN_RE = re.compile(
-    r"\s*(?:"
-    r"(?P<num>\d+\.\d+|\d+)"
-    r"|(?P<str>'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")"
-    r"|(?P<name>[A-Za-z_$][A-Za-z0-9_$]*)"
-    r"|(?P<op>===|!==|==|!=|<=|>=|&&|\|\||[-+*/%<>!?:().,])"
-    r")"
-)
-
-
-def _tokenize(src: str) -> list[tuple[str, str]]:
-    out, pos = [], 0
-    while pos < len(src):
-        m = _TOKEN_RE.match(src, pos)
-        if m is None or m.end() == pos:
-            rest = src[pos:].strip()
-            if not rest:
-                break
-            raise NotImplementedError(f"js expression: cannot tokenize {rest[:30]!r}")
-        pos = m.end()
-        for kind in ("num", "str", "name", "op"):
-            v = m.group(kind)
-            if v is not None:
-                out.append((kind, v))
-                break
-    out.append(("eof", ""))
-    return out
-
-
-class _TV:
-    """A compiled expression with its statically-inferred JS type:
-    'str' | 'num' | 'bool' | None (unknown — e.g. a column absent from the
-    supplied schema)."""
-
-    __slots__ = ("col", "t")
-
-    def __init__(self, col: Column, t: str | None = None):
-        self.col = col
-        self.t = t
+from pentaho_kettle_spark.plans.exprcore import MANY, TV, Dialect, Parser, binop, concat, nary
 
 
 def _schema_types(schema) -> dict[str, str | None]:
@@ -96,250 +67,121 @@ def _schema_types(schema) -> dict[str, str | None]:
         if hasattr(schema, "fields")
         else list(schema.items())
     )
-    out: dict[str, str | None] = {}
-    for name, dt in fields:
-        if isinstance(dt, T.StringType):
-            out[name] = "str"
-        elif isinstance(dt, T.BooleanType):
-            out[name] = "bool"
-        elif isinstance(dt, (T.NumericType,)):
-            out[name] = "num"
-        else:
-            out[name] = None
-    return out
+    kinds = ((T.StringType, "str"), (T.BooleanType, "bool"), (T.NumericType, "num"))
+    return {n: next((k for c, k in kinds if isinstance(dt, c)), None) for n, dt in fields}
 
 
-class _Parser:
-    """Recursive descent over the C-expression subset above."""
+def _plus(a: TV, b: TV) -> TV:
+    # JS '+': string operand ⇒ concatenation, both sides coerced to string
+    # (the single most common ScriptValuesMod idiom: var key = name + '_' + id;)
+    if "str" in (a.t, b.t):
+        return TV(concat(a.col, b.col), "str")
+    return TV(a.col + b.col, "num" if a.t == b.t == "num" else None)
 
-    def __init__(
-        self,
-        tokens: list[tuple[str, str]],
-        env: dict[str, _TV],
-        coltypes: dict[str, str | None] | None = None,
-    ):
-        self.toks = tokens
-        self.i = 0
-        self.env = env
-        self.coltypes = coltypes or {}
 
-    def peek(self) -> tuple[str, str]:
-        return self.toks[self.i]
+def _round(x: Column) -> Column:
+    return F.when(x - F.floor(x) >= 0.5, F.ceil(x)).otherwise(F.floor(x))
 
-    def take(self, op: str | None = None) -> tuple[str, str]:
-        kind, val = self.toks[self.i]
-        if op is not None and (kind != "op" or val != op):
-            raise NotImplementedError(f"js expression: expected {op!r}, got {val!r}")
-        self.i += 1
-        return kind, val
 
-    # precedence climbing: ternary > or > and > equality > relational > add > mul > unary
-    def parse(self) -> _TV:
-        e = self.ternary()
-        if self.peek()[0] != "eof":
-            raise NotImplementedError(
-                f"js expression: trailing tokens at {self.peek()[1]!r}"
-            )
-        return e
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "f": "\f", "v": "\v", "0": "\0"}
+_ESCAPE_RE = re.compile(r"\\(u[0-9a-fA-F]{4}|x[0-9a-fA-F]{2}|.)", re.S)
 
-    def ternary(self) -> _TV:
-        cond = self.logic_or()
-        if self.peek() == ("op", "?"):
-            self.take("?")
-            a = self.ternary()
-            self.take(":")
-            b = self.ternary()
-            return _TV(F.when(cond.col, a.col).otherwise(b.col), a.t or b.t)
-        return cond
 
-    def logic_or(self) -> _TV:
-        e = self.logic_and()
-        while self.peek() == ("op", "||"):
-            self.take("||")
-            e = _TV(e.col | self.logic_and().col, "bool")
-        return e
+def _unescape(m: re.Match) -> str:
+    c = m[1]
+    return chr(int(c[1:], 16)) if len(c) > 1 else _ESCAPES.get(c, c)
 
-    def logic_and(self) -> _TV:
-        e = self.equality()
-        while self.peek() == ("op", "&&"):
-            self.take("&&")
-            e = _TV(e.col & self.equality().col, "bool")
-        return e
 
-    def equality(self) -> _TV:
-        e = self.relational()
-        while self.peek()[0] == "op" and self.peek()[1] in ("==", "!=", "===", "!=="):
-            _, op = self.take()
-            r = self.relational()
-            e = _TV(
-                (e.col == r.col) if op in ("==", "===") else (e.col != r.col), "bool"
-            )
-        return e
+_FUNCTIONS = {
+    # name -> ((min_arity, max_arity), builder over Column args, result type)
+    "Math.abs": ((1, 1), lambda a: F.abs(a[0]), "num"),
+    "Math.round": ((1, 1), lambda a: _round(a[0]), "num"),
+    "Math.floor": ((1, 1), lambda a: F.floor(a[0]), "num"),
+    "Math.ceil": ((1, 1), lambda a: F.ceil(a[0]), "num"),
+    "Math.sqrt": ((1, 1), lambda a: F.sqrt(a[0]), "num"),
+    "Math.min": ((1, MANY), nary(F.least), "num"),
+    "Math.max": ((1, MANY), nary(F.greatest), "num"),
+    "Math.pow": ((2, 2), lambda a: F.pow(a[0], a[1]), "num"),
+    "parseInt": ((1, 1), lambda a: a[0].cast("double").cast("long"), "num"),
+    "parseFloat": ((1, 1), lambda a: a[0].cast("double"), "num"),
+    "str2num": ((1, 1), lambda a: a[0].cast("double"), "num"),
+    "num2str": ((1, 1), lambda a: a[0].cast("string"), "str"),
+}
 
-    def relational(self) -> _TV:
-        e = self.additive()
-        while self.peek()[0] == "op" and self.peek()[1] in ("<", "<=", ">", ">="):
-            _, op = self.take()
-            r = self.additive()
-            e = _TV(
-                {
-                    "<": e.col < r.col,
-                    "<=": e.col <= r.col,
-                    ">": e.col > r.col,
-                    ">=": e.col >= r.col,
-                }[op],
-                "bool",
-            )
-        return e
+_METHODS = {
+    # .name -> as _FUNCTIONS; the receiver is the builder's first Column
+    ".toUpperCase": ((0, 0), lambda a: F.upper(a[0]), "str"),
+    ".toLowerCase": ((0, 0), lambda a: F.lower(a[0]), "str"),
+    ".trim": ((0, 0), lambda a: F.trim(a[0]), "str"),
+    ".concat": ((1, 1), lambda a: F.concat(a[0], a[1]), "str"),
+    ".indexOf": ((1, 1), lambda a: F.instr(a[0], a[1]) - 1, "num"),  # JS 0-based, -1 miss
+    ".replace": ((2, 2), lambda a: F.replace(a[0], a[1], a[2]), "str"),
+    # JS substr(start[, len]) and substring(start, end) are 0-based; Spark's
+    # substring is 1-based
+    ".substr": (
+        (1, 2),
+        lambda a: F.substring(a[0], a[1] + 1, a[2] if len(a) > 2 else F.lit(2**31 - 1)),
+        "str",
+    ),
+    ".substring": ((2, 2), lambda a: F.substring(a[0], a[1] + 1, a[2] - a[1]), "str"),
+}
 
-    def additive(self) -> _TV:
-        e = self.multiplicative()
-        while self.peek()[0] == "op" and self.peek()[1] in ("+", "-"):
-            _, op = self.take()
-            r = self.multiplicative()
-            if op == "-":
-                e = _TV(e.col - r.col, "num")
-            elif "str" in (e.t, r.t):
-                # JS '+': string operand ⇒ concatenation, both sides
-                # coerced to string (the single most common
-                # ScriptValuesMod idiom: var key = name + '_' + id;)
-                e = _TV(F.concat(e.col.cast("string"), r.col.cast("string")), "str")
-            else:
-                e = _TV(e.col + r.col, "num" if (e.t == r.t == "num") else None)
-        return e
 
-    def multiplicative(self) -> _TV:
-        e = self.unary()
-        while self.peek()[0] == "op" and self.peek()[1] in ("*", "/", "%"):
-            _, op = self.take()
-            r = self.unary()
-            e = _TV(
-                {"*": e.col * r.col, "/": e.col / r.col, "%": e.col % r.col}[op],
-                "num",
-            )
-        return e
+def _postfix(p: Parser, e: TV) -> TV | None:
+    if not p.accept("."):
+        return None
+    name = "." + p.take()[1]
+    if name == ".length":
+        return TV(F.length(e.col), "num")
+    return p.call(name, _METHODS, (e,))
 
-    def unary(self) -> _TV:
-        if self.peek() == ("op", "-"):
-            self.take("-")
-            return _TV(-self.unary().col, "num")
-        if self.peek() == ("op", "!"):
-            self.take("!")
-            return _TV(~self.unary().col, "bool")
-        return self.postfix()
 
-    # name -> (arity, fn over Columns, result type)
-    _METHODS = {
-        "toUpperCase": (0, lambda e: F.upper(e), "str"),
-        "toLowerCase": (0, lambda e: F.lower(e), "str"),
-        "trim": (0, lambda e: F.trim(e), "str"),
-        "concat": (1, lambda e, a: F.concat(e, a), "str"),
-        "indexOf": (1, lambda e, a: F.instr(e, a) - 1, "num"),  # JS 0-based, -1 miss
-        "replace": (2, lambda e, a, b: F.replace(e, a, b), "str"),
-    }
+def _bool(fn):
+    return binop(fn, "bool")
 
-    def postfix(self) -> _TV:
-        e = self.primary()
-        while self.peek() == ("op", "."):
-            self.take(".")
-            _, name = self.take()
-            if name == "length":
-                e = _TV(F.length(e.col), "num")
-                continue
-            if name == "substr":
-                args = self.arglist()
-                # JS substr(start, len) is 0-based; Spark substring 1-based
-                if len(args) == 1:
-                    e = _TV(F.substring(e.col, args[0].col + 1, F.lit(2**31 - 1)), "str")
-                elif len(args) == 2:
-                    e = _TV(F.substring(e.col, args[0].col + 1, args[1].col), "str")
-                else:
-                    raise NotImplementedError("js expression: substr arity")
-                continue
-            if name == "substring":
-                args = self.arglist()
-                if len(args) != 2:
-                    raise NotImplementedError("js expression: substring arity")
-                e = _TV(
-                    F.substring(e.col, args[0].col + 1, args[1].col - args[0].col),
-                    "str",
-                )
-                continue
-            if name in self._METHODS:
-                arity, fn, rtype = self._METHODS[name]
-                args = self.arglist()
-                if len(args) != arity:
-                    raise NotImplementedError(f"js expression: {name} arity")
-                e = _TV(fn(e.col, *(a.col for a in args)), rtype)
-                continue
-            raise NotImplementedError(f"js expression: unsupported method .{name}()")
-        return e
 
-    def arglist(self) -> list[_TV]:
-        self.take("(")
-        args: list[_TV] = []
-        if self.peek() != ("op", ")"):
-            args.append(self.ternary())
-            while self.peek() == ("op", ","):
-                self.take(",")
-                args.append(self.ternary())
-        self.take(")")
-        return args
+_JS = Dialect(
+    name="js expression",
+    tokens=[
+        ("num", r"\d+\.\d+|\d+"),
+        ("str", r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\""),
+        # Math.* is one name, so a Math function is an ordinary call
+        ("name", r"Math\.[A-Za-z_$][A-Za-z0-9_$]*|[A-Za-z_$][A-Za-z0-9_$]*"),
+        ("op", r"===|!==|==|!=|<=|>=|&&|\|\||[-+*/%<>!?:().,;=]"),
+    ],
+    skip=r"(?:\s+|//[^\n]*|/\*[\s\S]*?\*/)*",
+    levels=[
+        ({"||": _bool(operator.or_)}, False),
+        ({"&&": _bool(operator.and_)}, False),
+        ({"==": _bool(operator.eq), "===": _bool(operator.eq),
+          "!=": _bool(operator.ne), "!==": _bool(operator.ne)}, False),
+        ({"<": _bool(operator.lt), "<=": _bool(operator.le),
+          ">": _bool(operator.gt), ">=": _bool(operator.ge)}, False),
+        ({"+": _plus, "-": binop(operator.sub, "num")}, False),
+        ({"*": binop(operator.mul, "num"), "/": binop(operator.truediv, "num"),
+          "%": binop(operator.mod, "num")}, False),
+    ],
+    unary={"-": lambda e: TV(-e.col, "num"), "!": lambda e: TV(~e.col, "bool")},
+    postfix=_postfix,
+    ternary=True,
+    atoms={"str": lambda v: TV(F.lit(_ESCAPE_RE.sub(_unescape, v[1:-1])), "str")},
+    functions=_FUNCTIONS,
+)
 
-    _MATH = {
-        "abs": F.abs, "round": F.round, "floor": F.floor, "ceil": F.ceil,
-        "sqrt": F.sqrt,
-        "min": lambda *a: F.least(*a), "max": lambda *a: F.greatest(*a),
-        "pow": lambda a, b: F.pow(a, b),
-    }
 
-    def primary(self) -> _TV:
-        kind, val = self.take()
-        if kind == "num":
-            return _TV(F.lit(float(val) if "." in val else int(val)), "num")
-        if kind == "str":
-            body = val[1:-1]
-            body = re.sub(r"\\(.)", r"\1", body)
-            return _TV(F.lit(body), "str")
-        if kind == "op" and val == "(":
-            e = self.ternary()
-            self.take(")")
-            return e
-        if kind == "name":
-            if val == "Math":
-                self.take(".")
-                _, fname = self.take()
-                if fname not in self._MATH:
-                    raise NotImplementedError(
-                        f"js expression: unsupported Math.{fname}"
-                    )
-                return _TV(
-                    self._MATH[fname](*(a.col for a in self.arglist())), "num"
-                )
-            if val in ("parseInt", "str2num"):
-                (a,) = self.arglist()
-                return _TV(
-                    a.col.cast("double").cast("long")
-                    if val == "parseInt"
-                    else a.col.cast("double"),
-                    "num",
-                )
-            if val in ("parseFloat",):
-                (a,) = self.arglist()
-                return _TV(a.col.cast("double"), "num")
-            if val == "num2str":
-                (a,) = self.arglist()
-                return _TV(a.col.cast("string"), "str")
-            if val == "true":
-                return _TV(F.lit(True), "bool")
-            if val == "false":
-                return _TV(F.lit(False), "bool")
-            if val == "null":
-                return _TV(F.lit(None), None)
-            if val in self.env:
-                return self.env[val]
-            return _TV(F.col(val), self.coltypes.get(val))
-        raise NotImplementedError(f"js expression: unexpected token {val!r}")
+def _parser(src: str, env: dict[str, TV], coltypes: dict[str, str | None]) -> Parser:
+    def name(val: str) -> TV:
+        if val in ("true", "false"):
+            return TV(F.lit(val == "true"), "bool")
+        if val == "null":
+            return TV(F.lit(None))
+        if val in env:
+            return env[val]
+        if val.startswith("Math."):
+            raise NotImplementedError(f"js expression: unsupported {val}")
+        return TV(F.col(val), coltypes.get(val))
+
+    return Parser(_JS, src, name)
 
 
 def compile_expr(
@@ -351,34 +193,33 @@ def compile_expr(
     (earlier `var x = ...` lines) to their compiled expressions; `schema`
     (StructType or name→DataType mapping) types the input columns so string
     `+` resolves to concatenation."""
-    tenv = {
-        k: (v if isinstance(v, _TV) else _TV(v)) for k, v in (env or {}).items()
-    }
-    return _Parser(_tokenize(src), tenv, _schema_types(schema)).parse().col
-
-
-_VAR_RE = re.compile(r"^\s*var\s+([A-Za-z_$][A-Za-z0-9_$]*)\s*=\s*(.+?);?\s*$")
+    tenv = {k: (v if isinstance(v, TV) else TV(v)) for k, v in (env or {}).items()}
+    return _parser(src, tenv, _schema_types(schema)).parse().col
 
 
 def compile_script(script: str, schema=None) -> dict[str, Column]:
-    """A transform script (sequence of `var NAME = EXPR;` lines, // comments
-    and blank lines allowed) → {var name: Column}. Later vars may reference
-    earlier ones; the expressions inline (no intermediate columns).
-    `schema` is the input DataFrame's schema (or a name→DataType mapping) —
-    it drives JS `+` string-concat resolution."""
-    coltypes = _schema_types(schema)
-    env: dict[str, _TV] = {}
-    for raw in script.splitlines():
-        line = raw.split("//", 1)[0].strip()
-        if not line:
+    """A transform script (a sequence of `var NAME = EXPR;` statements;
+    comments, blank lines and several statements on one line allowed) →
+    {var name: Column}. Later vars may reference earlier ones; the
+    expressions inline (no intermediate columns). `schema` is the input
+    DataFrame's schema (or a name→DataType mapping) — it drives JS `+`
+    string-concat resolution."""
+    env: dict[str, TV] = {}
+    p = _parser(script, env, _schema_types(schema))
+    while p.toks[p.i][0] != "eof":
+        if p.toks[p.i][:2] == ("op", ";"):
+            p.i += 1
             continue
-        m = _VAR_RE.match(line)
-        if m is None:
+        head = [t[:2] for t in p.toks[p.i:p.i + 3]]
+        if len(head) < 3 or (head[0], head[1][0], head[2]) != (
+            ("name", "var"), "name", ("op", "=")
+        ):
+            stmt = script[p.toks[p.i][2]:].split("\n", 1)[0]
             raise NotImplementedError(
                 f"ScriptValuesMod: only `var NAME = EXPR;` statements are "
-                f"compilable to a Catalyst plan (got {line[:60]!r}); port this "
+                f"compilable to a Catalyst plan (got {stmt[:60]!r}); port this "
                 "script to operators/scripting.py script_values (mapInPandas)"
             )
-        name, expr = m.groups()
-        env[name] = _Parser(_tokenize(expr), env, coltypes).parse()
+        p.i += 3
+        env[head[1][1]] = p.expr()
     return {k: v.col for k, v in env.items()}

@@ -5,9 +5,9 @@ reference embeds Pentaho's libformula, an OpenFormula/ODF-formula
 implementation). A real .ktr Formula step carries `[fieldname]` bracket
 references, `&` string concatenation, and spreadsheet-style functions
 (`IF(...)`, `LEFT/MID/RIGHT`, `UPPER`, ...), none of which Spark SQL's
-parser accepts — this module compiles the practical subset straight to
-native Catalyst expressions (JVM codegen; the reference evaluates
-libformula's AST per row).
+parser accepts — this module declares the practical subset as a dialect of
+plans/exprcore.py, which compiles it straight to native Catalyst
+expressions (JVM codegen; the reference evaluates libformula's AST per row).
 
 Grammar (precedence low → high, per ODF OpenFormula §5):
   comparison   = <> < <= > >=
@@ -15,18 +15,20 @@ Grammar (precedence low → high, per ODF OpenFormula §5):
   additive     + -
   multiplicative * /
   power        ^          (right-associative)
-  postfix      %          (percent: value / 100)
   unary        - +
+  postfix      %          (percent: value / 100)
   primary      number, "string" ("" escapes a quote), [field ref],
                bare identifier (extension: unbracketed field ref),
                TRUE() FALSE() TRUE FALSE, function call, ( ... )
 
-Function arguments separate with `;` (OpenFormula) or `,` (libformula
-accepts both). Unsupported constructs raise NotImplementedError naming the
-construct, so the user knows the step needs porting.
+Function names are case-insensitive; arguments separate with `;`
+(OpenFormula) or `,` (libformula accepts both). Unsupported constructs
+raise NotImplementedError naming the construct, so the user knows the step
+needs porting.
 
 Citation for semantics: OASIS OpenFormula spec (ODF 1.2 part 2) text
 functions are 1-based (MID("abc";2;1) = "b"); IF takes (cond; then; else);
+MOD(a; b) = a − b·INT(a/b) takes the sign of the divisor (MOD(-7; 2) = 1);
 comparison of mixed types follows the column types (Spark casts), which
 matches libformula's coerced comparisons for the numeric/string cases the
 tests pin.
@@ -34,75 +36,36 @@ tests pin.
 
 from __future__ import annotations
 
-import re
+import operator
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_TOKEN_RE = re.compile(
-    r"\s*(?:"
-    r"(?P<num>\d+\.\d+|\d+)"
-    r'|(?P<str>"(?:[^"]|"")*")'
-    r"|(?P<ref>\[[^\]]+\])"
-    r"|(?P<name>[A-Za-z_][A-Za-z0-9_.]*)"
-    r"|(?P<op><>|<=|>=|[-+*/^%<>=&();,])"
-    r")"
-)
+from pentaho_kettle_spark.plans.exprcore import MANY, TV, Dialect, Parser, binop, concat, nary
 
 
-def _tokenize(src: str) -> list[tuple[str, str]]:
-    out, pos = [], 0
-    while pos < len(src):
-        m = _TOKEN_RE.match(src, pos)
-        if m is None or m.end() == pos:
-            rest = src[pos:].strip()
-            if not rest:
-                break
-            raise NotImplementedError(
-                f"OpenFormula: cannot tokenize {rest[:30]!r}"
-            )
-        pos = m.end()
-        for kind in ("num", "str", "ref", "name", "op"):
-            v = m.group(kind)
-            if v is not None:
-                out.append((kind, v))
-                break
-    out.append(("eof", ""))
-    return out
+def _fn_if(a: list[Column]) -> Column:
+    return F.when(a[0], a[1]) if len(a) == 2 else F.when(a[0], a[1]).otherwise(a[2])
 
 
-def _fn_if(args: list[Column]) -> Column:
-    if len(args) == 2:
-        return F.when(args[0], args[1])
-    if len(args) == 3:
-        return F.when(args[0], args[1]).otherwise(args[2])
-    raise NotImplementedError("OpenFormula: IF takes 2 or 3 arguments")
+def _fn_left(a: list[Column]) -> Column:
+    return F.substring(a[0], 1, a[1] if len(a) == 2 else F.lit(1))
 
 
-def _fn_left(args: list[Column]) -> Column:
-    n = args[1] if len(args) == 2 else F.lit(1)
-    return F.substring(args[0], 1, n)
-
-
-def _fn_right(args: list[Column]) -> Column:
-    n = args[1] if len(args) == 2 else F.lit(1)
+def _fn_right(a: list[Column]) -> Column:
+    n = a[1] if len(a) == 2 else F.lit(1)
     # RIGHT("ab"; 5) is the whole string: negative-start substring would
     # miss characters when n > length, so clamp via greatest
-    start = F.greatest(F.length(args[0]) - n + 1, F.lit(1))
-    return F.substring(args[0], start, F.greatest(n, F.lit(0)))
+    start = F.greatest(F.length(a[0]) - n + 1, F.lit(1))
+    return F.substring(a[0], start, F.greatest(n, F.lit(0)))
 
 
-def _fn_mid(args: list[Column]) -> Column:
-    if len(args) != 3:
-        raise NotImplementedError("OpenFormula: MID takes 3 arguments")
-    return F.substring(args[0], args[1], args[2])  # both already 1-based
-
-
-_FUNCTIONS: dict[str, tuple[tuple[int, int], object]] = {
+_FUNCTIONS: dict[str, tuple[tuple[int, float], object]] = {
     # name -> ((min_arity, max_arity), builder over Column args)
     "IF": ((2, 3), _fn_if),
-    "AND": ((1, 99), lambda a: _fold(a, lambda x, y: x & y)),
-    "OR": ((1, 99), lambda a: _fold(a, lambda x, y: x | y)),
+    "AND": ((1, MANY), lambda a: reduce(operator.and_, a)),
+    "OR": ((1, MANY), lambda a: reduce(operator.or_, a)),
     "NOT": ((1, 1), lambda a: ~a[0]),
     "XOR": ((2, 2), lambda a: a[0] != a[1]),
     "TRUE": ((0, 0), lambda a: F.lit(True)),
@@ -111,20 +74,23 @@ _FUNCTIONS: dict[str, tuple[tuple[int, int], object]] = {
     "LEN": ((1, 1), lambda a: F.length(a[0])),
     "LEFT": ((1, 2), _fn_left),
     "RIGHT": ((1, 2), _fn_right),
-    "MID": ((3, 3), _fn_mid),
+    "MID": ((3, 3), lambda a: F.substring(*a)),  # both already 1-based
     "UPPER": ((1, 1), lambda a: F.upper(a[0])),
     "LOWER": ((1, 1), lambda a: F.lower(a[0])),
     "TRIM": ((1, 1), lambda a: F.trim(a[0])),
-    "CONCATENATE": ((1, 99), lambda a: F.concat(*(x.cast("string") for x in a))),
+    "CONCATENATE": ((1, MANY), lambda a: F.concat(*(x.cast("string") for x in a))),
     "SUBSTITUTE": ((3, 3), lambda a: F.replace(a[0], a[1], a[2])),
     "FIND": ((2, 2), lambda a: F.instr(a[1], a[0])),
     "REPT": ((2, 2), lambda a: F.repeat(a[0], a[1])),
     "ABS": ((1, 1), lambda a: F.abs(a[0])),
-    "ROUND": ((1, 2), lambda a: F.round(a[0], a[1]) if len(a) == 2 else F.round(a[0])),
+    "ROUND": ((1, 2), lambda a: F.round(*a)),
     "INT": ((1, 1), lambda a: F.floor(a[0])),
-    "MOD": ((2, 2), lambda a: a[0] % a[1]),
-    "MIN": ((1, 99), lambda a: F.least(*a)),
-    "MAX": ((1, 99), lambda a: F.greatest(*a)),
+    # Spark's % takes the dividend's sign; adding the divisor and taking %
+    # again moves the remainder to the divisor's sign, exactly (no double
+    # division), and a zero divisor still raises under ANSI mode
+    "MOD": ((2, 2), lambda a: (a[0] % a[1] + a[1]) % a[1]),
+    "MIN": ((1, MANY), nary(F.least)),
+    "MAX": ((1, MANY), nary(F.greatest)),
     "POWER": ((2, 2), lambda a: F.pow(a[0], a[1])),
     "SQRT": ((1, 1), lambda a: F.sqrt(a[0])),
     "EXP": ((1, 1), lambda a: F.exp(a[0])),
@@ -152,145 +118,44 @@ _FUNCTIONS: dict[str, tuple[tuple[int, int], object]] = {
     "EOMONTH": ((2, 2), lambda a: F.last_day(F.add_months(a[0], a[1]))),
 }
 
+_CMP = {"=": operator.eq, "<>": operator.ne, "<": operator.lt,
+        "<=": operator.le, ">": operator.gt, ">=": operator.ge}
 
-def _fold(args: list[Column], op) -> Column:
-    e = args[0]
-    for a in args[1:]:
-        e = op(e, a)
-    return e
+_OPENFORMULA = Dialect(
+    name="OpenFormula",
+    tokens=[
+        ("num", r"\d+\.\d+|\d+"),
+        ("str", r'"(?:[^"]|"")*"'),
+        ("ref", r"\[[^\]]+\]"),
+        ("name", r"[A-Za-z_][A-Za-z0-9_.]*"),
+        ("op", r"<>|<=|>=|[-+*/^%<>=&();,]"),
+    ],
+    levels=[
+        ({op: binop(fn) for op, fn in _CMP.items()}, False),
+        ({"&": binop(concat)}, False),
+        ({"+": binop(operator.add), "-": binop(operator.sub)}, False),
+        ({"*": binop(operator.mul), "/": binop(operator.truediv)}, False),
+        ({"^": binop(F.pow)}, True),
+    ],
+    unary={"-": lambda e: TV(-e.col), "+": lambda e: e},
+    postfix=lambda p, e: TV(e.col / F.lit(100)) if p.accept("%") else None,
+    atoms={
+        "str": lambda v: TV(F.lit(v[1:-1].replace('""', '"'))),
+        "ref": lambda v: TV(F.col(v[1:-1].strip())),
+    },
+    functions=_FUNCTIONS,
+    seps=(";", ","),
+    fold=True,
+)
 
 
-class _Parser:
-    def __init__(self, tokens: list[tuple[str, str]]):
-        self.toks = tokens
-        self.i = 0
-
-    def peek(self) -> tuple[str, str]:
-        return self.toks[self.i]
-
-    def take(self, op: str | None = None) -> tuple[str, str]:
-        kind, val = self.toks[self.i]
-        if op is not None and (kind != "op" or val != op):
-            raise NotImplementedError(
-                f"OpenFormula: expected {op!r}, got {val!r}"
-            )
-        self.i += 1
-        return kind, val
-
-    def parse(self) -> Column:
-        e = self.comparison()
-        if self.peek()[0] != "eof":
-            raise NotImplementedError(
-                f"OpenFormula: trailing tokens at {self.peek()[1]!r}"
-            )
-        return e
-
-    def comparison(self) -> Column:
-        e = self.concat()
-        while self.peek()[0] == "op" and self.peek()[1] in (
-            "=", "<>", "<", "<=", ">", ">=",
-        ):
-            _, op = self.take()
-            r = self.concat()
-            e = {
-                "=": e == r, "<>": e != r,
-                "<": e < r, "<=": e <= r, ">": e > r, ">=": e >= r,
-            }[op]
-        return e
-
-    def concat(self) -> Column:
-        e = self.additive()
-        while self.peek() == ("op", "&"):
-            self.take("&")
-            r = self.additive()
-            e = F.concat(e.cast("string"), r.cast("string"))
-        return e
-
-    def additive(self) -> Column:
-        e = self.multiplicative()
-        while self.peek()[0] == "op" and self.peek()[1] in ("+", "-"):
-            _, op = self.take()
-            r = self.multiplicative()
-            e = e + r if op == "+" else e - r
-        return e
-
-    def multiplicative(self) -> Column:
-        e = self.power()
-        while self.peek()[0] == "op" and self.peek()[1] in ("*", "/"):
-            _, op = self.take()
-            r = self.power()
-            e = e * r if op == "*" else e / r
-        return e
-
-    def power(self) -> Column:
-        e = self.unary()
-        if self.peek() == ("op", "^"):
-            self.take("^")
-            return F.pow(e, self.power())  # right-associative
-        return e
-
-    def unary(self) -> Column:
-        if self.peek() == ("op", "-"):
-            self.take("-")
-            return -self.unary()
-        if self.peek() == ("op", "+"):
-            self.take("+")
-            return self.unary()
-        return self.postfix()
-
-    def postfix(self) -> Column:
-        e = self.primary()
-        while self.peek() == ("op", "%"):
-            self.take("%")
-            e = e / F.lit(100)
-        return e
-
-    def arglist(self) -> list[Column]:
-        self.take("(")
-        args: list[Column] = []
-        if self.peek() != ("op", ")"):
-            args.append(self.comparison())
-            while self.peek()[0] == "op" and self.peek()[1] in (";", ","):
-                self.take()
-                args.append(self.comparison())
-        self.take(")")
-        return args
-
-    def primary(self) -> Column:
-        kind, val = self.take()
-        if kind == "num":
-            return F.lit(float(val) if "." in val else int(val))
-        if kind == "str":
-            return F.lit(val[1:-1].replace('""', '"'))
-        if kind == "ref":
-            return F.col(val[1:-1].strip())
-        if kind == "op" and val == "(":
-            e = self.comparison()
-            self.take(")")
-            return e
-        if kind == "name":
-            up = val.upper()
-            if self.peek() == ("op", "("):
-                if up not in _FUNCTIONS:
-                    raise NotImplementedError(
-                        f"OpenFormula: unsupported function {val}()"
-                    )
-                (lo, hi), fn = _FUNCTIONS[up]
-                args = self.arglist()
-                if not lo <= len(args) <= hi:
-                    raise NotImplementedError(
-                        f"OpenFormula: {up} arity {len(args)} (want {lo}..{hi})"
-                    )
-                return fn(args)
-            if up == "TRUE":
-                return F.lit(True)
-            if up == "FALSE":
-                return F.lit(False)
-            # extension beyond strict OpenFormula: a bare identifier is a
-            # field reference (keeps pre-existing Spark-SQL-style formula
-            # strings like `l_quantity * l_extendedprice` compiling)
-            return F.col(val)
-        raise NotImplementedError(f"OpenFormula: unexpected token {val!r}")
+def _name(val: str) -> TV:
+    # TRUE/FALSE without parentheses are constants; any other bare
+    # identifier is a field reference — an extension beyond strict
+    # OpenFormula that keeps Spark-SQL-style formula strings like
+    # `l_quantity * l_extendedprice` compiling
+    up = val.upper()
+    return TV(F.lit(up == "TRUE")) if up in ("TRUE", "FALSE") else TV(F.col(val))
 
 
 def compile_formula(src: str) -> Column:
@@ -299,4 +164,4 @@ def compile_formula(src: str) -> Column:
     src = src.strip()
     if src.startswith("="):  # libformula accepts a leading '='
         src = src[1:]
-    return _Parser(_tokenize(src)).parse()
+    return Parser(_OPENFORMULA, src, _name).parse().col

@@ -1,6 +1,6 @@
 """Generator sources (SURVEY §2.1): datagrid/DataGrid.java,
 rowgenerator/RowGenerator.java, systemdata/SystemData.java,
-randomvalue/RandomValue.java, getfilenames/ & getsubfolders/.
+randomvalue/RandomValue.java, getfilenames/, getfilesrowscount/.
 """
 
 from __future__ import annotations
@@ -98,15 +98,6 @@ def get_filenames(
             rows.append((full, fn, dirpath, int(st.st_size)))
     schema = "filename string, short_filename string, path string, size long"
     return spark.createDataFrame(rows, schema)
-
-
-def get_subfolders(spark: SparkSession, directory: str) -> DataFrame:
-    rows = [
-        (os.path.join(directory, d), d)
-        for d in sorted(os.listdir(directory))
-        if os.path.isdir(os.path.join(directory, d))
-    ]
-    return spark.createDataFrame(rows, "folder string, short_name string")
 
 
 def get_files_rows_count(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:

@@ -1,12 +1,11 @@
-"""Real-Iceberg table IO — the production path, gated on the runtime jar.
+"""SQL for a real Iceberg table: the statements that would apply the
+engine's table contract through Iceberg's own MERGE and DDL.
 
-The sandbox has no Iceberg jar and no network (SURVEY §7), so this module is
-exercised only for its SQL generation (unit-testable string building); on a
-real cluster it is the drop-in replacement for ParquetSnapshotTableIO:
-the same collapsed-changes contract (one row per key, `op` ∈ {U, D},
-`_seq`), applied with one atomic `MERGE INTO`.
-
-Enable with a session built like:
+No Iceberg runtime jar ships with the engine (SURVEY §7), so these are
+pure string builders, pinned by tests/test_iceberg_sql.py. They state the
+same collapsed-changes contract ParquetSnapshotTableIO implements (one row
+per key, `op` ∈ {U, D}, `_seq`), applied with one atomic `MERGE INTO`, and
+run on a session built with Iceberg's extensions and catalog, e.g.
     SparkSession.builder
       .config("spark.sql.extensions",
               "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions")
@@ -16,17 +15,6 @@ Enable with a session built like:
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")  # noqa: SLF001
-        return True
-    except Exception:  # noqa: BLE001
-        return False
 
 
 def merge_sql(
@@ -76,48 +64,3 @@ def evolve_sql(table: str, action: dict) -> str:
     if kind == "widen":
         return f"ALTER TABLE {table} ALTER COLUMN {action['name']} TYPE {action['type']}"
     raise ValueError(f"unknown schema action {kind!r}")
-
-
-class IcebergTableIO:
-    """merge_apply-compatible facade over a real Iceberg table."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table: str,
-        key_cols: tuple[str, str] = ("conv_id", "turn_idx"),
-        lww_col: str = "ts",
-    ):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                "Iceberg runtime not on the classpath; use ParquetSnapshotTableIO"
-            )
-        self.spark = spark
-        self.table = table
-        self.key_cols = list(key_cols)
-        self.lww_col = lww_col
-
-    def create(self, data_cols_ddl: str, n_buckets: int = 64) -> None:
-        self.spark.sql(
-            create_table_sql(self.table, data_cols_ddl, self.key_cols[0], n_buckets)
-        )
-
-    def merge_apply(self, changes: DataFrame, batch_id: str | None = None) -> dict:
-        import hashlib
-
-        data_cols = [c for c in changes.columns if c not in (*self.key_cols, "op", "_seq")]
-        # md5, not hash(): str hash is salted per process (PYTHONHASHSEED),
-        # md5 keeps the temp view name stable across driver restarts
-        digest = hashlib.md5(str(batch_id).encode()).hexdigest()[:8]
-        view = f"_pks_changes_{digest}"
-        changes.createOrReplaceTempView(view)
-        self.spark.sql(merge_sql(self.table, view, self.key_cols, data_cols, self.lww_col))
-        self.spark.catalog.dropTempView(view)
-        return {"batch_id": batch_id, "table": self.table}
-
-    def read(self) -> DataFrame:
-        return self.spark.table(self.table).drop("_seq")
-
-    def evolve_schema(self, actions: list[dict]) -> None:
-        for a in actions:
-            self.spark.sql(evolve_sql(self.table, a))

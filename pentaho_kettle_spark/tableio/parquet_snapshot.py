@@ -29,8 +29,8 @@ Iceberg does them, over parquet files + JSON manifests:
 Reference parity: this replaces Kettle's row-at-a-time JDBC upsert trio —
 insertupdate/InsertUpdate.java, update/Update.java, delete/Delete.java and
 synchronizeaftermerge/SynchronizeAfterMerge.java (SURVEY §2.1) — with one
-set-oriented MERGE. The real-Iceberg path (tableio/iceberg.py) issues
-`MERGE INTO` SQL with the same collapse stage when the runtime jar is present.
+set-oriented MERGE. tableio/iceberg.py only builds the equivalent Iceberg
+`MERGE INTO` and DDL text; no table IO in the package runs it.
 """
 
 from __future__ import annotations

@@ -92,6 +92,40 @@ def test_unsupported_constructs_raise():
         compile_expr("Math.random()")
 
 
+def test_math_round_half_toward_positive_infinity(spark):
+    """JS Math.round rounds .5 up (toward +inf), unlike Spark's round."""
+    df = spark.createDataFrame(
+        [(i, x) for i, x in enumerate([-2.5, 2.5, -0.4, 0.49999999999999994, None])],
+        "i int, x double",
+    )
+    got = [r.r for r in df.orderBy("i").select(compile_expr("Math.round(x)").alias("r")).collect()]
+    assert got == [-2, 3, 0, 0, None]
+
+
+def test_string_literal_escapes(spark):
+    row = {"a": 1}
+    assert _eval(spark, r"'a\tb'", row) == "a\tb"
+    assert _eval(spark, r"'a\nb\rc'", row) == "a\nb\rc"
+    assert _eval(spark, r"'\b\f\v\0'", row) == "\b\f\v\0"
+    assert _eval(spark, r"'it\'s \"q\" \\ end'", row) == 'it\'s "q" \\ end'
+    assert _eval(spark, r'"\x41\u00e9"', row) == "A\u00e9"
+    assert _eval(spark, r"'\q\%'", row) == "q%"  # any other escape: the char itself
+
+
+def test_script_statements_share_the_expression_tokenizer(spark):
+    df = spark.createDataFrame([{"price": 10.0}])
+    env = compile_script("var u = 'http://x'; // a URL, then a comment")
+    assert df.select(env["u"].alias("u")).first().u == "http://x"
+    env = compile_script("var a = 1; var b = a + 1; /* two statements, one line */")
+    assert df.select(env["b"].alias("b")).first().b == 2
+    env = compile_script("var p = price /* inline */ * 2\nvar q = p + 1")
+    assert df.select(env["q"].alias("q")).first().q == 21.0
+    with pytest.raises(NotImplementedError, match="only `var NAME = EXPR;`"):
+        compile_script("var a = 1; a = a + 1;")
+    with pytest.raises(NotImplementedError, match="only `var NAME = EXPR;`"):
+        compile_script("if (price > 1) { var a = 1; }")
+
+
 def test_ktr_script_values_mod_step(spark):
     from pentaho_kettle_spark.plans.ktr import run_ktr
 

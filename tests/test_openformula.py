@@ -66,10 +66,22 @@ def test_numeric_functions(spark):
     assert _eval(spark, "ROUND([x]; 0)", row) == -4.0
     assert _eval(spark, "INT([x])", row) == -4
     assert _eval(spark, "MOD(7; [y])", row) == 1.0
+    # ODF MOD(a; b) = a - b*INT(a/b): the result takes the divisor's sign
+    assert _eval(spark, "MOD(-7; 2)", row) == 1
+    assert _eval(spark, "MOD(7; -2)", row) == -1
     assert _eval(spark, "MIN(1; [y]; 3)", row) == 1.0
     assert _eval(spark, "MAX(1; [y]; 3)", row) == 3.0
     assert _eval(spark, "POWER([y]; 10)", row) == 1024.0
     assert _eval(spark, "SQRT(16)", row) == 4.0
+
+
+def test_mod_by_zero_raises_and_single_argument_min_max(spark):
+    row = {"x": 7, "z": 0}
+    # ANSI mode (Spark's default): a zero divisor is an error, not NULL
+    with pytest.raises(Exception, match="BY_ZERO"):
+        _eval(spark, "MOD([x]; [z])", row)
+    assert _eval(spark, "MIN([x])", row) == 7
+    assert _eval(spark, "MAX([x])", row) == 7
 
 
 def test_bracket_refs_with_spaces(spark):

@@ -3,7 +3,9 @@ a `_scratch` directory: CDC replays, streaming ingest, file round trips)
 against their DuckDB oracle at sf0.01, compared the way
 tools/check_oracle.py compares them. Also: `_scratch` removes its directory
 whether its body returns or raises, and every row removes the scratch
-directory it made."""
+directory it made. The expression-step rows (Formula, ScriptValuesMod and
+the scripting chain, compiled by plans/exprcore.py) make no scratch
+directory and get their own list and oracle test."""
 
 from __future__ import annotations
 
@@ -29,6 +31,8 @@ TABLE_ROWS = [
     "streaming_stateful_dedup", "text_file_lines",
 ]
 
+EXPRESSION_ROWS = ["formula_step", "ktr_js_script", "scripting_chain"]
+
 
 @pytest.fixture(scope="module")
 def duck():
@@ -52,6 +56,13 @@ def test_table_backed_row_matches_oracle(spark, duck, name, monkeypatch):
     monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
     got = entry.queries()[name](spark, SF01_DIR).toPandas()
     assert made and not any(os.path.exists(d) for d in made), made
+    want = duck.sql(entry.oracle_sql()[name]).df()
+    assert compare(got, want) == []
+
+
+@pytest.mark.parametrize("name", EXPRESSION_ROWS)
+def test_expression_step_row_matches_oracle(spark, duck, name):
+    got = entry.queries()[name](spark, SF01_DIR).toPandas()
     want = duck.sql(entry.oracle_sql()[name]).df()
     assert compare(got, want) == []
 
