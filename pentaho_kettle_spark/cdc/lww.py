@@ -112,7 +112,6 @@ def lww_collapse(
     seq_col: str = "seq",
     *,
     n_buckets: int | None = None,
-    bucket_key: str | None = None,
     n_salts: int = 0,
     hot_keys: DataFrame | list | None = None,
 ) -> DataFrame:
@@ -126,9 +125,10 @@ def lww_collapse(
 
     Bucket-fused shape: the naive pipeline shuffles twice per batch, once for
     the key-collapse aggregate and once to lay the collapsed rows out by
-    storage bucket. Because bucket = hash(bucket_key) is a pure function of
-    the key, repartitioning the RAW events by `_bucket` and aggregating by
-    (_bucket, *key) satisfies Catalyst's clustering requirement
+    storage bucket. Because bucket = hash(key_cols[0]) (the table's bucket
+    column) is a pure function of the key, repartitioning the RAW events by
+    `_bucket` and aggregating by (_bucket, *key) satisfies Catalyst's
+    clustering requirement
     (HashPartitioning([_bucket]) ⊆ ClusteredDistribution([_bucket, key...]))
     — no second Exchange, and the output is write-ready. Measured on the
     16M-event bench: ~20% faster end-to-end at both 2 and 8 cores than
@@ -168,7 +168,7 @@ def lww_collapse(
     else:
         lead = ["_bucket", *key_cols]
         staged = events.withColumn(
-            "_bucket", bucket_expr(bucket_key or key_cols[0], n_buckets)
+            "_bucket", bucket_expr(key_cols[0], n_buckets)
         )
         if salt is not None:
             phase1 = _winner(

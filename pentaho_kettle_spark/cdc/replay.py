@@ -228,7 +228,6 @@ def apply_batch(
     collapsed = lww_collapse(
         batch, key_cols=table.key_cols, lww_col=table.lww_col,
         n_buckets=table.n_buckets if fused else None,
-        bucket_key=table.key_cols[0],
         n_salts=n_salts if salted else 0, hot_keys=hot_keys,
     )
     # the collapse above already resolved per-key winners — skip

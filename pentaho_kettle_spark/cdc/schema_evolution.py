@@ -21,6 +21,7 @@ from pentaho_kettle_spark.tableio.parquet_snapshot import (
     ParquetSnapshotTableIO,
     TableSchema,
     _WIDEN_OK,
+    _conform_cols,
 )
 
 # columns of the changelog envelope, never part of the table schema
@@ -58,8 +59,10 @@ def evolve_and_conform(
     rename_hints: dict[str, str] | None = None,
 ) -> DataFrame:
     """Evolve the table to accept `batch`, then project the batch onto the
-    (possibly new) table schema: rename per hints, null-fill missing columns,
-    cast to the table's (possibly widened) types."""
+    (possibly new) table schema: rename per hints, cast to the table's
+    (possibly widened) types and null-fill missing columns — the same
+    projection merge_apply makes (`_conform_cols`), so a batch missing a
+    key or the LWW column raises by name here on every apply path."""
     schema = table.schema()
     actions = plan_evolution(schema, batch, rename_hints)
     if actions:
@@ -67,13 +70,5 @@ def evolve_and_conform(
     for old, new in (rename_hints or {}).items():
         if old in batch.columns and new not in batch.columns:
             batch = batch.withColumnRenamed(old, new)
-    cols = []
-    for f in schema.fields:
-        if f["name"] in batch.columns:
-            cols.append(F.col(f["name"]).cast(f["type"]).alias(f["name"]))
-        else:
-            cols.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-    for env in ("seq", "op"):
-        if env in batch.columns:
-            cols.append(F.col(env))
-    return batch.select(*cols)
+    cols = _conform_cols(batch.columns, schema.fields, table.key_cols, table.lww_col)
+    return batch.select(*cols, *[F.col(env) for env in ("seq", "op") if env in batch.columns])

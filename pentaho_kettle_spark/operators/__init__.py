@@ -38,6 +38,7 @@ from pentaho_kettle_spark.operators.joins import (  # noqa: F401
     stream_lookup,
 )
 from pentaho_kettle_spark.operators.merge_rows import (  # noqa: F401
+    diff_rows,
     diff_to_changelog,
     merge_rows_diff,
     table_compare,

@@ -32,31 +32,29 @@ def scd2_apply(
     version 1. Pure DataFrame algebra (one join + windows), replacing
     DimensionLookup.java's per-row lookup/insert/update round-trips.
 
-    `dim=None` bootstraps the dimension from `updates`. Technical keys are
-    `xxhash64(natural_keys, date_from)` — stable, distributed, no sequence
-    bottleneck (the reference serialized on a DB sequence).
+    A version opens where the tracked columns, taken as one struct, differ
+    null-safely (as in merge_rows.diff_rows) from the key's previous update
+    and from its current dimension row, so a NULL moving between columns is
+    a change. `dim=None` bootstraps the dimension from `updates`. Technical
+    keys are `xxhash64(natural_keys, date_from)` — stable, distributed, no
+    sequence bottleneck (the reference serialized on a DB sequence).
     """
-    changes = updates.select(*natural_keys, *tracked_cols, F.col(ts_col))
+    tracked = F.struct(*tracked_cols)
+    changes = updates.select(*natural_keys, *tracked_cols, F.col(ts_col), tracked.alias("_t"))
     # collapse multiple updates per key: keep version-change points only
     w = Window.partitionBy(*natural_keys).orderBy(ts_col)
-    hash_now = F.xxhash64(*[F.col(c) for c in tracked_cols])
     changes = (
-        changes.withColumn("_h", hash_now)
-        .withColumn("_prev_h", F.lag("_h").over(w))
-        .filter(F.col("_prev_h").isNull() | (F.col("_h") != F.col("_prev_h")))
-        .drop("_prev_h")
+        changes.withColumn("_prev_t", F.lag("_t").over(w))
+        .filter(~F.col("_t").eqNullSafe(F.col("_prev_t")))
+        .drop("_prev_t")
     )
 
     if dim is not None:
         cur = dim.filter(F.col(date_to) == F.lit(FAR_FUTURE).cast("timestamp"))
-        cur_h = cur.select(
-            *natural_keys,
-            F.xxhash64(*[F.col(c) for c in tracked_cols]).alias("_cur_h"),
-        )
         changes = (
-            changes.join(cur_h, on=natural_keys, how="left")
-            .filter(F.col("_cur_h").isNull() | (F.col("_h") != F.col("_cur_h")))
-            .drop("_cur_h")
+            changes.join(cur.select(*natural_keys, tracked.alias("_cur_t")), natural_keys, "left")
+            .filter(~F.col("_t").eqNullSafe(F.col("_cur_t")))
+            .drop("_cur_t")
         )
         base_version = dim.groupBy(*natural_keys).agg(F.max(version_col).alias("_base_v"))
     else:
@@ -81,7 +79,7 @@ def scd2_apply(
         new_rows = new_rows.withColumn(version_col, F.col("_vn"))
     new_rows = new_rows.withColumn(
         tech_key, F.xxhash64(*[F.col(c) for c in natural_keys], F.col(date_from))
-    ).drop("_vn", "_h", ts_col)
+    ).drop("_vn", "_t", ts_col)
 
     out_cols = [tech_key, *natural_keys, *tracked_cols, version_col, date_from, date_to]
     new_rows = new_rows.select(*out_cols)

@@ -4,10 +4,11 @@ Reference: mergerows/MergeRows.java (SURVEY §2.3): compare a *reference*
 stream against a *compare* stream on keys, emit every row flagged
 {identical, changed, new, deleted}. This is the change-DETECTION half of
 Kettle's CDC story (Synchronize After Merge applies the flags — our
-tableio.merge_apply). The sorted-input requirement is gone: a full outer
-join + row-hash comparison gives the same flags in one shuffle, and the
-hash comparison (xxhash64 over value columns) avoids materializing both
-row payloads through the comparator.
+tableio.merge_apply). The sorted-input requirement is gone: `diff_rows`
+gives the same flags from one full outer join, comparing each side's
+value columns as one struct with null-safe equality (`<=>`), so a NULL
+moving between columns is a change. The table's changes feed
+(ParquetSnapshotTableIO.read_changes) runs the same function.
 """
 
 from __future__ import annotations
@@ -16,8 +17,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _row_hash(prefix: str, cols: list[str]):
-    return F.xxhash64(*[F.col(f"{prefix}.{c}") for c in cols])
+def diff_rows(
+    old: DataFrame, new: DataFrame, keys: list[str], value_cols: list[str]
+) -> DataFrame:
+    """The keyed diff of two states: one full outer join on `keys`.
+
+    Output columns: keys, `_old` and `_new` (the side's `value_cols` as one
+    struct, NULL where the key is absent on that side) and `_flag`: new
+    (only in `new`), deleted (only in `old`), identical (both, the structs
+    equal null-safely) or changed. A row hash would not do: xxhash64 skips
+    NULL inputs, so (NULL, 'x') and ('x', NULL) would hash alike."""
+    o = old.select(*keys, F.struct(*value_cols).alias("_old"))
+    n = new.select(*keys, F.struct(*value_cols).alias("_new"))
+    flag = (
+        F.when(F.col("_old").isNull(), "new")
+        .when(F.col("_new").isNull(), "deleted")
+        .when(F.col("_old").eqNullSafe(F.col("_new")), "identical")
+        .otherwise("changed")
+    )
+    return o.join(n, on=list(keys), how="full").withColumn("_flag", flag)
 
 
 def merge_rows_diff(
@@ -34,22 +52,10 @@ def merge_rows_diff(
     Output columns: keys + value_cols + flag_field.
     """
     value_cols = value_cols or [c for c in compare.columns if c not in keys]
-    r = reference.alias("r")
-    c = compare.alias("c")
-    joined = r.join(c, on=[F.col(f"r.{k}") == F.col(f"c.{k}") for k in keys], how="full_outer")
-    in_r = F.col(f"r.{keys[0]}").isNotNull()
-    in_c = F.col(f"c.{keys[0]}").isNotNull()
-    flag = (
-        F.when(in_c & ~in_r, "new")
-        .when(in_r & ~in_c, "deleted")
-        .when(_row_hash("r", value_cols) == _row_hash("c", value_cols), "identical")
-        .otherwise("changed")
+    row = F.coalesce(F.col("_new"), F.col("_old"))
+    return diff_rows(reference, compare, keys, value_cols).select(
+        *keys, *[row[v].alias(v) for v in value_cols], F.col("_flag").alias(flag_field)
     )
-    out_keys = [F.coalesce(F.col(f"c.{k}"), F.col(f"r.{k}")).alias(k) for k in keys]
-    out_vals = [
-        F.when(in_c, F.col(f"c.{v}")).otherwise(F.col(f"r.{v}")).alias(v) for v in value_cols
-    ]
-    return joined.select(*out_keys, *out_vals, flag.alias(flag_field))
 
 
 def diff_to_changelog(

@@ -82,9 +82,9 @@ def null_if(df: DataFrame, field: str, value) -> DataFrame:
 def add_checksum(
     df: DataFrame, fields: list[str], out_field: str = "checksum", algo: str = "sha256"
 ) -> DataFrame:
-    """Checksum over selected fields — also the row-hash used by Merge Rows
-    diff change detection. NULLs are pinned to a sentinel so (NULL,'x') and
-    ('x',NULL) differ (CheckSum.java concatenates string representations)."""
+    """Checksum over selected fields (checksum/CheckSum.java, which
+    concatenates string representations). NULLs are pinned to a sentinel so
+    (NULL,'x') and ('x',NULL) differ."""
     joined = F.concat_ws(
         "\u0001", *[F.coalesce(F.col(f).cast("string"), F.lit("\u0000")) for f in fields]
     )

@@ -36,7 +36,10 @@ Supported grammar (C-style precedence):
   comments        // ... and /* ... */, anywhere between tokens
 
 Math.round rounds half toward +∞, as JS does: Math.round(-2.5) = -2,
-Math.round(2.5) = 3 (Spark's round goes half away from zero).
+Math.round(2.5) = 3 (Spark's round goes half away from zero). .substr's
+negative start counts from the end and .substring swaps reversed bounds, as
+in JS. parseInt/parseFloat read the leading number ('12px' → 12); text with
+no leading number gives NULL, the stand-in for JS's NaN.
 
 Known coercion caveat (documented, not hidden): JS stringifies an integral
 double as "2" while Spark's CAST(double AS STRING) gives "2.0". String-`+`
@@ -92,6 +95,28 @@ def _unescape(m: re.Match) -> str:
     return chr(int(c[1:], 16)) if len(c) > 1 else _ESCAPES.get(c, c)
 
 
+def _substr(a: list[Column]) -> Column:
+    # JS substr(start[, len]): a negative start counts from the end (clamped
+    # at 0); Spark's substring is 1-based
+    s, start = a[0], a[1]
+    start = F.when(start < 0, F.greatest(F.length(s) + start, F.lit(0))).otherwise(start)
+    return F.substring(s, start + 1, a[2] if len(a) > 2 else F.lit(2**31 - 1))
+
+
+def _substring(a: list[Column]) -> Column:
+    # JS substring(start, end): negative bounds clamp to 0 and the bounds
+    # swap when start > end
+    lo = F.greatest(F.least(a[1], a[2]), F.lit(0))
+    hi = F.greatest(a[1], a[2], F.lit(0))
+    return F.substring(a[0], lo + 1, hi - lo)
+
+
+def _parse(pattern: str, to: str):
+    # JS parseInt/parseFloat read the leading number; text with none is NaN,
+    # here NULL (try_cast, so nothing raises under ANSI)
+    return lambda a: F.regexp_extract(a[0].cast("string"), pattern, 1).try_cast(to)
+
+
 _FUNCTIONS = {
     # name -> ((min_arity, max_arity), builder over Column args, result type)
     "Math.abs": ((1, 1), lambda a: F.abs(a[0]), "num"),
@@ -102,8 +127,12 @@ _FUNCTIONS = {
     "Math.min": ((1, MANY), nary(F.least), "num"),
     "Math.max": ((1, MANY), nary(F.greatest), "num"),
     "Math.pow": ((2, 2), lambda a: F.pow(a[0], a[1]), "num"),
-    "parseInt": ((1, 1), lambda a: a[0].cast("double").cast("long"), "num"),
-    "parseFloat": ((1, 1), lambda a: a[0].cast("double"), "num"),
+    "parseInt": ((1, 1), _parse(r"^\s*([+-]?\d+)", "long"), "num"),
+    "parseFloat": (
+        (1, 1),
+        _parse(r"^\s*([+-]?(?:Infinity|(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?))", "double"),
+        "num",
+    ),
     "str2num": ((1, 1), lambda a: a[0].cast("double"), "num"),
     "num2str": ((1, 1), lambda a: a[0].cast("string"), "str"),
 }
@@ -116,14 +145,8 @@ _METHODS = {
     ".concat": ((1, 1), lambda a: F.concat(a[0], a[1]), "str"),
     ".indexOf": ((1, 1), lambda a: F.instr(a[0], a[1]) - 1, "num"),  # JS 0-based, -1 miss
     ".replace": ((2, 2), lambda a: F.replace(a[0], a[1], a[2]), "str"),
-    # JS substr(start[, len]) and substring(start, end) are 0-based; Spark's
-    # substring is 1-based
-    ".substr": (
-        (1, 2),
-        lambda a: F.substring(a[0], a[1] + 1, a[2] if len(a) > 2 else F.lit(2**31 - 1)),
-        "str",
-    ),
-    ".substring": ((2, 2), lambda a: F.substring(a[0], a[1] + 1, a[2] - a[1]), "str"),
+    ".substr": ((1, 2), _substr, "str"),
+    ".substring": ((2, 2), _substring, "str"),
 }
 
 

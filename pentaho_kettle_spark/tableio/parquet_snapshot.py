@@ -72,9 +72,14 @@ def _atomic_write(path: str, text: str) -> None:
     """Replace `path` with `text` through a temp file and an atomic rename
     (POSIX): readers see the old content or the new, never a torn file."""
     tmp = path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.rename(tmp, path)
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.rename(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def _del_rows(pf) -> int:
@@ -605,8 +610,10 @@ class ParquetSnapshotTableIO:
             manifest[f"{key}_segments"] = segs
             manifest[key] = full_list[n_full * SEGMENT_ROWS:]
         name = f"snap-{manifest['snapshot_id']:06d}.json"
-        with open(os.path.join(self.root, "snapshots", name), "w") as f:
-            json.dump(manifest, f, indent=1)
+        # a failed write leaves no torn snap-*.json for listings to trip on
+        _atomic_write(
+            os.path.join(self.root, "snapshots", name), json.dumps(manifest, indent=1)
+        )
         _atomic_write(self._current_path(), name)  # atomic pointer swap == commit
         # the write dirs THIS THREAD's operation staged are now referenced
         # by a committed snapshot (or superseded) — release their GC
@@ -1987,11 +1994,13 @@ class ParquetSnapshotTableIO:
 
         Scale path: the two manifests' file-set diff names the buckets the
         interval touched; only those buckets are read and LWW-collapsed at
-        both endpoints, then compared with ONE key-partitioned full-outer
+        both endpoints, tombstones dropped, then compared by
+        `operators.merge_rows.diff_rows` — ONE key-partitioned full-outer
         join (both sides arrive hash-partitioned on the key from their
-        collapse, so the join adds no exchange under AQE). An interval that
-        churned k of n buckets reads ~k/n of the table. Compaction-only
-        rewrites compare equal and emit nothing.
+        collapse, so the join adds no exchange under AQE) with null-safe
+        equality of the data columns. An interval that churned k of n
+        buckets reads ~k/n of the table. Compaction-only rewrites compare
+        equal and emit nothing.
 
         Cross-snapshot schema evolution is reconciled by field id: the
         from-state is read UNDER the to-snapshot's schema (rename/widen
@@ -1999,10 +2008,11 @@ class ParquetSnapshotTableIO:
         endpoints does not masquerade as a delete+insert.
 
         Reference parity: Kettle has no table history at all — its closest
-        analog is the MergeRows(diff) step over two full reads (SURVEY §2.3);
-        this is that diff computed from manifest metadata instead of a full
-        scan. Iceberg semantics: net changes, like a changelog scan with
-        net_changes=true."""
+        analog is the MergeRows(diff) step over two full reads (SURVEY §2.3).
+        This is the same `diff_rows` that step runs, over the two endpoint
+        states of the touched buckets: new → insert, deleted → delete,
+        changed → update, identical dropped. Iceberg semantics: net changes,
+        like a changelog scan with net_changes=true."""
         m_to = (
             self.current_manifest()
             if to_snapshot_id is None
@@ -2014,11 +2024,13 @@ class ParquetSnapshotTableIO:
                 f"to_snapshot {m_to['snapshot_id']} precedes from_snapshot "
                 f"{m_from['snapshot_id']}"
             )
+        if images not in ("net", "cdf"):
+            raise ValueError(f"images must be 'net' or 'cdf', got {images!r}")
         schema = TableSchema(**m_to["schema"])
         names = schema.names()
         buckets = self._changed_buckets(m_from, m_to)
 
-        def _state(m: dict) -> DataFrame | None:
+        def _state(m: dict) -> DataFrame:
             entries = [
                 e
                 for b, es in m["files"].items()
@@ -2029,78 +2041,42 @@ class ParquetSnapshotTableIO:
             # version, so files from either endpoint reconcile by field id
             df = self._read_files(entries, schema)
             if df is None:
-                return None
-            return self._collapse_rows(df)
+                return self.spark.createDataFrame([], schema.to_struct())
+            return self._collapse_rows(df).filter(~F.col(SYS_DELETED))
+
+        # lazy: the operators package is the Kettle step layer
+        from pentaho_kettle_spark.operators.merge_rows import diff_rows
 
         old, new = _state(m_from), _state(m_to)
-        empty = self.spark.createDataFrame(
-            [], schema.to_struct().add("_change_type", "string")
-        )
-        if new is None and old is None:
-            return empty
         data_cols = [c for c in names if c not in self.key_cols]
-
-        def _tag(df: DataFrame | None, side: str) -> DataFrame:
-            if df is None:
-                df = self.spark.createDataFrame(
-                    [],
-                    self.spark.createDataFrame([], schema.to_struct())
-                    .withColumn(SYS_SEQ, F.lit(None).cast("long"))
-                    .withColumn(SYS_DELETED, F.lit(False))
-                    .schema,
-                )
-            keep = [
-                *self.key_cols,
-                F.struct(
-                    *[F.col(c) for c in data_cols], F.col(SYS_DELETED)
-                ).alias(side),
-            ]
-            return df.select(*keep)
-
-        j = _tag(old, "o").join(_tag(new, "n"), on=list(self.key_cols), how="full")
-        o_live = F.col("o").isNotNull() & ~F.col(f"o.{SYS_DELETED}")
-        n_live = F.col("n").isNotNull() & ~F.col(f"n.{SYS_DELETED}")
-        same = F.struct(*[F.col(f"o.{c}") for c in data_cols]).eqNullSafe(
-            F.struct(*[F.col(f"n.{c}") for c in data_cols])
+        d = diff_rows(old, new, self.key_cols, data_cols).filter(
+            F.col("_flag") != "identical"
         )
-        change = (
-            F.when(~o_live & n_live, F.lit("insert"))
-            .when(o_live & ~n_live, F.lit("delete"))
-            .when(o_live & n_live & ~same, F.lit("update"))
-        )
-        if images not in ("net", "cdf"):
-            raise ValueError(f"images must be 'net' or 'cdf', got {images!r}")
-        classified = j.withColumn("_change_type", change).filter(
-            F.col("_change_type").isNotNull()
-        )
+        changed = F.col("_flag") == "changed"
         if images == "net":
-            img = F.when(F.col("_change_type") == "delete", F.col("o")).otherwise(
-                F.col("n")
+            kind = (
+                F.when(changed, "update")
+                .when(F.col("_new").isNull(), "delete")
+                .otherwise("insert")
             )
-            out = classified.withColumn("_img", img)
-            return out.select(
-                *self.key_cols,
-                *[F.col(f"_img.{c}").alias(c) for c in data_cols],
-                "_change_type",
+            img = F.struct(
+                F.coalesce(F.col("_new"), F.col("_old")).alias("v"), kind.alias("t")
             )
-        # cdf: explode updates into preimage+postimage; inserts/deletes are
-        # single rows. One generator, no second pass over either state.
-        sides = F.when(
-            F.col("_change_type") == "insert",
-            F.array(F.struct(F.lit("insert").alias("t"), F.col("n").alias("v"))),
-        ).when(
-            F.col("_change_type") == "delete",
-            F.array(F.struct(F.lit("delete").alias("t"), F.col("o").alias("v"))),
-        ).otherwise(
-            F.array(
-                F.struct(F.lit("update_preimage").alias("t"), F.col("o").alias("v")),
-                F.struct(F.lit("update_postimage").alias("t"), F.col("n").alias("v")),
+            rows = d.select(*self.key_cols, img.alias("_e"))
+        else:
+            # cdf: an update is its preimage row then its postimage row; an
+            # insert or delete keeps only the side that exists. One
+            # generator, no second pass over either state.
+            pre = F.when(changed, "update_preimage").otherwise("delete")
+            post = F.when(changed, "update_postimage").otherwise("insert")
+            sides = F.array(
+                F.struct(F.col("_old").alias("v"), pre.alias("t")),
+                F.struct(F.col("_new").alias("v"), post.alias("t")),
             )
-        )
-        ex = classified.select(
-            *self.key_cols, F.explode(sides).alias("_e")
-        )
-        return ex.select(
+            rows = d.select(*self.key_cols, F.explode(sides).alias("_e")).filter(
+                F.col("_e.v").isNotNull()
+            )
+        return rows.select(
             *self.key_cols,
             *[F.col(f"_e.v.{c}").alias(c) for c in data_cols],
             F.col("_e.t").alias("_change_type"),

@@ -112,6 +112,40 @@ def test_string_literal_escapes(spark):
     assert _eval(spark, r"'\q\%'", row) == "q%"  # any other escape: the char itself
 
 
+def test_substr_negative_start_and_substring_reversed_bounds(spark):
+    """JS .substr counts a negative start from the end (clamped at 0);
+    .substring clamps negative bounds to 0 and swaps reversed ones."""
+    row = {"s": "abcdef"}
+    assert _eval(spark, "s.substr(-3)", row) == "def"
+    assert _eval(spark, "s.substr(-3, 2)", row) == "de"
+    assert _eval(spark, "s.substr(-10, 2)", row) == "ab"
+    assert _eval(spark, "s.substr(2, 3)", row) == "cde"
+    assert _eval(spark, "s.substring(4, 1)", row) == "bcd"
+    assert _eval(spark, "s.substring(1, 4)", row) == "bcd"
+    assert _eval(spark, "s.substring(3, -2)", row) == "abc"
+    assert _eval(spark, "s.substring(2, 2)", row) == ""
+
+
+def test_parse_int_and_float_read_the_leading_number(spark):
+    """parseInt/parseFloat read the leading number, as JS does; text with
+    none gives NULL (the stand-in for NaN), and nothing raises under ANSI."""
+    cases = [
+        ("12px", 12, 12.0),
+        ("  -7.5e1 apples", -7, -75.0),
+        ("+3.9", 3, 3.9),
+        (".5", None, 0.5),
+        ("px12", None, None),
+        ("", None, None),
+        (None, None, None),
+    ]
+    df = spark.createDataFrame([(i, s) for i, (s, _, _) in enumerate(cases)], "i int, s string")
+    got = df.orderBy("i").select(
+        compile_expr("parseInt(s)").alias("n"), compile_expr("parseFloat(s)").alias("f")
+    ).collect()
+    assert [(r.n, r.f) for r in got] == [(n, f) for _, n, f in cases]
+    assert _eval(spark, "parseInt(x)", {"x": 3.7}) == 3
+
+
 def test_script_statements_share_the_expression_tokenizer(spark):
     df = spark.createDataFrame([{"price": 10.0}])
     env = compile_script("var u = 'http://x'; // a URL, then a comment")

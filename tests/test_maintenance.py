@@ -366,6 +366,54 @@ def test_meta_tables(spark, tmp_path):
     assert _json.loads(lin[0].detail)["batch_id"] == "b1"
 
 
+def test_failed_snapshot_write_leaves_no_torn_snapshot(spark, tmp_path, monkeypatch):
+    """A snapshot JSON whose write fails partway (a full disk) leaves no
+    snap-*.json for that id: the listings see only committed snapshots, and
+    the next commit takes the id."""
+    import builtins
+
+    import pytest
+
+    from pentaho_kettle_spark.tableio import parquet_snapshot as PS
+
+    root = str(tmp_path / "torn")
+    t = _mk(spark, root, write_mode="mor")
+    t.merge_apply(_changes(spark, [("a", 1.0, 100, 1, "U")]), batch_id="b1")
+    committed = t.snapshot_ids()
+
+    class _HalfWrite:
+        def __init__(self, f):
+            self.f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, text):
+            self.f.write(text[: len(text) // 2])
+            raise OSError(28, "No space left on device")
+
+    def _open(path, mode="r", *a, **kw):
+        f = builtins.open(path, mode, *a, **kw)
+        is_snap = os.path.basename(str(path)).startswith("snap-")
+        return _HalfWrite(f) if is_snap and "w" in mode else f
+
+    monkeypatch.setattr(PS, "open", _open, raising=False)
+    with pytest.raises(OSError, match="No space left"):
+        t.merge_apply(_changes(spark, [("b", 2.0, 200, 2, "U")]), batch_id="b2")
+    monkeypatch.undo()
+
+    nxt = f"snap-{committed[-1] + 1:06d}.json"
+    assert not [fn for fn in os.listdir(os.path.join(root, "snapshots")) if fn.startswith(nxt)]
+    assert t.snapshot_ids() == committed
+    assert [r.snapshot_id for r in t.meta_snapshots().collect()] == committed
+    t.merge_apply(_changes(spark, [("b", 2.0, 200, 2, "U")]), batch_id="b2")
+    assert t.snapshot_ids() == [*committed, committed[-1] + 1]
+    assert sorted(r.k for r in t.read().collect()) == ["a", "b"]
+
+
 # --- bucket-layout evolution ----------------------------------------------
 
 

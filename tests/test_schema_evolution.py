@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+import pytest
 
 from pentaho_kettle_spark.cdc.changelog import CHANGELOG_SCHEMA
 from pentaho_kettle_spark.cdc.replay import apply_batch
@@ -108,3 +109,25 @@ def test_illegal_narrow_rejected(spark, tmp_path):
 
     with pytest.raises(ValueError):
         table.evolve_schema([{"action": "widen", "name": "text", "type": "int"}])
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_apply_batch_rejects_a_batch_without_its_key_or_lww_column(spark, tmp_path, mode):
+    """apply_batch conforms a batch the way merge_apply does: a missing key
+    or LWW column raises by name and commits nothing, while a missing
+    non-key column is null-filled (an older producer after an `add`)."""
+    table = ParquetSnapshotTableIO(
+        spark, str(tmp_path / "t"), key_cols=("k",), lww_col="ts", n_buckets=4,
+        write_mode=mode,
+    )
+    table.init_empty(spark.createDataFrame([], "k int, v string, ts long").schema)
+    sch = "k int, v string, ts long, seq long, op string"
+    apply_batch(table, spark.createDataFrame([(1, "a", 1, 1, "U")], sch), batch_id="b0")
+    snap = table.snapshot_id()
+    full = spark.createDataFrame([(2, "b", 2, 2, "U")], sch)
+    for missing in ("ts", "k"):
+        with pytest.raises(ValueError, match=f"missing required column '{missing}'"):
+            apply_batch(table, full.drop(missing), batch_id=f"no-{missing}")
+    assert table.snapshot_id() == snap
+    apply_batch(table, full.drop("v"), batch_id="no-v")
+    assert sorted(table.read().collect()) == [(1, "a", 1), (2, None, 2)]

@@ -14,7 +14,7 @@ from pathlib import Path
 
 import pytest
 
-from pentaho_kettle_spark.cdc import skew
+from pentaho_kettle_spark.cdc import lww, skew
 from pentaho_kettle_spark.tableio.compaction import CompactionPolicy
 from pentaho_kettle_spark.tableio.parquet_snapshot import ParquetSnapshotTableIO as P
 
@@ -43,6 +43,9 @@ def test_table_and_policy_settings():
     ]
     assert _params(skew.should_salt) == [
         "rows", "sampled_total", "sample_fraction", "n_batches", "n_partitions",
+    ]
+    assert _params(lww.lww_collapse) == [
+        "events", "key_cols", "lww_col", "seq_col", "n_buckets", "n_salts", "hot_keys",
     ]
 
 
